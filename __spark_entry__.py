@@ -128,7 +128,7 @@ def q_pip_convex(spark, sf_dir):
     out = SJ.pip_join(
         spark, p, region, keep_cols=["id"], coarse_prefilter=True,
         # 6-edge convex hexagon: refine='auto' picks the pure-Column
-        # even-odd test (<= max_column_edges), dropping the ArrowEvalPython
+        # even-odd test (<= SJ.MAX_COLUMN_EDGES), dropping the ArrowEvalPython
         # stage entirely — measured 3.6s -> 1.0s cold, identical rows (r6;
         # 'udf' stays the default for real multi-region covers where the
         # unrolled expression leaves codegen)
@@ -677,7 +677,7 @@ def q_streaming_tiles(spark, sf_dir):
     lon, lat = FX.gen_points_slice(0, n)
     ts = pd.to_datetime("2026-01-01") + pd.to_timedelta(np.arange(n) % 900, unit="s")
     # tmpfs scratch when available: the replay's cost is checkpoint/state
-    # file I/O, not compute — same discipline as bench.py's shuffle dir
+    # file I/O, not compute
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     work = tempfile.mkdtemp(prefix="stream_q_", dir=shm)
     spark.createDataFrame(
@@ -1001,7 +1001,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full headline dataflow at smoke scale — H3-encode
     (res 7-11, one shared Morton spread) + two-stage PIP join against 12
     nested admin polygons + z12 tile-assign + per-(region, tile) counts,
-    i.e. bench.py's headline_pipeline on 50k fixture points plus the
+    i.e. perfbench's headline composition on 50k fixture points plus the
     sf0.001-derived customer points through the hexagon PIP (union keeps the
     sf-table path exercised). Stable schema (region_id, tx, ty, n)."""
     import numpy as np

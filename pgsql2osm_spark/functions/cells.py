@@ -150,11 +150,6 @@ def cell_bounds(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, n
     return lon0, lat0, lon0 + 360.0 / n, lat0 + 180.0 / n
 
 
-def cell_center(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    lon0, lat0, lon1, lat1 = cell_bounds(cell)
-    return (lon0 + lon1) / 2.0, (lat0 + lat1) / 2.0
-
-
 def grid_disk(cell: int, k: int) -> np.ndarray:
     """All cells within Chebyshev distance k of ``cell`` (the H3 grid_disk
     analogue used for kNN ring expansion, SURVEY.md J11). Longitude wraps,
@@ -177,11 +172,6 @@ def grid_ring(cell: int, k: int) -> np.ndarray:
     disk = set(grid_disk(cell, k).tolist())
     inner = set(grid_disk(cell, k - 1).tolist())
     return np.asarray(sorted(disk - inner), dtype=np.int64)
-
-
-def cell_size_deg(res: int) -> float:
-    """Cell edge length in degrees (lat direction) at ``res``."""
-    return 180.0 / (1 << res)
 
 
 # ---------------------------------------------------------------------------

@@ -81,7 +81,7 @@ def pip_column(
     whole-stage codegen and ran ~9x slower than the Arrow UDF on the
     500M-row headline — use only for tiny covers (a bbox rectangle, a
     small convex fence); pip_join gates it behind refine='column' /
-    max_column_edges.
+    refine='auto' up to spatial_join.MAX_COLUMN_EDGES.
     """
     from pyspark.sql import functions as F
 

@@ -461,13 +461,19 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         # and desynchronizes on the bogus length field (ADVICE r5)
         while pos + 1 < len(data) and data[pos + 1] == 0xFF:
             pos += 1
+        if pos + 2 > len(data):
+            raise ValueError(f"truncated stream at {pos}")
         marker = data[pos + 1]
         if marker == 0xD9:               # EOI
             break
         if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
+        if pos + 4 > len(data):
+            raise ValueError(f"truncated stream at {pos}")
         (ln,) = struct.unpack(">H", data[pos + 2 : pos + 4])
+        if pos + 2 + ln > len(data):
+            raise ValueError(f"truncated stream at {pos}")
         payload = data[pos + 4 : pos + 2 + ln]
         pos += 2 + ln
         if marker == 0xDB:               # DQT (possibly several tables)

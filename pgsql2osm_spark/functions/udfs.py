@@ -2,11 +2,11 @@
 
 Per BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row
 Python) throughout". Each UDF here receives whole Arrow batches as pandas
-Series and dispatches into the numpy kernels in cells.py / geometry.py /
-imaging.py. Where possible the engine prefers the pure-JVM Column emitters
+Series and dispatches into the numpy kernels in cells.py / geometry.py.
+Where possible the engine prefers the pure-JVM Column emitters
 (cells.cell_expr, geometry.tile_expr) — whole-stage codegen beats Arrow
-round-trips — and these UDFs cover what built-ins cannot express (exact PIP
-against broadcast rings, image decode).
+round-trips — and these UDFs cover what built-ins cannot express: the S2
+face-projected encode and the exact PIP against broadcast rings.
 """
 
 from __future__ import annotations
@@ -18,16 +18,6 @@ from pyspark.sql import types as T
 
 from . import cells as C
 from . import geometry as G
-
-
-def make_cell_udf(res: int):
-    """h3-style encode as a scalar pandas UDF (Arrow-vectorized)."""
-
-    @F.pandas_udf(T.LongType())
-    def cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(C.cell_encode(lon.to_numpy(), lat.to_numpy(), res))
-
-    return cell_udf
 
 
 def make_s2_udf(res: int = 16):
@@ -62,25 +52,3 @@ def make_pip_udf(rings_bc):
         return pd.Series(out)
 
     return pip_udf
-
-
-def make_haversine_udf():
-    @F.pandas_udf(T.DoubleType())
-    def hav_udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-        return pd.Series(
-            G.haversine_m(lon1.to_numpy(), lat1.to_numpy(), lon2.to_numpy(), lat2.to_numpy())
-        )
-
-    return hav_udf
-
-
-def make_tile_udf(z: int):
-    """(x, y) slippy tile as a struct — prefer geometry.tile_expr (JVM) in
-    plans; this UDF exists for API parity and decode-stage fusion."""
-
-    @F.pandas_udf("x long, y long")
-    def tile_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = G.lonlat_to_tile(lon.to_numpy(), lat.to_numpy(), z)
-        return pd.DataFrame({"x": x, "y": y})
-
-    return tile_udf

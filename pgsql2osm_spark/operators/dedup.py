@@ -24,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from .text import fingerprint_col
 
@@ -42,15 +41,6 @@ def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
     return fp.groupBy("fingerprint").agg(
         F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count")
     )
-
-
-EXACT_DEDUP_SQL = """
-SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
-       min(doc_id) AS doc_id,
-       count(*) AS dup_count
-FROM documents
-GROUP BY 1
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -462,12 +452,3 @@ def phash_near_dups(
     return _banded_hamming_pairs(
         ph, "phash", "image_id", max_hamming, max_bucket=max_bucket, log_shed=log_shed
     )
-
-
-def rank_dedup_representatives(
-    df: DataFrame, group_col: str, id_col: str = "doc_id"
-) -> DataFrame:
-    """Pick one representative per duplicate group (min id via window) —
-    mirrors the reference's first-wins done_ids semantics (SURVEY.md J9)."""
-    w = Window.partitionBy(group_col).orderBy(F.col(id_col).asc())
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")

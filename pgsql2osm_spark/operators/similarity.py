@@ -3,10 +3,10 @@
 * ``cosine_topk_bruteforce`` — exact top-k cosine via broadcast query set +
   JVM zip_with/aggregate dot products (no Python, no shuffle of the corpus).
   The correctness baseline and the small-query-set production path.
-* ``lsh_topk`` — scale path: random-hyperplane LSH signatures bucket the
-  corpus; queries probe only their bucket (plus multiprobe neighbors),
-  then exact re-rank inside the candidate set. Recall<1 by construction;
-  tested against brute force with a recall floor.
+* ``ivf_topk`` — scale path: centroids partition the corpus into inverted
+  lists; queries probe their nearest lists, then re-rank exactly.
+* ``embedding_near_dups`` — random-hyperplane LSH signatures, banded
+  self-join, exact cosine filter.
 
 At 100 TB the corpus side stays partitioned; only signatures + bucket keys
 shuffle. The hyperplanes are seeded-deterministic so signatures are
@@ -81,54 +81,6 @@ def lsh_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
         return pd.Series(out)
 
     return sig
-
-
-def lsh_topk(
-    spark: SparkSession,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    n_planes: int = 12,
-    multiprobe_bits: int = 1,
-    vec_col: str = "embedding",
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Approximate cosine top-k: hyperplane-LSH bucket join + exact re-rank.
-
-    multiprobe_bits=b probes all buckets within hamming distance b of the
-    query signature (recall knob; candidates grow ~ C(n_planes, b))."""
-    sig = lsh_signature_udf(dim, n_planes)
-    c = corpus.withColumn("_bucket", sig(F.col(vec_col)))
-    q = queries.withColumn("_sig", sig(F.col(vec_col)))
-    # multiprobe: expand each query to its probe buckets (flip <= b bits)
-    flips = [0]
-    if multiprobe_bits >= 1:
-        flips += [1 << i for i in range(n_planes)]
-    if multiprobe_bits >= 2:
-        flips += [
-            (1 << i) | (1 << j) for i in range(n_planes) for j in range(i + 1, n_planes)
-        ]
-    probe = q.select(
-        F.col(query_id),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(F.array(*[F.col("_sig").bitwiseXOR(F.lit(f)) for f in flips])).alias("_bucket"),
-    )
-    cand = c.join(F.broadcast(probe), "_bucket", "inner").select(
-        F.col(query_id),
-        F.col(corpus_id).alias("neighbor_id"),
-        (
-            _dot(F.col(vec_col), F.col("_qvec"))
-            / (_norm(F.col(vec_col)) * _norm(F.col("_qvec")))
-        ).alias("cosine"),
-    ).dropDuplicates([query_id, "neighbor_id"])
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "rank", "cosine")
-    )
 
 
 def train_codebook(

@@ -1,8 +1,9 @@
-"""Skew handling: salted repartition + adaptive cell splitting (SURVEY.md X1).
+"""Skew handling: adaptive cell splitting (SURVEY.md X1).
 
-Dense metro cells concentrate a huge share of rows on a few cell keys. Two
-explicit mitigations, both plain DataFrame rewrites (no Catalyst rules),
-layered on top of AQE's runtime skew-join splitting:
+Dense metro cells concentrate a huge share of rows on a few cell keys. The
+mitigation here is a plain DataFrame rewrite (no Catalyst rule), layered on
+top of AQE's runtime skew-join splitting. Salting lives in one place: the
+salted exact refine of spatial_join.pip_join_partitioned.
 
 WHEN TO USE (measured, BENCH/PLANS.md): only for holistic aggregations
 (exact median/percentile, collect_list) and skewed shuffle joins — measured
@@ -10,9 +11,6 @@ WHEN TO USE (measured, BENCH/PLANS.md): only for holistic aggregations
 already neutralized by map-side partial aggregation; splitting them is pure
 overhead (measured 2x SLOWER). Let AQE handle join skew first.
 
-* ``salted_repartition`` — repartition on (cell, salt) so one hot cell
-  spreads across ``n_salts`` partitions. Joins against per-cell dimensions
-  replicate the dimension across salts (classic salt-and-replicate).
 * ``split_hot_cells`` — re-encode rows in cells whose measured count exceeds
   a threshold at res+1 (finer cells), the data-dependent analogue of the
   reference's adaptive chunk shrink on timeout
@@ -25,24 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
-
-
-def salted_repartition(df: DataFrame, cell_col: str, n_salts: int = 8, n_parts: int | None = None) -> DataFrame:
-    """Spread hot cell keys over n_salts synthetic subkeys before a shuffle.
-
-    The salt is derived from a stable hash of the row (not rand()) so the
-    plan stays deterministic and re-runnable for checkpoint resume."""
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)))
-    if n_parts:
-        return salted.repartition(n_parts, F.col(cell_col), F.col("_salt"))
-    return salted.repartition(F.col(cell_col), F.col("_salt"))
-
-
-def replicate_dim_for_salt(dim: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Replicate the dimension side across all salt values so a salted
-    equi-join on (key, _salt) stays correct."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
-    return dim.select("*", salts)
 
 
 def measure_cell_counts(df: DataFrame, cell_col: str) -> DataFrame:

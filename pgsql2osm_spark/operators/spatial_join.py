@@ -28,14 +28,14 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
 
 Scale notes (100 TB): the fact side is never shuffled or collected; cover +
 rings are O(regions * cells_per_region) driver/broadcast data (bounded by
-target_cells per region). For region sets too large to broadcast, split the
+TARGET_CELLS per region). For region sets too large to broadcast, split the
 region list and union — each pass stays broadcast; a shuffle-based cell-cell
 join fallback is deliberately NOT the default (it would shuffle the planet).
 """
 
 from __future__ import annotations
 
-import sys
+import logging
 
 import numpy as np
 import pandas as pd
@@ -47,8 +47,27 @@ from ..functions import geometry as G
 from ..functions import udfs
 from ..sources import fixtures as FX
 
+_LOG = logging.getLogger(__name__)
 
-def build_cover(regions: list[dict], res_lo: int = 7, res_hi: int = 11, target_cells: int = 4096):
+# Cover granularity: each region's cover resolution is picked in
+# [RES_LO, RES_HI] so that its bbox cover stays under TARGET_CELLS.
+RES_LO = 7
+RES_HI = 11
+TARGET_CELLS = 4096
+# pip_join takes the partitioned path above this many cover cells.
+MAX_BROADCAST_CELLS = 2_000_000
+# refine='auto' unrolls the even-odd test as a Column up to this many edges.
+MAX_COLUMN_EDGES = 64
+# coarse_prefilter coarsens its ancestor InSet until it fits this size.
+MAX_PREFILTER_CELLS = 512
+# pip_join_partitioned broadcasts its cover up to this many cells.
+BROADCAST_COVER_MAX_CELLS = 4_000_000
+# pip_join_partitioned fans each region's boundary refine into this many
+# salted groups.
+REFINE_SALT = 16
+
+
+def build_cover(regions: list[dict]):
     """Driver-side cover build: returns (cover_pdf, rings_by_region).
 
     cover_pdf columns: region_id:int64, res:int32, cell:int64, is_boundary:bool.
@@ -60,8 +79,8 @@ def build_cover(regions: list[dict], res_lo: int = 7, res_hi: int = 11, target_c
         rings = G.normalize_rings([np.asarray(r, dtype=np.float64) for r in rings])
         rid = int(reg["region_id"])
         rings_by_region[rid] = rings
-        res = G.adaptive_cover_res(rings, res_lo, res_hi, target_cells)
-        cells_arr, is_bnd = G.polygon_cover(rings, res, max_cells=target_cells * 16)
+        res = G.adaptive_cover_res(rings, RES_LO, RES_HI, TARGET_CELLS)
+        cells_arr, is_bnd = G.polygon_cover(rings, res, max_cells=TARGET_CELLS * 16)
         recs.append(
             pd.DataFrame(
                 {
@@ -92,22 +111,16 @@ def pip_join(
     regions: list[dict],
     lon: str = "lon",
     lat: str = "lat",
-    res_lo: int = 7,
-    res_hi: int = 11,
-    target_cells: int = 4096,
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
-    max_broadcast_cells: int = 2_000_000,
     refine: str = "udf",
-    max_column_edges: int = 64,
     coarse_prefilter: bool = False,
-    max_prefilter_cells: int = 512,
 ) -> DataFrame:
     """points x regions -> rows of points inside each region.
 
     ``refine``: 'udf' (default) refines boundary rows with the Arrow
     pandas-UDF exact test; 'column' unrolls the even-odd test as a pure
-    Column expression, 'auto' picks 'column' only up to ``max_column_edges``
+    Column expression, 'auto' picks 'column' only up to ``MAX_COLUMN_EDGES``
     TOTAL edges. MEASURED: at ~130 edges x 12 regions the unrolled
     expression ran ~9x slower than the Arrow UDF on the 500M-row headline
     (the giant when-chain leaves whole-stage codegen), so 'udf' stays the
@@ -118,7 +131,7 @@ def pip_join(
     k overlapping regions yields k rows (nested admin levels do overlap, as
     in the reference's relation hierarchy).
 
-    Dispatch: region sets whose cover exceeds ``max_broadcast_cells`` (or
+    Dispatch: region sets whose cover exceeds ``MAX_BROADCAST_CELLS`` (or
     whose size makes even building the cover on the driver unreasonable)
     automatically take the shuffle-partitioned path (pip_join_partitioned) —
     one entry point, physical strategy chosen from measured cover size.
@@ -127,7 +140,7 @@ def pip_join(
     multi-res explode — points whose coarse cell is not an ancestor of ANY
     cover cell (an exact superset of matches) emit a single null row that
     dies at the join instead of 5 exploded probes. The ancestor set is
-    capped at ``max_prefilter_cells`` by coarsening (a multi-thousand-
+    capped at ``MAX_PREFILTER_CELLS`` by coarsening (a multi-thousand-
     literal InSet costs minutes of py4j marshalling and bloats codegen).
     OPT-IN, workload-dependent (r5 measurements, BENCH/PLANS.md): it wins
     when the per-candidate work downstream dominates (probe/refine-heavy
@@ -138,31 +151,26 @@ def pip_join(
     explode_outer rather than a .where() (predicate/infer pushdown would
     re-evaluate the whole cell expression inside the scan, measured 17x).
     """
-    # cheap pre-estimate: covers average ~target_cells per region by
-    # construction (adaptive_cover_res aims at target_cells), so a huge
+    # cheap pre-estimate: covers average ~TARGET_CELLS per region by
+    # construction (adaptive_cover_res aims at TARGET_CELLS), so a huge
     # region list skips the driver-side cover build entirely. The estimate
     # is an upper bound (tiny polygons cover fewer cells), so it can route a
     # small-cover region list to the shuffle path unmeasured — log it, and
-    # forward the caller's target_cells/cell_cols so the fallback keeps the
-    # same cover granularity and precomputed probe columns.
-    if len(regions) * target_cells > 2 * max_broadcast_cells:
-        print(
-            f"pip_join: pre-estimate {len(regions)} regions x {target_cells} "
-            f"cells > {2 * max_broadcast_cells} — taking the partitioned path "
-            "without building the cover (pass a pre-built cover_df to "
-            "pip_join_partitioned to override)",
-            file=sys.stderr,
+    # forward cell_cols so the fallback keeps the precomputed probe columns.
+    if len(regions) * TARGET_CELLS > 2 * MAX_BROADCAST_CELLS:
+        _LOG.warning(
+            "pip_join: pre-estimate %d regions x %d cells > %d — taking the "
+            "partitioned path without building the cover",
+            len(regions), TARGET_CELLS, 2 * MAX_BROADCAST_CELLS,
         )
         return pip_join_partitioned(
             spark, points, regions_to_df(spark, regions), lon=lon, lat=lat,
-            res_lo=res_lo, res_hi=res_hi, target_cells=target_cells,
             keep_cols=keep_cols, cell_cols=cell_cols,
         )
-    cover_pdf, rings_by_region = build_cover(regions, res_lo, res_hi, target_cells)
-    if len(cover_pdf) > max_broadcast_cells:
+    cover_pdf, rings_by_region = build_cover(regions)
+    if len(cover_pdf) > MAX_BROADCAST_CELLS:
         return pip_join_partitioned(
             spark, points, regions_to_df(spark, regions), lon=lon, lat=lat,
-            res_lo=res_lo, res_hi=res_hi, target_cells=target_cells,
             keep_cols=keep_cols, cell_cols=cell_cols,
         )
     if cover_pdf.empty:
@@ -201,7 +209,7 @@ def pip_join(
         # generated code (the v_inset probe OOMed codegen near 4096
         # entries). Each level up shrinks the set ~4x and keeps the filter
         # an exact superset of matches.
-        while len(anc) > max_prefilter_cells and pre_res > 1:
+        while len(anc) > MAX_PREFILTER_CELLS and pre_res > 1:
             pre_res -= 1
             anc = {
                 int(c)
@@ -250,12 +258,12 @@ def pip_join(
     # (geometry.pip_column, bit-exact) leaves whole-stage codegen and ran
     # ~9x worse at 134 edges (BENCH/PLANS.md r3). The Column path is OPT-IN:
     # refine='column', or 'auto' which picks it only when the cover is tiny
-    # (n_edges <= max_column_edges).
+    # (n_edges <= MAX_COLUMN_EDGES).
     n_edges = sum(
         r.shape[0] for rings in rings_by_region.values()
         for r in rings if r.shape[0] >= 3
     )
-    if refine == "column" or (refine == "auto" and n_edges <= max_column_edges):
+    if refine == "column" or (refine == "auto" and n_edges <= MAX_COLUMN_EDGES):
         exact = G.pip_column(
             rings_by_region, F.col("region_id"), F.col(lon), F.col(lat)
         )
@@ -293,8 +301,7 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
     return spark.createDataFrame(rows, REGIONS_DF_SCHEMA)
 
 
-def build_cover_df(regions_df: DataFrame, res_lo: int = 7, res_hi: int = 11,
-                   target_cells: int = 4096) -> DataFrame:
+def build_cover_df(regions_df: DataFrame) -> DataFrame:
     """Distributed cover build: one mapInPandas pass over the region table —
     each region's cover is independent, so this scales with #regions instead
     of living on the driver (the large-boundary-set path)."""
@@ -303,8 +310,8 @@ def build_cover_df(regions_df: DataFrame, res_lo: int = 7, res_hi: int = 11,
         for pdf in pdf_iter:
             for rid, blob in zip(pdf["region_id"], pdf["wkb"]):
                 rings_np = G.unpack_rings(bytes(blob))
-                res = G.adaptive_cover_res(rings_np, res_lo, res_hi, target_cells)
-                cells_arr, is_bnd = G.polygon_cover(rings_np, res, max_cells=target_cells * 16)
+                res = G.adaptive_cover_res(rings_np, RES_LO, RES_HI, TARGET_CELLS)
+                cells_arr, is_bnd = G.polygon_cover(rings_np, res, max_cells=TARGET_CELLS * 16)
                 yield pd.DataFrame(
                     {
                         "region_id": np.int64(rid),
@@ -323,14 +330,8 @@ def pip_join_partitioned(
     regions_df: DataFrame,
     lon: str = "lon",
     lat: str = "lat",
-    res_lo: int = 7,
-    res_hi: int = 11,
-    target_cells: int = 4096,
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
-    cover_df: DataFrame | None = None,
-    broadcast_cover_max_cells: int = 4_000_000,
-    refine_salt: int = 16,
 ) -> DataFrame:
     """Shuffle-partitioned PIP join — the fallback when the region set is too
     large to broadcast (SURVEY.md J1 'range-partitioned fallback').
@@ -348,20 +349,12 @@ def pip_join_partitioned(
     rasterizes twice), and unlike persist() the checkpoint blocks are freed
     by ContextCleaner when the DataFrame is garbage-collected, so repeated
     calls in a long-lived session don't leak cache (the r1 persist did).
-    Long-lived sessions that re-join against the same region set should
-    still pre-materialize ``cover_df = build_cover_df(...)`` to parquet and
-    pass it in (also the resilient choice: localCheckpoint blocks die with
-    an executor).
     """
     out_cols = keep_cols or list(points.columns)
-    cover = cover_df if cover_df is not None else (
-        # lazy: the probe aggregate below is the first action and
-        # materializes the checkpoint — an eager one would pay a separate
-        # rasterization job before it
-        build_cover_df(regions_df, res_lo, res_hi, target_cells).localCheckpoint(
-            eager=False
-        )
-    )
+    # lazy: the probe aggregate below is the first action and materializes
+    # the checkpoint — an eager one would pay a separate rasterization job
+    # before it
+    cover = build_cover_df(regions_df).localCheckpoint(eager=False)
     # ONE probe job yields both the distinct resolutions and the total cell
     # count. The count matters because a checkpointed cover has no Catalyst
     # stats (LogicalRDD -> default huge size): without a hint the candidate
@@ -371,7 +364,7 @@ def pip_join_partitioned(
     # giant covers pay the shuffle join.
     probe_rows = cover.groupBy("res").agg(F.count(F.lit(1)).alias("_n")).collect()
     res_rows = [r["res"] for r in probe_rows]
-    cover_small = sum(r["_n"] for r in probe_rows) <= broadcast_cover_max_cells
+    cover_small = sum(r["_n"] for r in probe_rows) <= BROADCAST_COVER_MAX_CELLS
 
     cell_cols = dict(cell_cols or {})
     missing = sorted(r for r in res_rows if r not in cell_cols)
@@ -406,11 +399,11 @@ def pip_join_partitioned(
     # candidate of a region through ONE task — a country-sized boundary
     # crossing a metro cluster (10^8+ candidates at 10^12 points) serializes
     # the refine stage (VERDICT r2 weak #2). Salting on a hash of the cell id
-    # fans each region into up to refine_salt tasks; the rings are a
+    # fans each region into up to REFINE_SALT tasks; the rings are a
     # per-region CONSTANT carried on every row by the regions_df join, so
     # every salted group still unpacks them independently. Candidates of one
     # cell stay together (pmod of the same hash), keeping groups coherent.
-    salt = F.pmod(F.xxhash64(F.col("_cell")), F.lit(refine_salt))
+    salt = F.pmod(F.xxhash64(F.col("_cell")), F.lit(REFINE_SALT))
     refined = (
         boundary.withColumn("_salt", salt)
         .groupBy("region_id", "_salt")

@@ -109,38 +109,6 @@ def region_tiles(regions: list[dict], z: int) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["region_id", "z", "x", "y"]).drop_duplicates()
 
 
-THUMB_SCHEMA = "image_id string, w int, h int, fmt string, thumb binary"
-
-
-def thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
-    """Multimodal resize op: decode -> deterministic area-mean resize ->
-    re-encode PNG, Arrow batch at a time. Real end to end (both the PNG
-    and the baseline-JPEG codecs are real, from scratch)."""
-    import pandas as pd
-
-    def run(pdf_iter):
-        for pdf in pdf_iter:
-            thumbs = []
-            for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = I.decode_image(bytes(data), fmt)
-                small = np.stack(
-                    [I._mean_pool_to(px[..., c].astype(np.float64), size) for c in range(3)],
-                    axis=-1,
-                )
-                thumbs.append(I.png_encode(np.clip(small, 0, 255).astype(np.uint8)))
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "w": np.int32(size),
-                    "h": np.int32(size),
-                    "fmt": "png",
-                    "thumb": thumbs,
-                }
-            )
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, THUMB_SCHEMA)
-
-
 FRAME_SCHEMA = "media_id string, frame_idx int, frame binary"
 
 

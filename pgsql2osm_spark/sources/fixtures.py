@@ -118,44 +118,6 @@ def images_df(spark, n: int = 1000, seed: int = SEED):
     return spark.createDataFrame(pdf, schema=schema)
 
 
-def points_only_df(spark, n: int, seed: int = SEED, parts: int | None = None):
-    """Lightweight (image_id, lon, lat) frame for join/bench paths that don't
-    need pixel payloads — generated distributed via mapInPandas so the bench
-    can scale to millions of rows without driver materialization."""
-    from pyspark.sql import functions as F, types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
-    )
-    parts = parts or max(32, n // 250_000)
-    bounds = np.linspace(0, n, parts + 1).astype(np.int64)
-    idx = spark.createDataFrame(
-        [(int(bounds[i]), int(bounds[i + 1])) for i in range(parts)], "lo long, hi long"
-    ).repartition(parts, "lo")
-
-    def gen(pdf_iter):
-        import pandas as pd
-
-        for pdf in pdf_iter:
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                lo, hi = int(lo), int(hi)
-                # slice of the same global deterministic sequence
-                lon, lat = gen_points_slice(lo, hi, seed)
-                yield pd.DataFrame(
-                    {
-                        "image_id": [f"img{i:012d}" for i in range(lo, hi)],
-                        "lon": lon,
-                        "lat": lat,
-                    }
-                )
-
-    return idx.mapInPandas(gen, schema)
-
-
 def points_jvm_df(spark, n: int, parts: int | None = None):
     """Skewed synthetic points generated entirely JVM-side (spark.range +
     xxhash64 + codegen math) — zero Python in the hot path, scales linearly

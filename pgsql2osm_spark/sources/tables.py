@@ -1,10 +1,9 @@
-"""Table source resolution — the reference's catalog autodetection, Spark-side.
+"""Table layout for the engine's outputs — partitioned and bucketed writes.
 
 The reference discovers its five tables at runtime by suffix match + arg-max
 table size over the Postgres catalog (/root/reference/pgsql2osm/
-settings.py:42-74, SURVEY.md S6) and detects the middle-table dialect by
-column type counts (settings.py:76-86). In the new engine the catalog IS the
-schema authority:
+settings.py:42-74, SURVEY.md S6). In the new engine table names are
+canonical and the layout carries the performance contract:
 
 * Iceberg when a catalog is configured (the north rule's target substrate —
   hidden partitioning on the cell column gives partition pruning for free);
@@ -18,21 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def load_table(spark: SparkSession, name: str, base: str | None = None) -> DataFrame:
-    """Resolve `name` to a DataFrame: catalog table if it exists, else
-    `{base}/{name}.parquet`. The arg-max-by-size disambiguation of the
-    reference is unnecessary — names are canonical here."""
-    try:
-        if spark.catalog.tableExists(name):
-            return spark.read.table(name)
-    except Exception:
-        pass
-    if base is None:
-        raise ValueError(f"table {name!r} not in catalog and no base dir given")
-    return spark.read.parquet(f"{base}/{name}.parquet")
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(

@@ -116,11 +116,9 @@ def test_with_cell_columns_matches_numpy(spark):
 
 
 def test_pandas_udf_wrappers_match_kernels(spark):
-    """The Arrow-UDF API surface (cell/s2/haversine/tile) returns the same
-    values as the numpy kernels and the JVM expressions."""
+    """The S2 Arrow UDF returns the same values as the numpy kernel."""
     import pandas as pd
 
-    from pgsql2osm_spark.functions import geometry as G
     from pgsql2osm_spark.functions import udfs
 
     n = 1500
@@ -129,14 +127,5 @@ def test_pandas_udf_wrappers_match_kernels(spark):
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
     from pyspark.sql import functions as F
 
-    out = df.select(
-        udfs.make_cell_udf(9)(F.col("lon"), F.col("lat")).alias("c"),
-        udfs.make_s2_udf(16)(F.col("lon"), F.col("lat")).alias("s"),
-        udfs.make_haversine_udf()(F.col("lon"), F.col("lat"), F.lit(0.0), F.lit(0.0)).alias("d"),
-        udfs.make_tile_udf(9)(F.col("lon"), F.col("lat")).alias("t"),
-    ).toPandas()
-    assert (out["c"].to_numpy() == C.cell_encode(lon, lat, 9)).all()
+    out = df.select(udfs.make_s2_udf(16)(F.col("lon"), F.col("lat")).alias("s")).toPandas()
     assert (out["s"].to_numpy() == C.s2_encode(lon, lat, 16)).all()
-    assert np.allclose(out["d"].to_numpy(), G.haversine_m(lon, lat, 0.0, 0.0))
-    xt, yt = G.lonlat_to_tile(lon, lat, 9)
-    assert all(t["x"] == x and t["y"] == y for t, x, y in zip(out["t"], xt, yt))

@@ -1,6 +1,6 @@
 """Whole-stage-codegen health of the headline pipeline.
 
-The bench stage (generator + morton encode + explode + broadcast join +
+The headline stage (generator + morton encode + explode + broadcast join +
 agg) sits AT janino's 64KB processNext() limit: r4 measured that adding a
 single predicate pushes it into `ERROR CodeGenerator: Failed to compile`
 -> SILENT interpreted fallback, 1.5-10x slower with no exception
@@ -11,38 +11,6 @@ to the hot path cannot silently de-optimize the benchmark again."""
 import os
 import subprocess
 import sys
-
-_SCRIPT = r"""
-import sys
-sys.path.insert(0, {repo!r})
-from pgsql2osm_spark.session import get_spark
-from bench import headline_pipeline
-
-spark = get_spark(
-    app="codegen_health", master="local[4]", shuffle_partitions=8,
-    extra_conf={{"spark.ui.showConsoleProgress": "false"}},
-)
-spark.sparkContext.setLogLevel("ERROR")
-n = headline_pipeline(spark, 1_000_000, 4).count()
-assert n > 0
-spark.stop()
-print("ROWS_OK", n)
-"""
-
-
-def test_headline_pipeline_compiles_whole_stage():
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT.format(repo=repo)],
-        capture_output=True, text=True, timeout=300, cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "ROWS_OK" in proc.stdout
-    assert "Failed to compile" not in proc.stderr, (
-        "headline stage fell back to interpreted execution:\n"
-        + proc.stderr[-2000:]
-    )
-
 
 _CANARY = r"""
 import sys
@@ -65,7 +33,7 @@ out = SJ.pip_join(
     spark, pts, FX.gen_admin_polygons(12),
     keep_cols=["image_id", "lon", "lat", "h3_7"],
     cell_cols=dict(zip((7, 8, 9, 10, 11), names)),
-    coarse_prefilter=True,
+    coarse_prefilter={coarse_prefilter},
 )
 x, y = G.tile_expr(F.col("lon"), F.col("lat"), 12)
 n = out.withColumn("tx", x).withColumn("ty", y).groupBy(
@@ -75,6 +43,26 @@ assert n > 0
 spark.stop()
 print("ROWS_OK", n)
 """
+
+
+def _assert_canary_compiles(coarse_prefilter: bool) -> None:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = _CANARY.format(repo=repo, coarse_prefilter=coarse_prefilter)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "ROWS_OK" in proc.stdout
+    assert "Failed to compile" not in proc.stderr, (
+        f"headline stage (coarse_prefilter={coarse_prefilter}) fell back to "
+        "interpreted execution:\n" + proc.stderr[-2000:]
+    )
+
+
+def test_headline_composition_compiles_whole_stage():
+    """The headline composition as the benchmark runs it (prefilter off)."""
+    _assert_canary_compiles(coarse_prefilter=False)
 
 
 def test_prefilter_on_generator_source_compiles_with_gated_shape():
@@ -87,17 +75,7 @@ def test_prefilter_on_generator_source_compiles_with_gated_shape():
     (11.7/21.9/29.2s vs 8.4s plain) — suspected boxed-InSet alloc/GC
     pressure amplified at 32 threads. Revisit if InSet codegen learns
     primitive long sets."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, "-c", _CANARY.format(repo=repo)],
-        capture_output=True, text=True, timeout=300, cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "ROWS_OK" in proc.stdout
-    assert "Failed to compile" not in proc.stderr, (
-        "the gated prefilter shape stopped compiling on the generator "
-        "source:\n" + proc.stderr[-2000:]
-    )
+    _assert_canary_compiles(coarse_prefilter=True)
 
 
 _SCAN_PREFILTER = r"""
@@ -142,7 +120,7 @@ def test_scan_shaped_prefilter_output_and_scan_stay_clean():
     17x slower at 20M scan rows), while the when-gated explode leaves
     nothing to push. The gated stage may drop from FUSED whole-stage
     codegen to volcano-with-compiled-expressions (janino 64KB, a ~1.2x
-    effect measured in tools/scale_probe.py scancoarse) — that tradeoff is
+    effect measured by the r5 scan-shaped probe) — that tradeoff is
     accepted and documented in BENCH/PLANS.md r5, so 'Failed to compile'
     is NOT asserted against here."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

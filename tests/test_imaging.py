@@ -1,6 +1,7 @@
 """Codec + pixel-parity tests (PSNR gate per BASELINE.json input_hint)."""
 
 import numpy as np
+import pytest
 
 from pgsql2osm_spark.functions import imaging as I
 from pgsql2osm_spark.sources import fixtures as FX
@@ -204,3 +205,22 @@ def test_jpeg_fill_bytes_before_marker():
     sof = data.index(b"\xff\xc0")
     padded = data[:sof] + b"\xff\xff\xff" + data[sof:]
     assert (J.jpeg_decode(padded) == ref).all()
+
+
+@pytest.mark.parametrize(
+    "data",
+    [
+        b"\xff\xd8\xff\xff",
+        b"\xff\xd8\xff",
+        b"\xff\xd8\xff\xdb\x00",
+        b"\xff\xd8\xff\xdb\x00\x43\x00",
+    ],
+    ids=["fill_byte_then_eof", "marker_without_code", "half_length_field", "length_overruns"],
+)
+def test_jpeg_truncated_marker_walk_raises_value_error(data):
+    """A stream cut inside the marker walk names the offset of the cut
+    marker instead of crashing with IndexError or struct.error."""
+    from pgsql2osm_spark.functions import jpeg as J
+
+    with pytest.raises(ValueError, match=r"^truncated stream at \d+$"):
+        J.jpeg_decode(data)

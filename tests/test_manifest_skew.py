@@ -54,21 +54,6 @@ def test_manifest_partial_resume(spark, tmp_path):
     assert spark.read.parquet(f"{out}/s").count() == 1000
 
 
-def test_salted_repartition_spreads_hot_cell(spark):
-    df = _pts(spark, 4000)
-    salted = SK.salted_repartition(df, "cell", n_salts=8, n_parts=16)
-    # rows within one hot cell land in multiple partitions
-    hot = df.groupBy("cell").count().orderBy(F.desc("count")).first()["cell"]
-    parts = (
-        salted.where(F.col("cell") == hot)
-        .select(F.spark_partition_id().alias("p"))
-        .distinct()
-        .count()
-    )
-    assert parts > 1
-    assert salted.count() == 4000  # no row loss
-
-
 def test_split_hot_cells(spark):
     df = _pts(spark, 4000)
     out = SK.split_hot_cells(df, cell_col="cell", res=4, hot_threshold=100)
@@ -102,39 +87,3 @@ def test_cell_partitioned_write_prunes_scan(spark, tmp_path):
     # pruned read returns exactly the partition's rows
     exp = df.where(F.col("cell4") == one_cell).count()
     assert q.count() == exp
-
-
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Two tables bucketed on the cell key join with NO Exchange on either
-    side — the co-located join strategy for repeatedly-joined 100TB tables
-    (SURVEY.md §4 'bucketing for co-located joins')."""
-    import shutil
-    import uuid
-
-    suffix = uuid.uuid4().hex[:8]
-    ta, tb = f"pts_bucketed_{suffix}", f"attrs_bucketed_{suffix}"
-    df = _pts(spark, 2000)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(8, "cell")
-        .sortBy("cell")
-        .saveAsTable(ta)
-    )
-    attrs = df.select("cell").distinct().withColumn("weight", F.lit(1))
-    (
-        attrs.write.mode("overwrite")
-        .bucketBy(8, "cell")
-        .sortBy("cell")
-        .saveAsTable(tb)
-    )
-    a = spark.table(ta)
-    b = spark.table(tb)
-    # force SMJ (broadcast would win on this tiny dim and hide the point):
-    # bucketed layout means NO shuffle exchange on either join side
-    joined = a.join(b.hint("merge"), "cell")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan[:800]
-    assert "SortMergeJoin" in plan
-    assert joined.count() == 2000
-    spark.sql(f"DROP TABLE IF EXISTS {ta}")
-    spark.sql(f"DROP TABLE IF EXISTS {tb}")

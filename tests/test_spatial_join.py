@@ -1,5 +1,7 @@
 """Flagship PIP-join parity: Spark two-stage join == brute-force numpy oracle."""
 
+import logging
+
 import numpy as np
 import pandas as pd
 
@@ -103,14 +105,19 @@ def test_pip_join_random_polygons_property(spark):
         assert got == exp, f"seed {seed}: sym-diff {len(got ^ exp)}"
 
 
-def test_pip_join_auto_dispatches_to_partitioned(spark):
-    """One entry point: a cover above max_broadcast_cells takes the
+def test_pip_join_auto_dispatches_to_partitioned(spark, monkeypatch, caplog):
+    """One entry point: a cover above MAX_BROADCAST_CELLS takes the
     partitioned path automatically (no raise) and still matches the oracle."""
     n = 2000
     lon, lat = FX.gen_points_slice(0, n)
     regions = FX.gen_admin_polygons(8)
     pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
-    got = SJ.pip_join(spark, pts, regions, keep_cols=["idx"], max_broadcast_cells=100)
+    monkeypatch.setattr(SJ, "MAX_BROADCAST_CELLS", 100)
+    with caplog.at_level(logging.WARNING, logger=SJ.__name__):
+        got = SJ.pip_join(spark, pts, regions, keep_cols=["idx"])
+    records = [r for r in caplog.records if r.name == SJ.__name__]
+    assert [r.levelno for r in records] == [logging.WARNING]
+    assert "taking the partitioned path" in records[0].getMessage()
     got_set = {(int(r["idx"]), int(r["region_id"])) for r in got.collect()}
     assert got_set == oracle_assignments(lon, lat, regions)
     # and the plan is the shuffle shape (applyInPandas refine), not broadcast
@@ -175,7 +182,7 @@ def test_partitioned_refine_salted_groups(spark):
     lat = rng.uniform(y0 - 0.1, y1 + 0.1, n)
     pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
     regions_df = SJ.regions_to_df(spark, regions)
-    out = SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"], refine_salt=8)
+    out = SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"])
     # correctness unchanged under salting
     got = {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}
     assert got == oracle_assignments(lon, lat, regions)
@@ -192,7 +199,7 @@ def test_partitioned_refine_salted_groups(spark):
     probe = probe.withColumn("_cell", F.explode(F.array(*names)))
     n_groups = (
         probe.join(cover.where(F.col("is_boundary")), probe["_cell"] == F.col("cell"))
-        .select(F.pmod(F.xxhash64(probe["_cell"]), F.lit(8)).alias("s"))
+        .select(F.pmod(F.xxhash64(probe["_cell"]), F.lit(SJ.REFINE_SALT)).alias("s"))
         .distinct()
         .count()
     )

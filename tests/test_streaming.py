@@ -41,95 +41,6 @@ def test_streaming_tiles_match_batch(spark, tmp_path):
     assert len(got) > 100
 
 
-def test_stateful_streaming_dedup(spark, tmp_path):
-    """Duplicate image_ids across micro-batch files are emitted exactly once
-    (applyInPandasWithState custom stateful operator)."""
-    import numpy as np
-
-    from pgsql2osm_spark.streaming import stateful as SF
-
-    n = 800
-    lon, lat = FX.gen_points_slice(0, n)
-    ids = [f"img{i % 500:06d}" for i in range(n)]  # 300 duplicate ids
-    pdf = pd.DataFrame({"image_id": ids, "lon": lon, "lat": lat})
-    src = str(tmp_path / "dsrc")
-    # two files -> at least two micro-batches with maxFilesPerTrigger=1,
-    # duplicates split across batches to exercise cross-batch state
-    spark.createDataFrame(pdf.iloc[:400]).coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(pdf.iloc[400:]).coalesce(1).write.mode("append").parquet(src)
-
-    out = SF.run_dedup_replay(spark, src, str(tmp_path / "dckpt"), "dedup_out").toPandas()
-    assert len(out) == 500  # every distinct id exactly once
-    assert out["image_id"].is_unique
-    assert set(out["image_id"]) == set(ids)
-
-    # bloom mode: CONSTANT per-bucket state; at 500 ids into 2^16-bit filters
-    # the FP probability is ~0, so the replay matches exact mode
-    out_b = SF.run_dedup_replay(
-        spark, src, str(tmp_path / "bckpt"), "dedup_bloom",
-        mode="bloom", bloom_bits=1 << 16, bloom_hashes=7, n_buckets=8,
-    ).toPandas()
-    assert out_b["image_id"].is_unique
-    assert set(out_b["image_id"]) == set(ids)
-    # and the checkpointed state is the fixed filter size, not the id set
-    import pyspark.sql.functions as F
-
-    state = (
-        spark.read.format("statestore")
-        .load(str(tmp_path / "bckpt"))
-        .select(F.length("value.groupState.bloom").alias("sz"))
-        .collect()
-    )
-    assert state and all(r["sz"] == (1 << 16) // 8 for r in state)
-
-
-def test_streaming_dedup_state_ttl(spark, tmp_path):
-    """ttl_ms expires IDLE bucket state (processing-time timeout): an id
-    re-ingested after its bucket expired is re-emitted as first_seen — the
-    documented re-admission trade that keeps long-lived dedup state from
-    pinning retired id shards forever (VERDICT r2 next #7)."""
-    import time as _time
-
-    from pgsql2osm_spark.streaming import stateful as SF
-
-    # two ids in DIFFERENT hash buckets (a bucket only times out in a batch
-    # where it receives no data, so the expiring batch must carry traffic
-    # for the other bucket)
-    probe = spark.createDataFrame(
-        [(f"img{i:06d}",) for i in range(16)], "image_id string"
-    ).select("image_id", F.pmod(F.xxhash64("image_id"), F.lit(2)).alias("b")).collect()
-    id_a = next(r["image_id"] for r in probe if r["b"] == 0)
-    id_b = next(r["image_id"] for r in probe if r["b"] == 1)
-
-    src, ckpt = str(tmp_path / "tsrc"), str(tmp_path / "tckpt")
-
-    def run(name, expect_rows):
-        # TTL replays return CUMULATIVE rows (parquet sink — the memory sink
-        # cannot recover a checkpoint across the multi-run aging this needs)
-        out = SF.run_dedup_replay(
-            spark, src, ckpt, name, mode="exact", ttl_ms=1500, n_buckets=2,
-            expect_rows=expect_rows,
-        ).toPandas()
-        return sorted(out["image_id"])
-
-    def write(ids, mode):
-        spark.createDataFrame(
-            pd.DataFrame({"image_id": ids, "lon": 0.0, "lat": 0.0})
-        ).coalesce(1).write.mode(mode).parquet(src)
-        _time.sleep(1.1)  # FileStreamSource orders batches by mtime
-
-    write([id_a], "overwrite")
-    assert run("ttl_r1", 1) == [id_a]
-    _time.sleep(3.0)  # > ttl: id_a's bucket is now idle-expired
-    # traffic on the OTHER bucket triggers the timeout sweep for id_a's;
-    # within-run duplicates of id_b are still suppressed (its state is live)
-    write([id_b, id_b], "append")
-    assert run("ttl_r2", 2) == sorted([id_a, id_b])
-    # id_a re-ingested after expiry -> re-emitted (flagged re-admission)
-    write([id_a], "append")
-    assert run("ttl_r3", 1) == sorted([id_a, id_a, id_b])
-
-
 def test_watermark_late_data_contract(spark, tmp_path):
     """The engine's (= Spark's) append-mode late-data contract, pinned by
     a 4-micro-batch replay (maxFilesPerTrigger=1, files ordered by mtime):

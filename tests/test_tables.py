@@ -1,17 +1,10 @@
-"""Table sources: catalog-or-parquet resolution and bucketed co-located joins."""
+"""Table sources: partitioned and bucketed writes, co-located joins."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from pgsql2osm_spark.sources import tables as TB
-
-
-def test_load_table_parquet_fallback(spark, tmp_path):
-    df = spark.range(10).withColumnRenamed("id", "x")
-    df.write.parquet(str(tmp_path / "t1.parquet"))
-    got = TB.load_table(spark, "t1", base=str(tmp_path))
-    assert got.count() == 10
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):

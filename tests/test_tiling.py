@@ -63,19 +63,6 @@ def test_raster_vector_join_assigns_only_region_tiles(spark):
     assert len(rows) == exp
 
 
-def test_thumbnails_real_resize(spark):
-    images = FX.images_df(spark, 12)
-    out = {r["image_id"]: r for r in TL.thumbnails(images, size=8).collect()}
-    pdf = FX.gen_images_pandas(12, with_pixels=True)
-    for _, row in pdf.iterrows():
-        t = out[row["image_id"]]
-        px = I.png_decode(bytes(t["thumb"]))
-        assert px.shape == (8, 8, 3)
-        # thumbnail mean tracks source mean (area-mean pooling property)
-        src = I.decode_image(row["bytes"], row["fmt"])
-        assert abs(px.mean() - src.mean()) < 3.0
-
-
 def test_frame_sample_fakevideo_and_stub(spark):
     import numpy as np
     import pandas as pd

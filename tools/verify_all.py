@@ -26,7 +26,8 @@ def main() -> int:
 
     import __spark_entry__ as E
 
-    spark = get_spark(app="verify_all_smoke", master="local[8]", shuffle_partitions=16)
+    master = f"local[{os.cpu_count() or 1}]"
+    spark = get_spark(app="verify_all_smoke", master=master, shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     df = E.entry(spark)
     n = df.count()
