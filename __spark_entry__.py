@@ -127,12 +127,6 @@ def q_pip_convex(spark, sf_dir):
     region = [{"region_id": 1, "rings": [np.asarray(_HEX, dtype=np.float64)]}]
     out = SJ.pip_join(
         spark, p, region, keep_cols=["id"], coarse_prefilter=True,
-        # 6-edge convex hexagon: refine='auto' picks the pure-Column
-        # even-odd test (<= SJ.MAX_COLUMN_EDGES), dropping the ArrowEvalPython
-        # stage entirely — measured 3.6s -> 1.0s cold, identical rows (r6;
-        # 'udf' stays the default for real multi-region covers where the
-        # unrolled expression leaves codegen)
-        refine="auto",
     )
     return out.select("id").transform(_psort, "id")
 
@@ -1027,7 +1021,6 @@ def entry(spark: SparkSession) -> DataFrame:
         hex_pts.select(F.col("id").cast("string").alias("image_id"), "lon", "lat"),
         [{"region_id": 1000, "rings": [np.asarray(_HEX, dtype=np.float64)]}],
         keep_cols=["image_id", "lon", "lat"],
-        refine="auto",  # 6 edges: pure-Column refine, no Arrow stage (r6)
     )
     both = joined.unionByName(hex_joined)
     x, y = G.tile_expr(F.col("lon"), F.col("lat"), 12)

@@ -252,56 +252,53 @@ def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return f"(({_spread_sql(x)} | ({_spread_sql(y)} << 1)) | {res << _RES_SHIFT})"
 
 
+def sql_ident(name: str) -> str:
+    """A column name quoted for Spark SQL text (backticks, doubled inside)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def with_cell_columns(df, lon: str, lat: str, res_list, names=None, base_res: int = MAX_RES):
     """Attach one cell-id column per resolution with the heavy bit-spreading
     computed ONCE (at base_res) and every coarser cell derived by a single
     shift — the hierarchy is literal bit truncation (m_r = m_26 >> 2*(26-r)).
 
-    Uses chained withColumn projections instead of one inline expression:
-    Spark's Generate and interpreted fallbacks walk duplicated subtrees
+    Uses chained projections instead of one inline expression: Spark's
+    Generate and interpreted fallbacks walk duplicated subtrees
     exponentially (measured 100x on the bench), while chained projections
-    stay inside whole-stage codegen with linear code size.
+    stay inside whole-stage codegen with linear code size. Each step is ONE
+    ``withColumns`` of SQL-text expressions (the grid clip, one per Morton
+    mask, then all resolutions): the same expressions as Column trees cost
+    a py4j round trip per operator and literal.
 
     Returns (df, [colnames]). Temp columns are dropped.
     """
     from pyspark.sql import functions as F
 
-    names = names or [f"h3_{r}" for r in res_list]
+    names = list(names or [f"h3_{r}" for r in res_list])
     n = 1 << base_res
 
-    def clip(c, lo, hi):
-        return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
+    def step(df, exprs):
+        return df.withColumns({k: F.expr(v) for k, v in exprs.items()})
 
-    df = df.withColumn(
-        "_cx", clip(F.floor((F.col(lon) + 180.0) / 360.0 * n), 0, n - 1).cast("long")
-    ).withColumn(
-        "_cy", clip(F.floor((F.col(lat) + 90.0) / 180.0 * n), 0, n - 1).cast("long")
+    def grid(col, off, span):
+        return (
+            f"CAST(least(greatest(floor(({sql_ident(col)} + {off}D) / {span}D * {n}), 0), "
+            f"{n - 1}) AS BIGINT) & 4294967295"
+        )
+
+    df = step(df, {"_cx": grid(lon, 180.0, 360.0), "_cy": grid(lat, 90.0, 180.0)})
+    for shift, mask in _SPREAD_MASKS:
+        m = int(np.int64(mask))
+        df = step(df, {c: f"({c} | shiftleft({c}, {shift})) & {m}" for c in ("_cx", "_cy")})
+    df = step(
+        df,
+        {
+            name: f"shiftrightunsigned(_cx | shiftleft(_cy, 1), {2 * (base_res - r)}) "
+            f"| {r << _RES_SHIFT}"
+            for r, name in zip(res_list, names)
+        },
     )
-    masks = [
-        (16, 0x0000FFFF0000FFFF),
-        (8, 0x00FF00FF00FF00FF),
-        (4, 0x0F0F0F0F0F0F0F0F),
-        (2, 0x3333333333333333),
-        (1, 0x5555555555555555),
-    ]
-    df = df.withColumn("_cx", F.col("_cx").bitwiseAND(F.lit(4294967295)))
-    df = df.withColumn("_cy", F.col("_cy").bitwiseAND(F.lit(4294967295)))
-    for shift, mask in masks:
-        m = int(np.int64(np.uint64(mask)))
-        df = df.withColumn(
-            "_cx", (F.col("_cx").bitwiseOR(F.shiftleft(F.col("_cx"), shift))).bitwiseAND(F.lit(m))
-        ).withColumn(
-            "_cy", (F.col("_cy").bitwiseOR(F.shiftleft(F.col("_cy"), shift))).bitwiseAND(F.lit(m))
-        )
-    df = df.withColumn("_m26", F.col("_cx").bitwiseOR(F.shiftleft(F.col("_cy"), 1)))
-    for r, name in zip(res_list, names):
-        df = df.withColumn(
-            name,
-            F.shiftrightunsigned(F.col("_m26"), 2 * (base_res - r)).bitwiseOR(
-                F.lit(r << _RES_SHIFT)
-            ),
-        )
-    return df.drop("_cx", "_cy", "_m26"), list(names)
+    return df.drop("_cx", "_cy"), names
 
 
 def cell_parent_expr(cell_col, res: int, parent_res: int):

@@ -61,53 +61,6 @@ def _crossings(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     return np.sum(cond & (px < xint), axis=1)
 
 
-def pip_column(
-    rings_by_region: dict[int, list[np.ndarray]],
-    region_col,
-    lon_col,
-    lat_col,
-):
-    """Pure-Column even-odd PIP — the JVM twin of points_in_rings, bit-exact.
-
-    Emits a region_id when-chain whose branches unroll each region's edges
-    as double arithmetic IDENTICAL to _crossings (same epsilon'd
-    denominator precomputed in numpy, same op order — IEEE doubles match
-    across numpy and the JVM), so results are bit-exact with the pandas-UDF
-    path (golden-verified). Motivation: Spark extracts pandas UDFs into an
-    ArrowEvalPython operator BELOW the containing filter, so a fused
-    `interior-OR-udf(...)` predicate ships every candidate row through
-    Arrow; a Column predicate avoids Python entirely. MEASURED LIMIT
-    (BENCH/PLANS.md r3): at ~134 total edges the when-chain leaves
-    whole-stage codegen and ran ~9x slower than the Arrow UDF on the
-    500M-row headline — use only for tiny covers (a bbox rectangle, a
-    small convex fence); pip_join gates it behind refine='column' /
-    refine='auto' up to spatial_join.MAX_COLUMN_EDGES.
-    """
-    from pyspark.sql import functions as F
-
-    expr = F.lit(False)
-    for rid, rings in rings_by_region.items():
-        cnt = None
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            if r.shape[0] < 3:
-                continue
-            x0, y0 = r[:, 0], r[:, 1]
-            x1, y1 = np.roll(x0, -1), np.roll(y0, -1)
-            d = y1 - y0 + 1e-300  # precomputed in numpy = bit-identical eps
-            dx = x1 - x0
-            for i in range(r.shape[0]):
-                cond = (F.lit(float(y0[i])) > lat_col) != (F.lit(float(y1[i])) > lat_col)
-                xint = F.lit(float(x0[i])) + (lat_col - F.lit(float(y0[i]))) / F.lit(
-                    float(d[i])
-                ) * F.lit(float(dx[i]))
-                c = F.when(cond & (lon_col < xint), 1).otherwise(0)
-                cnt = c if cnt is None else cnt + c
-        inside = (cnt % 2) == 1 if cnt is not None else F.lit(False)
-        expr = F.when(region_col == int(rid), inside).otherwise(expr)
-    return expr
-
-
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
     """Even-odd PIP over a ring set (outers + holes together): inside iff the
     total crossing count over all rings is odd — exactly the PostGIS
@@ -199,24 +152,24 @@ def tile_sql(lon_expr: str, lat_expr: str, z: int) -> tuple[str, str]:
     return x, y
 
 
-def tile_expr(lon_col, lat_col, z: int):
-    """Spark Columns (x, y) for the identical tile math, JVM-side built-ins."""
+def tile_expr(lon, lat, z: int):
+    """Spark Columns (x, y) for the identical tile math, JVM-side built-ins.
+
+    ``lon``/``lat``: column names, or plain ``F.col`` references. Each
+    Column is ONE ``F.expr`` with ``tile_sql``'s operations in the same
+    order, so the DuckDB oracle matches bit for bit (as Column trees the
+    pair costs ~280 py4j round trips)."""
     from pyspark.sql import functions as F
 
+    lon_s, lat_s = (C.sql_ident(c if isinstance(c, str) else c._jc.toString()) for c in (lon, lat))
     n = 1 << z
-
-    def clip(c, lo, hi):
-        return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
-
-    lat = clip(lat_col, -_MERC_LAT_MAX, _MERC_LAT_MAX)
-    x = clip(F.floor((lon_col + 180.0) / 360.0 * n), 0, n - 1).cast("long")
-    lat_r = F.radians(lat)
-    y = clip(
-        F.floor((F.lit(1.0) - F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r)) / float(np.pi)) / 2.0 * n),
-        0,
-        n - 1,
-    ).cast("long")
-    return x, y
+    lat_c = f"least(greatest({lat_s}, {-_MERC_LAT_MAX!r}D), {_MERC_LAT_MAX!r}D)"
+    x = f"CAST(least(greatest(floor(({lon_s} + 180.0D) / 360.0D * {n}), 0), {n - 1}) AS BIGINT)"
+    y = (
+        f"CAST(least(greatest(floor((1.0D - ln(tan(radians({lat_c})) + 1.0D / cos(radians({lat_c}))) "
+        f"/ pi()) / 2.0D * {n}), 0), {n - 1}) AS BIGINT)"
+    )
+    return F.expr(x), F.expr(y)
 
 
 # ---------------------------------------------------------------------------

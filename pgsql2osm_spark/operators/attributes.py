@@ -66,7 +66,9 @@ def export_rows(
 ) -> DataFrame:
     """Full export row-set: merged tags + (for nodes) coordinates from the
     fact table — the engine's answer to stream_osm_xml's generator chain
-    (pgsql2osm.py:437-450). Output order is unconstrained (README.md:127-135).
+    (pgsql2osm.py:437-450). Row order is unconstrained (README.md:127-135);
+    the columns are ``(kind, id, tags, lon, lat)`` in that order, or
+    ``(kind, id, tags)`` without ``coordinates`` (the final selects pin it).
 
     coordinates: DataFrame[id, lon, lat] — the flat-nodes analogue; nodes
     missing from it are dropped (inner join, J10)."""

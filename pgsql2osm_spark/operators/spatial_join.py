@@ -9,27 +9,27 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
      each cover cell classified interior vs boundary (geometry.polygon_cover).
   2. points: cell id per needed resolution computed with PURE JVM bitwise
      expressions (cells.cell_expr — whole-stage codegen, no Python).
-  3. broadcast equi-join points.cell == cover.cell, one join per distinct
-     cover resolution (<=5), unioned. No shuffle of the fact table at all:
+  3. broadcast equi-join points.cell == cover.cell: each point explodes
+     into one probe row per distinct cover resolution. No shuffle of the fact table at all:
      broadcast hash join + codegen'd cell computation stream through the scan.
-  4. interior-cell matches are DONE (no exact test needed); boundary-cell
-     matches get the exact even-odd PIP via the Arrow pandas UDF. Plan
-     truth (r3, BENCH/PLANS.md): Spark extracts the UDF below the filter,
-     so ALL candidate rows pay the Arrow round-trip even though only
-     boundary rows consult the result — the two measured alternatives
-     (split-cover union: re-executes the scan per branch, 1.6-1.8x worse;
-     pure-Column unrolled refine: leaves codegen, ~9x worse at 134 edges,
-     kept as refine='column' for tiny covers) both lose, and the round-trip
-     is NOT the scaling bottleneck (the gather-shaped hash probe is). The
-     two-stage split remains the reference's "AND of ST_Intersects is
-     1000x cheaper than ST_Intersection" staging (settings.py:132-140,
-     SURVEY.md X2): >90% of candidates are interior and skip the exact
-     *computation*.
+  4. the exact even-odd test rides in the join condition as ONE SQL
+     predicate (refine_sql) over per-cell data the driver computed next to
+     the cover (cell_slots, in the style of S2ShapeIndex's per-cell clipped
+     edges): a parity bit for the edges that always count and at most
+     EDGE_SLOTS edges that may count. Interior cells carry parity 1 and no
+     slots, so their matches are DONE without exact work — the reference's
+     "AND of ST_Intersects is 1000x cheaper than ST_Intersection" staging
+     (settings.py:132-140, SURVEY.md X2) and GeoBlocks' "exact work only in
+     boundary cells". A cell that meets more edges is split into children.
+     The predicate is bit-equal to geometry.points_in_rings and stays inside
+     whole-stage codegen: no Python worker sees a candidate row, and the
+     expression is fixed in size (a per-region when-chain over every edge
+     leaves codegen, ~9x worse at 134 edges, BENCH/PLANS.md r3).
 
-Scale notes (100 TB): the fact side is never shuffled or collected; cover +
-rings are O(regions * cells_per_region) driver/broadcast data (bounded by
-TARGET_CELLS per region). For region sets too large to broadcast, split the
-region list and union — each pass stays broadcast; a shuffle-based cell-cell
+Scale notes (100 TB): the fact side is never shuffled or collected; the
+cover (with its slot columns) is O(regions * cells_per_region)
+driver/broadcast data (bounded by TARGET_CELLS per region). For region
+sets too large to broadcast, split the region list and union — each pass stays broadcast; a shuffle-based cell-cell
 join fallback is deliberately NOT the default (it would shuffle the planet).
 """
 
@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 
 from ..functions import cells as C
 from ..functions import geometry as G
-from ..functions import udfs
 from ..sources import fixtures as FX
 
 _LOG = logging.getLogger(__name__)
@@ -56,8 +55,6 @@ RES_HI = 11
 TARGET_CELLS = 4096
 # pip_join takes the partitioned path above this many cover cells.
 MAX_BROADCAST_CELLS = 2_000_000
-# refine='auto' unrolls the even-odd test as a Column up to this many edges.
-MAX_COLUMN_EDGES = 64
 # coarse_prefilter coarsens its ancestor InSet until it fits this size.
 MAX_PREFILTER_CELLS = 512
 # pip_join_partitioned broadcasts its cover up to this many cells.
@@ -67,42 +64,199 @@ BROADCAST_COVER_MAX_CELLS = 4_000_000
 REFINE_SALT = 16
 
 
-def build_cover(regions: list[dict]):
-    """Driver-side cover build: returns (cover_pdf, rings_by_region).
+# The exact refine reads at most this many edges per cover cell (the slot
+# columns of the broadcast cover); cell_slots splits a cell that needs more.
+EDGE_SLOTS = 8
+# An edge must clear a cell by this many degrees before cell_slots calls it
+# west, east or outside the cell's latitude band: the slack covers rounding
+# between a point's cell (floor of its scaled lon/lat) and cells.cell_bounds.
+SLOT_EPS = 1e-9
+# Per slot, the operands of geometry._crossings: edge start (x, y), end
+# latitude y1, d = y1 - y0 + 1e-300 and dx = x1 - x0. An unused slot holds
+# _SLOT_PAD, whose crossing condition is always false.
+_SLOT_FIELDS = ("x", "y", "y1", "d", "dx")
+_SLOT_PAD = (0.0, 0.0, 0.0, 1e-300, 0.0)
+SLOT_COLS = [f"_{f}_{k}" for k in range(EDGE_SLOTS) for f in _SLOT_FIELDS]
+# cell_slots gives up (ValueError) once one region's splits made this many
+# cells, and batches its (cells x edges) temporaries to this many entries.
+MAX_SPLIT_CELLS = TARGET_CELLS * 16
+_SLOT_BATCH = 1 << 21
 
-    cover_pdf columns: region_id:int64, res:int32, cell:int64, is_boundary:bool.
+
+def _ring_edges(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(edges, prev): the (E, 4) edges (x0, y0, x1, y1) of every ring of
+    >= 3 vertices, paired as geometry._crossings pairs them, and for each
+    edge the index of the one before it in its ring (cyclic). Horizontal
+    edges are left out: their crossing condition ``(y0 > py) != (y1 > py)``
+    is never true, and the chain's latitudes stay continuous without them."""
+    edges, prev = [np.empty((0, 4))], [np.empty(0, dtype=np.int64)]
+    n = 0
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64)
+        if r.shape[0] < 3:
+            continue
+        x0, y0 = r[:, 0], r[:, 1]
+        e = np.stack([x0, y0, np.roll(x0, -1), np.roll(y0, -1)], axis=1)
+        e = e[e[:, 1] != e[:, 3]]
+        edges.append(e)
+        prev.append(n + np.roll(np.arange(len(e)), 1))
+        n += len(e)
+    return np.concatenate(edges), np.concatenate(prev)
+
+
+def _level_slots(cells: np.ndarray, edges: np.ndarray, prev: np.ndarray):
+    """cell_slots for one batch of cells, without splitting: (fits, parity,
+    n_slots, slots), the last three for the cells that fit only."""
+    lon0, lat0, lon1, lat1 = (b[:, None] for b in C.cell_bounds(cells))
+    x0, y0, x1, y1 = edges.T
+    b0, b1 = lat0 - SLOT_EPS, lat1 + SLOT_EPS
+    # each edge's x-range inside the cell's latitude band (y1 != y0 always)
+    xa = x0 + np.clip((b0 - y0) / (y1 - y0), 0.0, 1.0) * (x1 - x0)
+    xb = x0 + np.clip((b1 - y0) / (y1 - y0), 0.0, 1.0) * (x1 - x0)
+    meets = (np.maximum(y0, y1) >= b0) & (np.minimum(y0, y1) <= b1)
+    east = np.minimum(xa, xb) > lon1 + SLOT_EPS
+    west = np.maximum(xa, xb) < lon0 - SLOT_EPS
+    local = meets & ~east & ~west
+    # an edge outside the band or east of the cell counts exactly when its
+    # crossing condition holds, so over a run of consecutive such edges the
+    # count telescopes to [y_first > py] != [y_last > py]
+    through = ~meets | east
+    ends = np.concatenate(
+        [through & ~through[:, prev], through & ~through[:, np.argsort(prev)]], axis=1
+    )
+    end_y = np.concatenate([y0, y1])
+    above = ends & (end_y > b1)
+    vary = ends & ~above & (end_y >= b0)
+    n_local = local.sum(axis=1)
+    n_slots = n_local + (vary.sum(axis=1) + 1) // 2
+    fits = n_slots <= EDGE_SLOTS
+    slots = np.tile(np.asarray(_SLOT_PAD), (int(fits.sum()), EDGE_SLOTS, 1))
+    local, vary, n_local = local[fits], vary[fits], n_local[fits]
+    row, edge = np.nonzero(local)
+    pos = (np.cumsum(local, axis=1) - 1)[row, edge]
+    slots[row, pos] = np.stack([x0, y0, y1, y1 - y0 + 1e-300, x1 - x0], axis=1)[edge]
+    # run-end terms pair up: (+inf, y_a, y_b, d, 0) counts [y_a > py] != [y_b > py]
+    row, col = np.nonzero(vary)
+    rank = (np.cumsum(vary, axis=1) - 1)[row, col]
+    pos = n_local[row] + rank // 2
+    slots[row, pos, 0] = np.inf
+    slots[row, pos, 2] = -np.inf  # a lone term pairs with [-inf > py] = 0
+    slots[row, pos, 4] = 0.0
+    slots[row, pos, 1 + rank % 2] = end_y[col]
+    slots[row, pos, 3] = slots[row, pos, 2] - slots[row, pos, 1] + 1e-300
+    parity = (above.sum(axis=1) % 2).astype(np.int32)
+    return fits, parity[fits], n_slots[fits], slots
+
+
+def cell_slots(cells: np.ndarray, edges: np.ndarray, prev: np.ndarray):
+    """Per-cell data of the exact refine: (cells, parity, n_slots, slots).
+
+    Even-odd membership of a point in cell [lon0,lon1]x[lat0,lat1] becomes
+    ``(parity + crossings over slots) % 2 == 1``, equal to
+    geometry.points_in_rings. Each edge is judged by its part inside the
+    cell's latitude band (``SLOT_EPS`` of slack on every bound):
+
+    * wholly west of the cell: it never counts and is dropped;
+    * passing through the cell: a slot (x0, y0, y1, d, dx), evaluated per
+      point exactly as geometry._crossings does;
+    * outside the band or wholly east: it counts exactly when its crossing
+      condition holds, so a run of consecutive such edges telescopes to
+      ``[y_first > py] != [y_last > py]``. Each run end adds one term
+      ``[y > py]``: constant (folded into ``parity``) when y clears the
+      band, otherwise paired with another such term into one slot
+      (+inf, y_a, y_b, d, 0) whose x test always passes. A ring wholly of
+      such edges adds nothing.
+
+    A cell that needs more than ``EDGE_SLOTS`` slots is replaced by its four
+    children, level by level, so the returned cells may be finer than the
+    input. ``slots`` is (N, EDGE_SLOTS, 5), unused slots padded by
+    ``_SLOT_PAD``. Cells are processed in batches that bound the
+    (cells x edges) temporaries.
+    """
+    parts, made = [], cells.size
+    batch = max(1, _SLOT_BATCH // max(len(edges), 1))
+    while True:
+        over = []
+        for chunk in np.array_split(cells, -(-cells.size // batch) or 1):
+            fits, *rest = _level_slots(chunk, edges, prev)
+            parts.append((chunk[fits], *rest))
+            over.append(chunk[~fits])
+        over = np.concatenate(over)
+        if not over.size:
+            return tuple(np.concatenate(col) for col in zip(*parts))
+        if C.cell_res(over[:1])[0] >= C.MAX_RES or made > MAX_SPLIT_CELLS:
+            lon, lat, _, _ = C.cell_bounds(over[:1])
+            raise ValueError(
+                f"cells near lon/lat ({lon[0]:.7f}, {lat[0]:.7f}) still meet more "
+                f"than {EDGE_SLOTS} edges after splitting to res "
+                f"{C.cell_res(over[:1])[0]} ({made} cells)"
+            )
+        cells = np.concatenate([C.cell_children(int(c)) for c in over])
+        made += cells.size
+
+
+def build_cover(regions: list[dict]) -> pd.DataFrame:
+    """Driver-side cover build for the broadcast join.
+
+    Columns: region_id:int64, res:int32, cell:int64, _par:int32 and the
+    ``SLOT_COLS`` (float64). Interior cells carry parity 1 and no slots;
+    boundary cells carry cell_slots' data, and a boundary cell that is
+    wholly outside (parity 0, no slots) leaves the cover.
     """
     recs = []
-    rings_by_region: dict[int, list[np.ndarray]] = {}
     for reg in regions:
         rings = FX.region_rings(reg) if "outer_rings" in reg else reg["rings"]
         rings = G.normalize_rings([np.asarray(r, dtype=np.float64) for r in rings])
-        rid = int(reg["region_id"])
-        rings_by_region[rid] = rings
         res = G.adaptive_cover_res(rings, RES_LO, RES_HI, TARGET_CELLS)
         cells_arr, is_bnd = G.polygon_cover(rings, res, max_cells=TARGET_CELLS * 16)
+        inner = cells_arr[~is_bnd]
+        try:
+            bcells, par, n_slots, slots = cell_slots(cells_arr[is_bnd], *_ring_edges(rings))
+        except ValueError as e:
+            raise ValueError(f"region {reg['region_id']}: {e}") from None
+        live = (par == 1) | (n_slots > 0)
+        cells_all = np.concatenate([inner, bcells[live]])
+        slots_all = np.concatenate(
+            [np.tile(np.asarray(_SLOT_PAD), (inner.size, EDGE_SLOTS, 1)), slots[live]]
+        )
         recs.append(
             pd.DataFrame(
                 {
-                    "region_id": np.int64(rid),
-                    "res": np.int32(res),
-                    "cell": cells_arr,
-                    "is_boundary": is_bnd,
+                    "region_id": np.int64(reg["region_id"]),
+                    "res": C.cell_res(cells_all).astype(np.int32),
+                    "cell": cells_all,
+                    "_par": np.concatenate(
+                        [np.ones(inner.size, dtype=np.int32), par[live]]
+                    ),
+                    **dict(zip(SLOT_COLS, slots_all.reshape(-1, len(SLOT_COLS)).T)),
                 }
             )
         )
     if not recs:
-        cover = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "region_id": pd.Series(dtype="int64"),
                 "res": pd.Series(dtype="int32"),
                 "cell": pd.Series(dtype="int64"),
-                "is_boundary": pd.Series(dtype="bool"),
+                "_par": pd.Series(dtype="int32"),
+                **{c: pd.Series(dtype="float64") for c in SLOT_COLS},
             }
         )
-        return cover, rings_by_region
-    cover = pd.concat(recs, ignore_index=True)
-    return cover, rings_by_region
+    return pd.concat(recs, ignore_index=True)
+
+
+def refine_sql(lon: str, lat: str) -> str:
+    """The exact refine as ONE SQL predicate over a cover row's ``_par`` and
+    slot columns and the point's ``lon``/``lat`` — geometry._crossings'
+    operations in the same order, so it is bit-equal to
+    geometry.points_in_rings and stays inside whole-stage codegen."""
+    x, y = C.sql_ident(lon), C.sql_ident(lat)
+    terms = " + ".join(
+        f"CASE WHEN ((_y_{k} > {y}) != (_y1_{k} > {y})) "
+        f"AND ({x} < _x_{k} + ({y} - _y_{k}) / _d_{k} * _dx_{k}) THEN 1 ELSE 0 END"
+        for k in range(EDGE_SLOTS)
+    )
+    return f"((_par + {terms}) % 2) = 1"
 
 
 def pip_join(
@@ -113,19 +267,14 @@ def pip_join(
     lat: str = "lat",
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
-    refine: str = "udf",
     coarse_prefilter: bool = False,
 ) -> DataFrame:
     """points x regions -> rows of points inside each region.
 
-    ``refine``: 'udf' (default) refines boundary rows with the Arrow
-    pandas-UDF exact test; 'column' unrolls the even-odd test as a pure
-    Column expression, 'auto' picks 'column' only up to ``MAX_COLUMN_EDGES``
-    TOTAL edges. MEASURED: at ~130 edges x 12 regions the unrolled
-    expression ran ~9x slower than the Arrow UDF on the 500M-row headline
-    (the giant when-chain leaves whole-stage codegen), so 'udf' stays the
-    default; 'column' only ever pays off for tiny covers (bbox rectangles,
-    a handful of edges).
+    Exact even-odd membership, bit-equal to geometry.points_in_rings: the
+    broadcast join matches each point to the cover cells of its regions,
+    and one SQL predicate (refine_sql) over the cell's parity bit and edge
+    slots (cell_slots) decides it inside whole-stage codegen — no Python.
 
     Returns the point columns (or ``keep_cols``) + ``region_id``. A point in
     k overlapping regions yields k rows (nested admin levels do overlap, as
@@ -167,7 +316,7 @@ def pip_join(
             spark, points, regions_to_df(spark, regions), lon=lon, lat=lat,
             keep_cols=keep_cols, cell_cols=cell_cols,
         )
-    cover_pdf, rings_by_region = build_cover(regions)
+    cover_pdf = build_cover(regions)
     if len(cover_pdf) > MAX_BROADCAST_CELLS:
         return pip_join_partitioned(
             spark, points, regions_to_df(spark, regions), lon=lon, lat=lat,
@@ -187,7 +336,7 @@ def pip_join(
     # generation): a branch-per-stage union re-executes it per branch
     # (measured 1.6-1.8x total wall on the 500M-row headline).
     res_list = [int(r) for r in sorted(cover_pdf["res"].unique())]
-    cov = spark.createDataFrame(cover_pdf[["cell", "region_id", "is_boundary"]])
+    cov = spark.createDataFrame(cover_pdf.drop(columns="res"))
     # Materialize per-res cells as projected columns (single shared Morton
     # spread at res 26, per-res shift — cells.with_cell_columns) and explode
     # only the column references: Generate evaluates its expressions
@@ -195,10 +344,12 @@ def pip_join(
     # there costs ~100x (measured 16s vs 0.14s on 2M rows).
     cell_cols = dict(cell_cols or {})
     missing = [r for r in res_list if r not in cell_cols]
-    probe, new_names = C.with_cell_columns(
-        points, lon, lat, missing, names=[f"_cell_r{r}" for r in missing]
-    )
-    cell_cols.update(dict(zip(missing, new_names)))
+    probe, new_names = points, []
+    if missing:
+        probe, new_names = C.with_cell_columns(
+            points, lon, lat, missing, names=[f"_cell_r{r}" for r in missing]
+        )
+        cell_cols.update(dict(zip(missing, new_names)))
     refs = [cell_cols[r] for r in res_list]
     if coarse_prefilter:
         base_res = min(res_list)
@@ -246,35 +397,15 @@ def pip_join(
             .drop("_pre", "_arr", *new_names)
         )
     else:
-        probe = probe.withColumn("_cell", F.explode(F.array(*refs))).drop(*new_names)
+        probe = probe.withColumn(
+            "_cell", F.expr(f"explode(array({', '.join(map(C.sql_ident, refs))}))")
+        ).drop(*new_names)
+    # Interior cells carry parity 1 and no slots, so their rows pass on the
+    # parity bit alone (the X2 staging); boundary rows count crossings over
+    # at most EDGE_SLOTS edges. The predicate spans both join sides, so the
+    # optimizer folds it into the broadcast hash join's condition.
     cand = probe.join(F.broadcast(cov), probe["_cell"] == cov["cell"], "inner")
-    # Interior-cell rows pass without the exact test (X2 staging); boundary
-    # -cell rows take the exact refine. DEFAULT is refine='udf': the fused
-    # `interior OR pip_udf(...)` predicate. Spark extracts the Python UDF
-    # into an ArrowEvalPython stage BELOW the filter, so every candidate row
-    # pays the Arrow round-trip — but this still measured fastest: the
-    # split-cover union re-executes the source subtree per branch (1.6-1.8x
-    # total wall), and the pure-Column unrolled even-odd expression
-    # (geometry.pip_column, bit-exact) leaves whole-stage codegen and ran
-    # ~9x worse at 134 edges (BENCH/PLANS.md r3). The Column path is OPT-IN:
-    # refine='column', or 'auto' which picks it only when the cover is tiny
-    # (n_edges <= MAX_COLUMN_EDGES).
-    n_edges = sum(
-        r.shape[0] for rings in rings_by_region.values()
-        for r in rings if r.shape[0] >= 3
-    )
-    if refine == "column" or (refine == "auto" and n_edges <= MAX_COLUMN_EDGES):
-        exact = G.pip_column(
-            rings_by_region, F.col("region_id"), F.col(lon), F.col(lat)
-        )
-    else:
-        rings_bc = spark.sparkContext.broadcast(
-            {rid: [r for r in rings] for rid, rings in rings_by_region.items()}
-        )
-        exact = udfs.make_pip_udf(rings_bc)(
-            F.col("region_id"), F.col(lon), F.col(lat)
-        )
-    kept = cand.where((~F.col("is_boundary")) | exact)
+    kept = cand.where(F.expr(refine_sql(lon, lat)))
     return kept.select(*out_cols, "region_id")
 
 

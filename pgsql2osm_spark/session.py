@@ -76,8 +76,6 @@ def get_spark(
     spark = b.getOrCreate()
     # Ship the package to python workers regardless of the driver's cwd —
     # the local-mode equivalent of spark-submit --py-files (north rule).
-    try:
-        spark.sparkContext.addPyFile(make_pyfiles_zip())
-    except Exception:
-        pass  # already added in a reused session
+    # Re-adding the same zip in a reused session does not raise.
+    spark.sparkContext.addPyFile(make_pyfiles_zip())
     return spark

@@ -206,22 +206,53 @@ def test_partitioned_refine_salted_groups(spark):
     assert n_groups >= 4, f"salt fan-out too low: {n_groups}"
 
 
-def test_pip_column_refine_bit_parity(spark):
-    """refine='column' (pure-Column unrolled even-odd, zero Python) is
-    bit-exact with the Arrow-UDF refine and the brute-force oracle — kept
-    for tiny covers only (measured 9x slower at fixture edge counts,
-    BENCH/PLANS.md r3)."""
+def test_pip_join_refine_matches_oracle_without_python(spark):
+    """The default pip_join equals the brute-force oracle, and its exact
+    refine runs without a Python stage: no ArrowEvalPython in the plan."""
     n = 3000
     lon, lat = FX.gen_points_slice(0, n)
     regions = FX.gen_admin_polygons(6)
     pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
-    a = {(int(r["idx"]), int(r["region_id"])) for r in
-         SJ.pip_join(spark, pts, regions, keep_cols=["idx"], refine="udf").collect()}
-    col_df = SJ.pip_join(spark, pts, regions, keep_cols=["idx"], refine="column")
-    b = {(int(r["idx"]), int(r["region_id"])) for r in col_df.collect()}
-    assert a == b == oracle_assignments(lon, lat, regions)
-    plan = col_df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan  # truly Python-free
+    out = SJ.pip_join(spark, pts, regions, keep_cols=["idx"])
+    got = {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}
+    assert got == oracle_assignments(lon, lat, regions)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+
+
+def test_pip_join_splits_cells_with_many_edges(spark):
+    """A 100-vertex polygon about 0.1 deg across puts more than EDGE_SLOTS
+    edges into its res-RES_HI cells, so the cover splits them into finer
+    cells; the rows still equal the oracle."""
+    rng = np.random.default_rng(41)
+    ang = np.linspace(0.0, 2 * np.pi, 100, endpoint=False)
+    rad = 0.05 * (1.0 + 0.3 * np.sin(7 * ang))
+    ring = np.stack([12.3 + rad * np.cos(ang), 45.6 + rad * np.sin(ang)], axis=1)
+    regions = [{"region_id": 5, "outer_rings": [ring], "inner_rings": []}]
+    cover = SJ.build_cover(regions)
+    assert cover["res"].max() > SJ.RES_HI
+    n = 4000
+    lon = rng.uniform(12.3 - 0.08, 12.3 + 0.08, n)
+    lat = rng.uniform(45.6 - 0.08, 45.6 + 0.08, n)
+    pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
+    got = {(int(r["idx"]), int(r["region_id"]))
+           for r in SJ.pip_join(spark, pts, regions, keep_cols=["idx"]).collect()}
+    exp = oracle_assignments(lon, lat, regions)
+    assert got == exp and len(exp) > 1000
+
+
+def test_cover_rejects_more_edges_than_slots_at_one_point():
+    """Ten edges meeting at one vertex cannot be split below EDGE_SLOTS at
+    any resolution: the cover build names the region instead of looping."""
+    import pytest
+
+    c = (10.0, 20.0)
+    ring = []
+    for a in np.linspace(0.0, 2 * np.pi, 5, endpoint=False):
+        ring += [c, (c[0] + np.cos(a), c[1] + np.sin(a)),
+                 (c[0] + np.cos(a + 0.5), c[1] + np.sin(a + 0.5))]
+    with pytest.raises(ValueError, match="region 7: .* more than 8 edges"):
+        SJ.build_cover([{"region_id": 7, "rings": [np.asarray(ring)]}])
 
 
 def test_pip_join_coarse_prefilter_identical(spark):
