@@ -262,8 +262,9 @@ def main(argv=None, spark=None) -> int:
 
     if regions_df is not None:
         # distributed boundary rows never visit the driver: the partitioned
-        # PIP path builds the cover with mapInPandas and auto-broadcasts it
-        # when small (spatial_join.pip_join_partitioned)
+        # PIP path builds the cover with mapInPandas, broadcasts it when
+        # small, and refines in the join condition like pip_join
+        # (spatial_join.pip_join_partitioned)
         joined = SJ.pip_join_partitioned(spark, pts, regions_df)
     else:
         joined = SJ.pip_join(

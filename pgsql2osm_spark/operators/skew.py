@@ -2,8 +2,10 @@
 
 Dense metro cells concentrate a huge share of rows on a few cell keys. The
 mitigation here is a plain DataFrame rewrite (no Catalyst rule), layered on
-top of AQE's runtime skew-join splitting. Salting lives in one place: the
-salted exact refine of spatial_join.pip_join_partitioned.
+top of AQE's runtime skew-join splitting. The engine has no salting: the PIP
+refine is a per-row join predicate (spatial_join.refine_sql), so no grouped
+stage is left to skew, and a shuffled cell join's hot keys are AQE's and
+split_hot_cells' to spread.
 
 WHEN TO USE (measured, BENCH/PLANS.md): only for holistic aggregations
 (exact median/percentile, collect_list) and skewed shuffle joins — measured

@@ -4,19 +4,22 @@ Semantics: the reference's boundary selection (`all_nwr_within`,
 /root/reference/pgsql2osm/pgsql2osm.py:178-212: ST_Intersects(way, boundary)
 over a GiST index) re-expressed for Spark at 10^12-point scale:
 
-  1. driver: each region polygon -> grid-cell cover at an adaptively chosen
+  1. cover: each region polygon -> grid-cell cover at an adaptively chosen
      resolution (geometry.adaptive_cover_res — the X1 "adaptive chunk" idea),
      each cover cell classified interior vs boundary (geometry.polygon_cover).
+     One function builds a region's rows (cover_rows): on the driver
+     (pip_join) or in one mapInPandas pass over a region table
+     (pip_join_partitioned).
   2. points: cell id per needed resolution computed with PURE JVM bitwise
      expressions (cells.cell_expr — whole-stage codegen, no Python).
   3. broadcast equi-join points.cell == cover.cell: each point explodes
      into one probe row per distinct cover resolution. No shuffle of the fact table at all:
      broadcast hash join + codegen'd cell computation stream through the scan.
   4. the exact even-odd test rides in the join condition as ONE SQL
-     predicate (refine_sql) over per-cell data the driver computed next to
-     the cover (cell_slots, in the style of S2ShapeIndex's per-cell clipped
-     edges): a parity bit for the edges that always count and at most
-     EDGE_SLOTS edges that may count. Interior cells carry parity 1 and no
+     predicate (refine_sql) over per-cell data computed with the cover
+     (cell_slots, in the style of S2ShapeIndex's per-cell clipped edges): a
+     parity bit for the edges that always count and at most EDGE_SLOTS
+     edges that may count. Interior cells carry parity 1 and no
      slots, so their matches are DONE without exact work — the reference's
      "AND of ST_Intersects is 1000x cheaper than ST_Intersection" staging
      (settings.py:132-140, SURVEY.md X2) and GeoBlocks' "exact work only in
@@ -26,11 +29,12 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
      expression is fixed in size (a per-region when-chain over every edge
      leaves codegen, ~9x worse at 134 edges, BENCH/PLANS.md r3).
 
-Scale notes (100 TB): the fact side is never shuffled or collected; the
-cover (with its slot columns) is O(regions * cells_per_region)
-driver/broadcast data (bounded by TARGET_CELLS per region). For region
-sets too large to broadcast, split the region list and union — each pass stays broadcast; a shuffle-based cell-cell
-join fallback is deliberately NOT the default (it would shuffle the planet).
+Scale notes (100 TB): the fact side is never collected, and never
+shuffled while the cover fits the broadcast; the cover (with its slot
+columns) is O(regions * cells_per_region) data (bounded by TARGET_CELLS per
+region). A cover above MAX_BROADCAST_CELLS joins through a cell-keyed
+shuffle of the probe rows instead — the fallback, not the default (at
+planet scale it shuffles the planet).
 """
 
 from __future__ import annotations
@@ -53,19 +57,14 @@ _LOG = logging.getLogger(__name__)
 RES_LO = 7
 RES_HI = 11
 TARGET_CELLS = 4096
-# pip_join takes the partitioned path above this many cover cells.
+# Both PIP paths broadcast a cover of at most this many cells and shuffle
+# a larger one (a cover row is 44 columns, ~344 B: ~690 MB at the limit).
 MAX_BROADCAST_CELLS = 2_000_000
 # coarse_prefilter coarsens its ancestor InSet until it fits this size.
 MAX_PREFILTER_CELLS = 512
-# pip_join_partitioned broadcasts its cover up to this many cells.
-BROADCAST_COVER_MAX_CELLS = 4_000_000
-# pip_join_partitioned fans each region's boundary refine into this many
-# salted groups.
-REFINE_SALT = 16
-
 
 # The exact refine reads at most this many edges per cover cell (the slot
-# columns of the broadcast cover); cell_slots splits a cell that needs more.
+# columns of the cover); cell_slots splits a cell that needs more.
 EDGE_SLOTS = 8
 # An edge must clear a cell by this many degrees before cell_slots calls it
 # west, east or outside the cell's latitude band: the slack covers rounding
@@ -195,44 +194,47 @@ def cell_slots(cells: np.ndarray, edges: np.ndarray, prev: np.ndarray):
         made += cells.size
 
 
-def build_cover(regions: list[dict]) -> pd.DataFrame:
-    """Driver-side cover build for the broadcast join.
+def normalized_rings(reg: dict) -> list[np.ndarray]:
+    """A region's rings for even-odd PIP, split at the antimeridian
+    (geometry.normalize_rings). ``reg`` holds either ``outer_rings`` and
+    ``inner_rings`` (the fixtures' shape) or plain ``rings``."""
+    return G.normalize_rings(FX.region_rings(reg) if "outer_rings" in reg else reg["rings"])
+
+
+def cover_rows(region_id: int, rings: list[np.ndarray]) -> pd.DataFrame:
+    """One region's cover rows, the unit both cover builds emit.
 
     Columns: region_id:int64, res:int32, cell:int64, _par:int32 and the
     ``SLOT_COLS`` (float64). Interior cells carry parity 1 and no slots;
     boundary cells carry cell_slots' data, and a boundary cell that is
     wholly outside (parity 0, no slots) leaves the cover.
     """
-    recs = []
-    for reg in regions:
-        rings = FX.region_rings(reg) if "outer_rings" in reg else reg["rings"]
-        rings = G.normalize_rings([np.asarray(r, dtype=np.float64) for r in rings])
-        res = G.adaptive_cover_res(rings, RES_LO, RES_HI, TARGET_CELLS)
-        cells_arr, is_bnd = G.polygon_cover(rings, res, max_cells=TARGET_CELLS * 16)
-        inner = cells_arr[~is_bnd]
-        try:
-            bcells, par, n_slots, slots = cell_slots(cells_arr[is_bnd], *_ring_edges(rings))
-        except ValueError as e:
-            raise ValueError(f"region {reg['region_id']}: {e}") from None
-        live = (par == 1) | (n_slots > 0)
-        cells_all = np.concatenate([inner, bcells[live]])
-        slots_all = np.concatenate(
-            [np.tile(np.asarray(_SLOT_PAD), (inner.size, EDGE_SLOTS, 1)), slots[live]]
-        )
-        recs.append(
-            pd.DataFrame(
-                {
-                    "region_id": np.int64(reg["region_id"]),
-                    "res": C.cell_res(cells_all).astype(np.int32),
-                    "cell": cells_all,
-                    "_par": np.concatenate(
-                        [np.ones(inner.size, dtype=np.int32), par[live]]
-                    ),
-                    **dict(zip(SLOT_COLS, slots_all.reshape(-1, len(SLOT_COLS)).T)),
-                }
-            )
-        )
-    if not recs:
+    res = G.adaptive_cover_res(rings, RES_LO, RES_HI, TARGET_CELLS)
+    cells_arr, is_bnd = G.polygon_cover(rings, res, max_cells=TARGET_CELLS * 16)
+    inner = cells_arr[~is_bnd]
+    try:
+        bcells, par, n_slots, slots = cell_slots(cells_arr[is_bnd], *_ring_edges(rings))
+    except ValueError as e:
+        raise ValueError(f"region {region_id}: {e}") from None
+    live = (par == 1) | (n_slots > 0)
+    cells_all = np.concatenate([inner, bcells[live]])
+    slots_all = np.concatenate(
+        [np.tile(np.asarray(_SLOT_PAD), (inner.size, EDGE_SLOTS, 1)), slots[live]]
+    )
+    return pd.DataFrame(
+        {
+            "region_id": np.int64(region_id),
+            "res": C.cell_res(cells_all).astype(np.int32),
+            "cell": cells_all,
+            "_par": np.concatenate([np.ones(inner.size, dtype=np.int32), par[live]]),
+            **dict(zip(SLOT_COLS, slots_all.reshape(-1, len(SLOT_COLS)).T)),
+        }
+    )
+
+
+def build_cover(regions: list[dict]) -> pd.DataFrame:
+    """Driver-side cover build: cover_rows of every region, concatenated."""
+    if not regions:
         return pd.DataFrame(
             {
                 "region_id": pd.Series(dtype="int64"),
@@ -242,7 +244,10 @@ def build_cover(regions: list[dict]) -> pd.DataFrame:
                 **{c: pd.Series(dtype="float64") for c in SLOT_COLS},
             }
         )
-    return pd.concat(recs, ignore_index=True)
+    return pd.concat(
+        [cover_rows(reg["region_id"], normalized_rings(reg)) for reg in regions],
+        ignore_index=True,
+    )
 
 
 def refine_sql(lon: str, lat: str) -> str:
@@ -272,7 +277,7 @@ def pip_join(
     """points x regions -> rows of points inside each region.
 
     Exact even-odd membership, bit-equal to geometry.points_in_rings: the
-    broadcast join matches each point to the cover cells of its regions,
+    join matches each point to the cover cells of its regions,
     and one SQL predicate (refine_sql) over the cell's parity bit and edge
     slots (cell_slots) decides it inside whole-stage codegen — no Python.
 
@@ -280,10 +285,10 @@ def pip_join(
     k overlapping regions yields k rows (nested admin levels do overlap, as
     in the reference's relation hierarchy).
 
-    Dispatch: region sets whose cover exceeds ``MAX_BROADCAST_CELLS`` (or
-    whose size makes even building the cover on the driver unreasonable)
-    automatically take the shuffle-partitioned path (pip_join_partitioned) —
-    one entry point, physical strategy chosen from measured cover size.
+    Dispatch: a cover of more than ``MAX_BROADCAST_CELLS`` cells joins
+    through a cell-keyed shuffle instead of a broadcast, and a region list
+    too long to build its cover on the driver takes pip_join_partitioned —
+    one entry point, one refine, physical strategy chosen from cover size.
 
     ``coarse_prefilter``: add ONE coarse-ancestor InSet gate ahead of the
     multi-res explode — points whose coarse cell is not an ancestor of ANY
@@ -317,26 +322,46 @@ def pip_join(
             keep_cols=keep_cols, cell_cols=cell_cols,
         )
     cover_pdf = build_cover(regions)
-    if len(cover_pdf) > MAX_BROADCAST_CELLS:
-        return pip_join_partitioned(
-            spark, points, regions_to_df(spark, regions), lon=lon, lat=lat,
-            keep_cols=keep_cols, cell_cols=cell_cols,
-        )
-    if cover_pdf.empty:
-        out_cols = keep_cols or list(points.columns)
+    res_list = sorted(int(r) for r in cover_pdf["res"].unique())
+    return _cover_join(
+        points,
+        # without res, the join reads every cover column: a projection over
+        # the local relation would run row by row on the driver at planning
+        spark.createDataFrame(cover_pdf.drop(columns="res")) if res_list else None,
+        res_list,
+        lon, lat, keep_cols, cell_cols,
+        broadcast=len(cover_pdf) <= MAX_BROADCAST_CELLS,
+        prefilter_cells=cover_pdf["cell"].to_numpy() if coarse_prefilter else None,
+    )
+
+
+def _cover_join(
+    points: DataFrame,
+    cover: DataFrame | None,
+    res_list: list[int],
+    lon: str,
+    lat: str,
+    keep_cols: list[str] | None,
+    cell_cols: dict[int, str] | None,
+    broadcast: bool,
+    prefilter_cells: np.ndarray | None = None,
+) -> DataFrame:
+    """The probe -> join -> refine tail of both PIP paths: ``cover`` holds
+    cover rows (cover_rows, ``res`` optional) at the resolutions
+    ``res_list`` (no rows, and no cover needed, when it is empty);
+    ``prefilter_cells`` are its cells when pip_join's coarse_prefilter is
+    on."""
+    out_cols = keep_cols or list(points.columns)
+    if not res_list:
         return (
             points.select(*out_cols)
             .withColumn("region_id", F.lit(None).cast("long"))
             .where(F.lit(False))
         )
-    out_cols = keep_cols or [c for c in points.columns]
-
-    # ONE scan, ONE broadcast join, ONE refine — fused, because the source
-    # subtree is the expensive part (a 100 TB scan, or here heavy synthetic
+    # ONE scan, ONE join, ONE refine — fused, because the source subtree is
+    # the expensive part (a 100 TB scan, or here heavy synthetic
     # generation): a branch-per-stage union re-executes it per branch
     # (measured 1.6-1.8x total wall on the 500M-row headline).
-    res_list = [int(r) for r in sorted(cover_pdf["res"].unique())]
-    cov = spark.createDataFrame(cover_pdf.drop(columns="res"))
     # Materialize per-res cells as projected columns (single shared Morton
     # spread at res 26, per-res shift — cells.with_cell_columns) and explode
     # only the column references: Generate evaluates its expressions
@@ -351,10 +376,10 @@ def pip_join(
         )
         cell_cols.update(dict(zip(missing, new_names)))
     refs = [cell_cols[r] for r in res_list]
-    if coarse_prefilter:
+    if prefilter_cells is not None:
         base_res = min(res_list)
         pre_res = base_res
-        anc = {int(c) for c in C.cell_parent(cover_pdf["cell"].to_numpy(), pre_res)}
+        anc = {int(c) for c in C.cell_parent(prefilter_cells, pre_res)}
         # cap the InSet size by coarsening: a multi-thousand-literal isin()
         # spends minutes marshalling Columns through py4j and bloats the
         # generated code (the v_inset probe OOMed codegen near 4096
@@ -400,17 +425,19 @@ def pip_join(
         probe = probe.withColumn(
             "_cell", F.expr(f"explode(array({', '.join(map(C.sql_ident, refs))}))")
         ).drop(*new_names)
+    # MAX_BROADCAST_CELLS alone decides the broadcast: the shuffle_hash hint
+    # keeps Spark's own size threshold (static or AQE) from broadcasting a
+    # cover the caller judged too large.
+    cover = F.broadcast(cover) if broadcast else cover.hint("shuffle_hash")
     # Interior cells carry parity 1 and no slots, so their rows pass on the
     # parity bit alone (the X2 staging); boundary rows count crossings over
     # at most EDGE_SLOTS edges. The predicate spans both join sides, so the
-    # optimizer folds it into the broadcast hash join's condition.
-    cand = probe.join(F.broadcast(cov), probe["_cell"] == cov["cell"], "inner")
-    kept = cand.where(F.expr(refine_sql(lon, lat)))
-    return kept.select(*out_cols, "region_id")
+    # optimizer folds it into the join's condition.
+    cand = probe.join(cover, probe["_cell"] == cover["cell"], "inner")
+    return cand.where(F.expr(refine_sql(lon, lat))).select(*out_cols, "region_id")
 
 
 REGIONS_DF_SCHEMA = "region_id long, wkb binary"
-COVER_DF_SCHEMA = "region_id long, res int, cell long, is_boundary boolean"
 
 
 def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
@@ -418,41 +445,26 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
     used by the partitioned join path: geometry packed to a binary column
     (geometry.pack_rings — the WKB analogue; ragged nested arrays don't
     survive pyspark's Arrow->pandas conversion)."""
-    rows = [
-        (
-            int(reg["region_id"]),
-            G.pack_rings(
-                G.normalize_rings(
-                    FX.region_rings(reg) if "outer_rings" in reg else reg["rings"]
-                )
-            ),
-        )
-        for reg in regions
-    ]
+    rows = [(int(reg["region_id"]), G.pack_rings(normalized_rings(reg))) for reg in regions]
     return spark.createDataFrame(rows, REGIONS_DF_SCHEMA)
 
 
 def build_cover_df(regions_df: DataFrame) -> DataFrame:
-    """Distributed cover build: one mapInPandas pass over the region table —
-    each region's cover is independent, so this scales with #regions instead
-    of living on the driver (the large-boundary-set path)."""
+    """Distributed cover build: one mapInPandas pass over the region table
+    emitting cover_rows per region — each region's cover is independent, so
+    this scales with #regions instead of living on the driver (the
+    large-boundary-set path). Rings are split at the antimeridian here as on
+    the driver: a boundaries table may hold unsplit rings."""
 
     def gen(pdf_iter):
         for pdf in pdf_iter:
             for rid, blob in zip(pdf["region_id"], pdf["wkb"]):
-                rings_np = G.unpack_rings(bytes(blob))
-                res = G.adaptive_cover_res(rings_np, RES_LO, RES_HI, TARGET_CELLS)
-                cells_arr, is_bnd = G.polygon_cover(rings_np, res, max_cells=TARGET_CELLS * 16)
-                yield pd.DataFrame(
-                    {
-                        "region_id": np.int64(rid),
-                        "res": np.int32(res),
-                        "cell": cells_arr,
-                        "is_boundary": is_bnd,
-                    }
-                )
+                yield cover_rows(rid, G.normalize_rings(G.unpack_rings(bytes(blob))))
 
-    return regions_df.mapInPandas(gen, COVER_DF_SCHEMA)
+    schema = ", ".join(
+        ["region_id long", "res int", "cell long", "_par int", *(f"{c} double" for c in SLOT_COLS)]
+    )
+    return regions_df.mapInPandas(gen, schema)
 
 
 def pip_join_partitioned(
@@ -464,83 +476,42 @@ def pip_join_partitioned(
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
 ) -> DataFrame:
-    """Shuffle-partitioned PIP join — the fallback when the region set is too
-    large to broadcast (SURVEY.md J1 'range-partitioned fallback').
+    """PIP join over a distributed region table (``REGIONS_DF_SCHEMA``) —
+    the path for region sets too large to build on the driver (SURVEY.md J1
+    'range-partitioned fallback').
 
-    Same two-stage semantics as pip_join, different physical strategy:
-      cover built distributed (build_cover_df), candidates via a cell-keyed
-      shuffle join (AQE picks SMJ/SHJ; with a cell-bucketed fact table this
-      becomes co-located), exact refine via applyInPandas grouped by region —
-      each group carries its own rings through the join, no driver state,
-      no broadcast of geometry.
+    Same cover rows, join and refine as pip_join (cover_rows, refine_sql in
+    the join condition, no Python past the cover build); only the cover
+    build differs: one mapInPandas pass over the region table
+    (build_cover_df), so no geometry visits the driver. The cover is
+    broadcast when it has at most ``MAX_BROADCAST_CELLS`` cells, and joined
+    through a cell-keyed shuffle otherwise (with a cell-bucketed fact table
+    this becomes co-located).
 
-    The cover is localCheckpoint()ed: the interior/boundary branches cannot
-    share its exchange (the is_boundary filter pushes below the join and
-    makes their cover subtrees differ — verified: the un-checkpointed plan
-    rasterizes twice), and unlike persist() the checkpoint blocks are freed
-    by ContextCleaner when the DataFrame is garbage-collected, so repeated
-    calls in a long-lived session don't leak cache (the r1 persist did).
+    The cover is localCheckpoint()ed because the res/count probe below and
+    the join both read it: one rasterization serves both. Unlike persist(),
+    the checkpoint blocks are freed by ContextCleaner when the DataFrame is
+    garbage-collected, so repeated calls in a long-lived session don't leak
+    cache (the r1 persist did).
     """
-    out_cols = keep_cols or list(points.columns)
     # lazy: the probe aggregate below is the first action and materializes
     # the checkpoint — an eager one would pay a separate rasterization job
     # before it
     cover = build_cover_df(regions_df).localCheckpoint(eager=False)
     # ONE probe job yields both the distinct resolutions and the total cell
     # count. The count matters because a checkpointed cover has no Catalyst
-    # stats (LogicalRDD -> default huge size): without a hint the candidate
-    # join plans as SMJ and SHUFFLES the exploded fact side — measured 3x
-    # wall regression at 100M points x 256 regions (the 500M-row probe
-    # shuffle against a 7 MB cover). Broadcast when it fits; only genuinely
-    # giant covers pay the shuffle join.
-    probe_rows = cover.groupBy("res").agg(F.count(F.lit(1)).alias("_n")).collect()
-    res_rows = [r["res"] for r in probe_rows]
-    cover_small = sum(r["_n"] for r in probe_rows) <= BROADCAST_COVER_MAX_CELLS
-
-    cell_cols = dict(cell_cols or {})
-    missing = sorted(r for r in res_rows if r not in cell_cols)
-    probe, new_names = C.with_cell_columns(
-        points, lon, lat, missing, names=[f"_cell_r{r}" for r in missing]
+    # stats (LogicalRDD -> default huge size): without the broadcast hint the
+    # candidate join shuffles the exploded fact side — measured 3x wall
+    # regression at 100M points x 256 regions (the 500M-row probe shuffle
+    # against a 7 MB cover).
+    counts = cover.groupBy("res").agg(F.count(F.lit(1)).alias("_n")).collect()
+    return _cover_join(
+        points,
+        cover,
+        sorted(r["res"] for r in counts),
+        lon, lat, keep_cols, cell_cols,
+        broadcast=sum(r["_n"] for r in counts) <= MAX_BROADCAST_CELLS,
     )
-    cell_cols.update(dict(zip(missing, new_names)))
-    refs = [cell_cols[r] for r in sorted(res_rows)]
-    probe = probe.withColumn("_cell", F.explode(F.array(*refs))).drop(*new_names)
-    cov_sel = cover.select("cell", "region_id", "is_boundary")
-    if cover_small:
-        cov_sel = F.broadcast(cov_sel)
-    cand = probe.join(cov_sel, probe["_cell"] == F.col("cell"), "inner")
-
-    interior = cand.where(~F.col("is_boundary")).select(*out_cols, "region_id")
-    boundary = cand.where(F.col("is_boundary")).join(regions_df, "region_id")
-
-    carry = list(dict.fromkeys([*out_cols, lon, lat]))
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in boundary.select(*carry, "region_id").schema.fields
-    )
-
-    def refine(key, pdf):
-        rings_np = G.unpack_rings(bytes(pdf["wkb"].iloc[0]))
-        inside = G.points_in_rings(
-            pdf[lon].to_numpy(dtype=np.float64), pdf[lat].to_numpy(dtype=np.float64), rings_np
-        )
-        return pdf.loc[inside, [*carry, "region_id"]]
-
-    # SALTED group key: grouping by bare region_id would put every boundary
-    # candidate of a region through ONE task — a country-sized boundary
-    # crossing a metro cluster (10^8+ candidates at 10^12 points) serializes
-    # the refine stage (VERDICT r2 weak #2). Salting on a hash of the cell id
-    # fans each region into up to REFINE_SALT tasks; the rings are a
-    # per-region CONSTANT carried on every row by the regions_df join, so
-    # every salted group still unpacks them independently. Candidates of one
-    # cell stay together (pmod of the same hash), keeping groups coherent.
-    salt = F.pmod(F.xxhash64(F.col("_cell")), F.lit(REFINE_SALT))
-    refined = (
-        boundary.withColumn("_salt", salt)
-        .groupBy("region_id", "_salt")
-        .applyInPandas(refine, out_schema)
-    )
-    return interior.unionByName(refined.select(*out_cols, "region_id"))
 
 
 def pip_join_bbox_prefilter(
@@ -548,18 +519,11 @@ def pip_join_bbox_prefilter(
 ) -> DataFrame:
     """Cheap global bbox pre-filter (union of region bboxes) to push into the
     parquet scan ahead of pip_join — the reference's conjunctive
-    boundary-AND-bbox predicate (settings.py:132-140, SURVEY.md P1)."""
-    cond = None
+    boundary-AND-bbox predicate (settings.py:132-140, SURVEY.md P1). ONE
+    SQL predicate, ``D``-suffixed double literals."""
+    x, y = C.sql_ident(lon), C.sql_ident(lat)
+    boxes = []
     for reg in regions:
-        rings = G.normalize_rings(
-            [np.asarray(r) for r in (FX.region_rings(reg) if "outer_rings" in reg else reg["rings"])]
-        )
-        x0, y0, x1, y1 = G.polygon_bbox(rings)
-        c = (
-            (F.col(lon) >= x0)
-            & (F.col(lon) <= x1)
-            & (F.col(lat) >= y0)
-            & (F.col(lat) <= y1)
-        )
-        cond = c if cond is None else (cond | c)
-    return points.where(cond) if cond is not None else points
+        x0, y0, x1, y1 = (float(v) for v in G.polygon_bbox(normalized_rings(reg)))
+        boxes.append(f"({x} >= {x0!r}D AND {x} <= {x1!r}D AND {y} >= {y0!r}D AND {y} <= {y1!r}D)")
+    return points.where(F.expr(" OR ".join(boxes))) if boxes else points

@@ -85,13 +85,12 @@ def region_tiles(regions: list[dict], z: int) -> pd.DataFrame:
     (the full tile RANGE from the cell's bounds — a cell coarser than a tile
     spans several tiles, and a center-only mapping would silently drop the
     others)."""
-    from ..sources import fixtures as FX
+    from .spatial_join import normalized_rings
 
     rows = []
     eps = 1e-9
     for reg in regions:
-        rings = FX.region_rings(reg) if "outer_rings" in reg else reg["rings"]
-        rings = G.normalize_rings([np.asarray(r, dtype=np.float64) for r in rings])
+        rings = normalized_rings(reg)
         res = G.adaptive_cover_res(rings, res_lo=max(z - 1, 1), res_hi=z + 2, target_cells=8192)
         cells_arr, _ = G.polygon_cover(rings, res, max_cells=131072)
         from ..functions import cells as C

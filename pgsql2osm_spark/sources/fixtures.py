@@ -5,7 +5,7 @@ Generates the three fixture tables at any scale:
 * ``images``        — the fact table per BASELINE.json input_hint:
   (image_id, bytes, w, h, fmt, caption, phash) + geotag (lon, lat). Skew is
   built in: 20% of points cluster in 3 dense "metro" disks — the skew driver
-  for salting/adaptive-split tests (SURVEY.md X1).
+  for skew/adaptive-split tests (SURVEY.md X1).
 * ``admin_polygons``— nested boundary dimension (level-2 parents containing
   level-4 children, with holes) — the analogue of the reference's negative-id
   multipolygon relations (/root/reference/pgsql2osm/settings.py:120-126).

@@ -49,41 +49,41 @@ def tile_count_stream(
     ).agg(F.count(F.lit(1)).alias("n"))
 
 
+# Shuffle partitions of run_bounded_replay's stateful aggregation.
+STATE_PARTITIONS = 8
+
+
 def run_bounded_replay(
     spark,
     input_dir: str,
     checkpoint_dir: str,
     out_table: str,
     z: int = 12,
-    state_partitions: int | None = None,
 ):
     """Replay a bounded parquet directory as a stream (availableNow) into an
     in-memory sink — the deterministic test/demo harness for the streaming
     path; checkpointing makes a second run resume with no duplicate output
     (the streaming face of the engine's resume story).
 
-    ``state_partitions`` sizes the stateful aggregation's shuffle — and
+    ``STATE_PARTITIONS`` sizes the stateful aggregation's shuffle — and
     therefore the STATE STORE instance count, pinned into the checkpoint
     for the query's lifetime. Each state partition costs a store instance
     plus delta/snapshot files per micro-batch, so it should track the
     stateful key cardinality, not the session's scan parallelism: the
     session default (2 x cores) spends most of its wall on empty-state
     bookkeeping for small key sets (measured: 64 -> 8 partitions cuts the
-    bounded replay's state-task count 8x at identical output). Default 8
-    here (tile-key replays are small); override per deployment via
-    SPARK_GRAFT_STREAM_STATE_PARTS or the argument — a planet-scale tile
-    stream wants it near the cluster's core count."""
-    import os
+    bounded replay's state-task count 8x at identical output). A
+    planet-scale tile stream wants it near the cluster's core count.
 
+    The value reaches the stream through a temporary swap of the session's
+    ``spark.sql.shuffle.partitions``, restored on exit: this assumes no
+    other thread plans a query on the session during the replay."""
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    n_parts = state_partitions or int(
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
-    )
     stream = spark.readStream.schema(
         "ts timestamp, lon double, lat double"
     ).parquet(input_dir)
     agg = tile_count_stream(stream, z=z)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             agg.writeStream.outputMode("complete")

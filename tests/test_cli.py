@@ -313,9 +313,9 @@ def test_cli_continent_nested_province_and_hole(spark, continent, tmp_path):
 
 def test_continent_partitioned_pip_all_regions(spark, continent):
     """The full 53-region table through pip_join_partitioned in one pass
-    (cover built distributed, salted refine): per-region membership equals
-    the numpy even-odd oracle for every region incl. the two-ring dateline
-    geometries."""
+    (cover built distributed, refine in the join condition): per-region
+    membership equals the numpy even-odd oracle for every region incl. the
+    two-ring dateline geometries."""
     from pgsql2osm_spark.operators import spatial_join as SJ
 
     from pyspark.sql import functions as F

@@ -26,13 +26,15 @@ MAX_PY_STAGES = {
     "minhash_pairs": 1,
     "phash_near_dups": 0,
     "s2_encode": 1,
-    # the broadcast PIP refine is a codegen predicate and knn_rings runs
-    # JVM-side: no Python stage
+    # both PIP paths refine with a codegen predicate (the partitioned
+    # cover's mapInPandas runs before, into a checkpoint) and knn_rings
+    # runs JVM-side: no Python stage
     "pip_convex": 0,
     "pip_fixture_regions": 0,
+    "pip_partitioned_fixture": 0,
     "knn_rings_fixture": 0,
 }
-DEFAULT_MAX_PY = 4  # partitioned-PIP cover + refine seams etc.
+DEFAULT_MAX_PY = 4  # any other query
 
 
 @pytest.mark.parametrize("name", sorted(E.queries()))

@@ -120,9 +120,40 @@ def test_pip_join_auto_dispatches_to_partitioned(spark, monkeypatch, caplog):
     assert "taking the partitioned path" in records[0].getMessage()
     got_set = {(int(r["idx"]), int(r["region_id"])) for r in got.collect()}
     assert got_set == oracle_assignments(lon, lat, regions)
-    # and the plan is the shuffle shape (applyInPandas refine), not broadcast
+    # and the plan is the partitioned shape: the checkpointed distributed
+    # cover (Scan ExistingRDD; the broadcast path scans a LocalTableScan)
+    # joined through a shuffle, since 100 cells is below its cover too
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan or "SortMergeJoin" in plan, plan
+    assert "Scan ExistingRDD" in plan and "BroadcastHashJoin" not in plan, plan
+
+
+def test_pip_join_post_build_fallback_shuffles_driver_cover(spark, monkeypatch):
+    """A cover that passes the pre-estimate but is found above
+    MAX_BROADCAST_CELLS once built joins through a cell-keyed shuffle of
+    that same driver-built cover: no broadcast, no distributed rebuild."""
+    regions = [{
+        "region_id": 1,
+        "outer_rings": [np.array([[0.0, 0.0], [20.0, 0.0], [20.0, 10.0], [0.0, 10.0]])],
+        "inner_rings": [np.array([[5.0, 3.0], [8.0, 3.0], [8.0, 6.0], [5.0, 6.0]])],
+    }]
+    limit = len(regions) * SJ.TARGET_CELLS // 2  # the pre-estimate passes
+    assert len(SJ.build_cover(regions)) > limit
+    monkeypatch.setattr(SJ, "MAX_BROADCAST_CELLS", limit)
+
+    def no_distributed_build(*args, **kwargs):
+        raise AssertionError("build_cover_df called")
+
+    monkeypatch.setattr(SJ, "build_cover_df", no_distributed_build)
+    n = 3000
+    rng = np.random.default_rng(51)
+    lon, lat = rng.uniform(-1.0, 21.0, n), rng.uniform(-1.0, 11.0, n)
+    pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
+    out = SJ.pip_join(spark, pts, regions, keep_cols=["idx"])
+    got = {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}
+    exp = oracle_assignments(lon, lat, regions)
+    assert got == exp and len(exp) > 1000
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan and "ShuffledHashJoin" in plan, plan
 
 
 def test_antimeridian_crossing_region(spark):
@@ -148,14 +179,17 @@ def test_antimeridian_crossing_region(spark):
         for i in np.nonzero((slon >= 170) & (slon <= 190) & (lat >= 10) & (lat <= 20))[0]
     }
     assert got == expected
-    # partitioned path agrees too
-    got2 = {
-        r["idx"]
-        for r in SJ.pip_join_partitioned(
-            spark, pts, SJ.regions_to_df(spark, region), keep_cols=["idx"]
-        ).collect()
-    }
-    assert got2 == expected
+    # partitioned path agrees too, also from a region table holding the
+    # unsplit ring (a boundaries parquet need not be split)
+    for regions_df in (
+        SJ.regions_to_df(spark, region),
+        spark.createDataFrame([(9, G.pack_rings([ring]))], SJ.REGIONS_DF_SCHEMA),
+    ):
+        got2 = {
+            r["idx"]
+            for r in SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"]).collect()
+        }
+        assert got2 == expected
     # normalize_rings itself: two parts, each within [-180, 180]
     parts = G.normalize_rings([ring])
     assert len(parts) == 2
@@ -163,18 +197,16 @@ def test_antimeridian_crossing_region(spark):
         assert p[:, 0].min() >= -180.0 and p[:, 0].max() <= 180.0
 
 
-def test_partitioned_refine_salted_groups(spark):
-    """Skew guard on the partitioned path's exact-refine stage: ONE region
-    holding all boundary candidates fans out to multiple applyInPandas
-    groups via the (region_id, salt) key — not one serialized task
-    (VERDICT r2 weak #2) — and the salted output stays exactly correct."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def test_partitioned_refine_boundary_skew_without_python(spark):
+    """Skew case of the partitioned path: ONE region holding all boundary
+    candidates (the metro-on-the-border scenario, VERDICT r2 weak #2). The
+    exact refine is a per-row predicate in the join condition, so no
+    grouped Python stage is left to serialize them — and the output stays
+    exactly correct."""
     n = 4000
     regions = FX.gen_admin_polygons(3)[:1]  # single region = worst skew
     # concentrate the points on the region's own bbox so its boundary cells
-    # hold many candidates (the metro-on-the-border scenario)
+    # hold many candidates
     rings = G.normalize_rings(FX.region_rings(regions[0]))
     x0, y0, x1, y1 = G.polygon_bbox(rings)
     rng = np.random.default_rng(31)
@@ -183,27 +215,11 @@ def test_partitioned_refine_salted_groups(spark):
     pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
     regions_df = SJ.regions_to_df(spark, regions)
     out = SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"])
-    # correctness unchanged under salting
     got = {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}
     assert got == oracle_assignments(lon, lat, regions)
-    # the grouping key of the pandas refine includes the salt column
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "_salt" in plan and "FlatMapGroupsInPandas" in plan
-    # and the single region's boundary candidates actually spread over
-    # several salted groups (the whole point of the salt)
-    from pgsql2osm_spark.functions import cells as C
-
-    cover = SJ.build_cover_df(regions_df)
-    res = [r["res"] for r in cover.select("res").distinct().collect()]
-    probe, names = C.with_cell_columns(pts, "lon", "lat", sorted(res))
-    probe = probe.withColumn("_cell", F.explode(F.array(*names)))
-    n_groups = (
-        probe.join(cover.where(F.col("is_boundary")), probe["_cell"] == F.col("cell"))
-        .select(F.pmod(F.xxhash64(probe["_cell"]), F.lit(SJ.REFINE_SALT)).alias("s"))
-        .distinct()
-        .count()
-    )
-    assert n_groups >= 4, f"salt fan-out too low: {n_groups}"
+    for node in ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas"):
+        assert node not in plan, plan
 
 
 def test_pip_join_refine_matches_oracle_without_python(spark):

@@ -33,7 +33,10 @@ def main() -> int:
     n = df.count()
     print(f"entry smoke: {n} rows, schema {df.schema.simpleString()}")
     spark.stop()
-    return 0 if n >= 0 else 1
+    if n > 0:
+        return 0
+    print(f"entry smoke FAILED: entry() returned {n} rows", file=sys.stderr)
+    return 1
 
 
 if __name__ == "__main__":
