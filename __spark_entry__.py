@@ -110,24 +110,15 @@ def q_tile_assign(spark, sf_dir):
 
 
 def q_pip_convex(spark, sf_dir):
-    """J1/X2: full two-stage PIP join against a convex hexagon boundary.
-
-    coarse_prefilter=True (VERDICT r4 #4): the source is a REAL parquet
-    scan (customer.parquet), so the coarse-ancestor InSet prefilter lands
-    as a codegen Filter directly above the FileSourceScan — points outside
-    the hexagon's coarse footprint die before the 5-res explode and the
-    broadcast-hash probe, the right 100 TB shape. Output is identical by
-    construction (the prefilter passes an exact superset of matches; the
-    SQL oracle pins it). tests/test_plan_lint.py asserts the InSet is in
-    this query's physical plan."""
+    """J1/X2: full two-stage PIP join against a convex hexagon boundary,
+    over a real parquet scan (customer.parquet). tests/test_plan_lint.py
+    asserts the scan carries no cell math."""
     from pgsql2osm_spark.operators import spatial_join as SJ
     import numpy as np
 
     p = _points(spark, sf_dir)
     region = [{"region_id": 1, "rings": [np.asarray(_HEX, dtype=np.float64)]}]
-    out = SJ.pip_join(
-        spark, p, region, keep_cols=["id"], coarse_prefilter=True,
-    )
+    out = SJ.pip_join(spark, p, region, keep_cols=["id"])
     return out.select("id").transform(_psort, "id")
 
 
@@ -719,16 +710,7 @@ def q_pip_fixture_regions(spark, sf_dir):
     """Full spatial path on fixture images x nested fixture polygons
     (multi-res cover, holes, boundary refine) — golden-tested in
     tests/test_spatial_join.py; golden oracle verified vs an
-    independent even-odd implementation.
-
-    coarse_prefilter=True (VERDICT r4 #4): this query's source is
-    scan-shaped (a plain in-memory table, not the bench's fused synthetic
-    generator), so the res-7 ancestor InSet lands INSIDE whole-stage
-    codegen without tripping janino's 64KB cliff — the right 100 TB shape
-    (most of the planet dies before the explode and the hash probe).
-    Output is identical by construction (the prefilter is an exact
-    superset of matches); tests/test_plan_lint.py asserts the InSet is in
-    the plan and tests/test_codegen_health.py asserts the stage compiles."""
+    independent even-odd implementation."""
     import pandas as pd
 
     from pgsql2osm_spark.operators import spatial_join as SJ
@@ -739,10 +721,7 @@ def q_pip_fixture_regions(spark, sf_dir):
     pts = spark.createDataFrame(
         pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
     )
-    out = SJ.pip_join(
-        spark, pts, FX.gen_admin_polygons(12), keep_cols=["image_id"],
-        coarse_prefilter=True,
-    )
+    out = SJ.pip_join(spark, pts, FX.gen_admin_polygons(12), keep_cols=["image_id"])
     return out.groupBy("region_id").agg(F.count(F.lit(1)).alias("n")).transform(_psort, "region_id")
 
 
@@ -762,7 +741,7 @@ def q_pip_partitioned_fixture(spark, sf_dir):
         pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
     )
     rdf = SJ.regions_to_df(spark, FX.gen_admin_polygons(12))
-    out = SJ.pip_join_partitioned(spark, pts, rdf, keep_cols=["image_id"])
+    out = SJ.pip_join_partitioned(pts, rdf, keep_cols=["image_id"])
     return out.groupBy("region_id").agg(F.count(F.lit(1)).alias("n")).transform(_psort, "region_id")
 
 

@@ -265,7 +265,7 @@ def main(argv=None, spark=None) -> int:
         # PIP path builds the cover with mapInPandas, broadcasts it when
         # small, and refines in the join condition like pip_join
         # (spatial_join.pip_join_partitioned)
-        joined = SJ.pip_join_partitioned(spark, pts, regions_df)
+        joined = SJ.pip_join_partitioned(pts, regions_df)
     else:
         joined = SJ.pip_join(
             spark, SJ.pip_join_bbox_prefilter(pts, region_list), region_list

@@ -17,8 +17,6 @@ Scale shapes:
 
 from __future__ import annotations
 
-import logging
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -26,8 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .text import fingerprint_col
-
-_LOG = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Exact dedup.
@@ -112,7 +108,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_k: int = 5,
     max_bucket: int | None = 65536,
-    log_shed: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash LSH.
 
@@ -125,9 +120,7 @@ def minhash_lsh_candidates(
     pairs; a boilerplate-heavy band digest shared by 1% of a 10^12 corpus
     would otherwise be a quadratic explosion). Dropped buckets are
     non-discriminative by definition — a pair sharing one is overwhelmingly
-    likely to share a smaller one too; pass None to disable the cap, or
-    ``log_shed=True`` to warn (one small extra job) when buckets were
-    actually dropped."""
+    likely to share a smaller one too; pass None to disable the cap."""
     rows_per_band = n_hashes // bands
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -160,13 +153,6 @@ def minhash_lsh_candidates(
         )
         # the oversized list is tiny by construction (each entry represents
         # > max_bucket docs) — broadcast anti-join keeps banded unshuffled
-        if log_shed:
-            n_shed = oversized.count()
-            if n_shed:
-                _LOG.warning(
-                    "minhash LSH: shed %d bucket(s) larger than max_bucket=%d",
-                    n_shed, max_bucket,
-                )
         banded = banded.join(F.broadcast(oversized), ["band", "digest"], "left_anti")
     a = banded.alias("a")
     b = banded.alias("b")
@@ -256,7 +242,7 @@ def simhash_fast_col(text: str = "text") -> F.Column:
 
 def _banded_hamming_pairs(
     hashed: DataFrame, hash_col: str, id_col: str, max_hamming: int, total_bits: int = 64,
-    max_bucket: int | None = 65536, log_shed: bool = False,
+    max_bucket: int | None = 65536,
     group_col: str | None = None,
 ) -> DataFrame:
     """Complete near-dup candidate generation for ``total_bits``-wide hashes:
@@ -281,10 +267,6 @@ def _banded_hamming_pairs(
     every matching band, which is exactly the non-discriminative boilerplate
     the cap exists to shed (true hash-identical floods still surface through
     exact_dedup). Pass None to restore unconditional completeness.
-
-    ``log_shed=True`` additionally counts the shed buckets per band and
-    emits a WARNING when any were dropped (one extra small aggregate job —
-    opt-in, per the repo's no-silent-caps convention).
 
     ``group_col`` names an optional pre-existing column that must ALSO match
     for rows to be candidates (e.g. an LSH table index when the caller
@@ -352,14 +334,6 @@ def _banded_hamming_pairs(
         )
         # tiny by construction (each entry stands for > max_bucket rows):
         # broadcast anti-join, the banded side never shuffles
-        if log_shed:
-            shed = oversized.groupBy("_bi").agg(F.count(F.lit(1)).alias("_n")).collect()
-            for r in shed:
-                _LOG.warning(
-                    "%s band %d: shed %d bucket(s) larger than max_bucket=%d "
-                    "(recall is conditional for rows confined to shed buckets)",
-                    hash_col, r["_bi"], r["_n"], max_bucket,
-                )
         h = h.join(F.broadcast(oversized), key, "left_anti")
     a, b = h.alias("a"), h.alias("b")
     cand = a.join(
@@ -378,7 +352,7 @@ def _banded_hamming_pairs(
 
 def simhash_near_dups(
     df: DataFrame, text: str = "text", id_col: str = "doc_id", max_hamming: int = 3,
-    max_bucket: int | None = 65536, drop_empty: bool = True, log_shed: bool = False,
+    max_bucket: int | None = 65536, drop_empty: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash — CONDITIONALLY complete recall at the
     given radius: banded multi-table candidate generation + exact hamming
@@ -386,8 +360,7 @@ def simhash_near_dups(
     bucket exceeds ``max_bucket`` rows (the default 65536 sheds degenerate
     boilerplate buckets; such pairs are indistinguishable from >max_bucket
     other rows in all matching bands). Pass ``max_bucket=None`` for the
-    unconditional pigeonhole guarantee, or ``log_shed=True`` to surface
-    when buckets were actually dropped (see _banded_hamming_pairs).
+    unconditional pigeonhole guarantee (see _banded_hamming_pairs).
 
     ``drop_empty`` excludes zero-token documents before banding: every empty
     doc simhashes to 0 (no signal), so at corpus scale they form one
@@ -396,9 +369,7 @@ def simhash_near_dups(
     if drop_empty:
         df = df.where(F.length(F.trim(F.col(text))) > 0)
     sh = df.select(F.col(id_col), simhash_fast_col(text).alias("simhash"))
-    return _banded_hamming_pairs(
-        sh, "simhash", id_col, max_hamming, max_bucket=max_bucket, log_shed=log_shed
-    )
+    return _banded_hamming_pairs(sh, "simhash", id_col, max_hamming, max_bucket=max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -438,8 +409,7 @@ def word_jaccard_pairs(
 
 
 def phash_near_dups(
-    images: DataFrame, max_hamming: int = 6, max_bucket: int | None = 65536,
-    log_shed: bool = False,
+    images: DataFrame, max_hamming: int = 6, max_bucket: int | None = 65536
 ) -> DataFrame:
     """Near-duplicate images by perceptual hash — banded candidate
     generation over the phash column of the input_hint schema, with recall
@@ -447,8 +417,6 @@ def phash_near_dups(
     ``max_bucket`` rows (degenerate buckets: uniform images — black frames,
     test cards — collapse to one phash and are shed; see
     _banded_hamming_pairs). ``max_bucket=None`` restores the unconditional
-    guarantee; ``log_shed=True`` warns when buckets were dropped."""
+    guarantee."""
     ph = images.select("image_id", "phash")
-    return _banded_hamming_pairs(
-        ph, "phash", "image_id", max_hamming, max_bucket=max_bucket, log_shed=log_shed
-    )
+    return _banded_hamming_pairs(ph, "phash", "image_id", max_hamming, max_bucket=max_bucket)

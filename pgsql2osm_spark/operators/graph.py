@@ -15,10 +15,6 @@ loop stops at the fixpoint (no label changed) or ``max_iter``. Each round
 also pointer-jumps (label <- label(label)), so rounds needed are
 O(log diameter), not O(diameter); near-dup graphs are shallow anyway
 (clusters are quasi-cliques) and converge in a handful of rounds.
-For adversarially deep graphs pass method='star': alternating
-large-star/small-star contraction (Kiveris et al., "Connected Components in
-MapReduce and Beyond"), which converges in O(log^2 n) rounds — same join
-shapes, more bookkeeping per round.
 """
 
 from __future__ import annotations
@@ -32,21 +28,11 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    method: str = "label",
 ) -> DataFrame:
     """(v, component) for every vertex in ``edges``; component = min vertex
     id reachable from v. Deterministic, order-independent (SURVEY.md O1).
-
-    method='label' (default) is min-label propagation with per-round
-    pointer jumping — O(log diameter) rounds, the right shape for near-dup
-    graphs. method='star' is the alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — O(log^2 n) rounds with contracting edge volume, the escape
-    hatch when the EDGE SET itself is too large to rejoin every round."""
-    if method == "star":
-        return _connected_components_star(edges, src, dst, max_iter)
-    if method != "label":
-        raise ValueError(f"unknown method {method!r}")
+    Min-label propagation with per-round pointer jumping: O(log diameter)
+    rounds."""
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -117,89 +103,9 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} iterations "
             "(labels still changing — with pointer jumping that implies "
-            "diameter > 2^max_iter; raise max_iter, or use method='star')"
+            "diameter > 2^max_iter; raise max_iter)"
         )
     return labels.select(F.col("v"), F.col("label").alias("component"))
-
-
-def _connected_components_star(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star contraction.
-
-    Per round (Kiveris et al.): large-star connects every neighbor v > u to
-    m = min(N(u) ∪ {u}); small-star directs each edge max->min, then
-    connects every smaller neighbor (and u itself) to the group minimum.
-    The edge set monotonically contracts toward per-component stars rooted
-    at the component minimum; fixpoint reached in O(log^2 n) rounds.
-
-    Convergence detect: a round that reproduces the same edge set (count +
-    modular hash-sum signature — pmod keeps the ANSI sum far from int64
-    overflow up to ~4e9 edges) is the fixpoint — stars map to themselves
-    under both operations. Raises past max_iter like the label variant."""
-    verts = (
-        edges.select(F.col(src).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_sig, converged = None, False
-    for _ in range(max_iter):
-        # --- large-star ---
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
-        mins = mins.select("u", F.least(F.col("u"), F.col("_mn")).alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # --- small-star ---
-        dire = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins2 = dire.groupBy("u").agg(F.min("v").alias("m"))
-        j = dire.join(mins2, "u")
-        small = (
-            j.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(j.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)  # truncate per-round lineage
-        )
-        row = small.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 31))).alias("h"),
-        ).collect()[0]
-        sig = (row["n"], row["h"])
-        e = small
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds — "
-            "O(log^2 n) bound implies a far smaller round count; "
-            "raise max_iter"
-        )
-    # fixpoint edges are (member, root) stars; roots + isolated vertices
-    # label themselves
-    labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
-        F.col("u").alias("v"), "component"
-    )
-    roots = verts.join(labels, "v", "left_anti").select(
-        "v", F.col("v").alias("component")
-    )
-    return labels.unionByName(roots)
 
 
 def dedup_clusters(

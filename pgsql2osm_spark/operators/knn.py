@@ -173,7 +173,7 @@ def knn_rings(
     #3': the single-level collect is bounded by 4^res): a coarse probe at
     res 8 (<= 65,536 rows) first computes per-query coarse candidate
     masks; the fine probe then aggregates ONLY cells whose res-8 parent is
-    in the union of kept coarse cells (cells.cell_parent_expr + InSet —
+    in the union of kept coarse cells (cells.cell_parent_expr + IN-list —
     the fact table still never shuffles), with the fine collect bounded a
     priori by sum(min(4^(res-8), n_coarse)) over kept coarse cells and
     guarded by ``max_fine_cells``. Correctness: a fine cell outside every
@@ -200,13 +200,11 @@ def knn_rings(
     pts = points.withColumn("_cell", C.cell_expr(F.col("lon"), F.col("lat"), res))
     fine = pts
     if res > COARSE_PROBE_RES:
-        coarse_pdf = (
-            pts.withColumn(
-                "_ccell", C.cell_parent_expr(F.col("_cell"), res, COARSE_PROBE_RES)
-            )
-            .groupBy("_ccell").agg(F.count(F.lit(1)).alias("n")).toPandas()
+        coarse = pts.withColumn(
+            "_pcell", C.cell_parent_expr(F.col("_cell"), res, COARSE_PROBE_RES)
         )
-        ccells = coarse_pdf["_ccell"].to_numpy(dtype=np.int64)
+        coarse_pdf = coarse.groupBy("_pcell").agg(F.count(F.lit(1)).alias("n")).toPandas()
+        ccells = coarse_pdf["_pcell"].to_numpy(dtype=np.int64)
         ccounts = coarse_pdf["n"].to_numpy(dtype=np.int64)
         if len(ccells) == 0:
             return spark.createDataFrame([], out_schema)
@@ -222,10 +220,10 @@ def knn_rings(
                 f"fine probe could collect up to {bound} cells at res {res} "
                 f"(> max_fine_cells={max_fine_cells}); lower res or raise the cap"
             )
-        kept_coarse = [int(c) for c in ccells[union]]
-        fine = pts.where(
-            C.cell_parent_expr(F.col("_cell"), res, COARSE_PROBE_RES).isin(kept_coarse)
-        )
+        # one F.expr for the whole IN-list: Column.isin costs one py4j round
+        # trip per literal (up to 65,536 here)
+        kept_coarse = ",".join(str(int(c)) for c in ccells[union])
+        fine = coarse.where(F.expr(f"_pcell IN ({kept_coarse})"))
     counts_pdf = fine.groupBy("_cell").agg(F.count(F.lit(1)).alias("n")).toPandas()
     cells = counts_pdf["_cell"].to_numpy(dtype=np.int64)
     counts = counts_pdf["n"].to_numpy(dtype=np.int64)

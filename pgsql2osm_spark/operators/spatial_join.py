@@ -60,8 +60,6 @@ TARGET_CELLS = 4096
 # Both PIP paths broadcast a cover of at most this many cells and shuffle
 # a larger one (a cover row is 44 columns, ~344 B: ~690 MB at the limit).
 MAX_BROADCAST_CELLS = 2_000_000
-# coarse_prefilter coarsens its ancestor InSet until it fits this size.
-MAX_PREFILTER_CELLS = 512
 
 # The exact refine reads at most this many edges per cover cell (the slot
 # columns of the cover); cell_slots splits a cell that needs more.
@@ -272,7 +270,6 @@ def pip_join(
     lat: str = "lat",
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
-    coarse_prefilter: bool = False,
 ) -> DataFrame:
     """points x regions -> rows of points inside each region.
 
@@ -289,21 +286,6 @@ def pip_join(
     through a cell-keyed shuffle instead of a broadcast, and a region list
     too long to build its cover on the driver takes pip_join_partitioned —
     one entry point, one refine, physical strategy chosen from cover size.
-
-    ``coarse_prefilter``: add ONE coarse-ancestor InSet gate ahead of the
-    multi-res explode — points whose coarse cell is not an ancestor of ANY
-    cover cell (an exact superset of matches) emit a single null row that
-    dies at the join instead of 5 exploded probes. The ancestor set is
-    capped at ``MAX_PREFILTER_CELLS`` by coarsening (a multi-thousand-
-    literal InSet costs minutes of py4j marshalling and bloats codegen).
-    OPT-IN, workload-dependent (r5 measurements, BENCH/PLANS.md): it wins
-    when the per-candidate work downstream dominates (probe/refine-heavy
-    pipelines — the generator-shaped bench decomposition localized its
-    cost there) and is neutral-to-negative on decode-bound light scans
-    where the parquet read is the bottleneck. The implementation is
-    shape-critical: see the in-body comment on why it must be a when-gated
-    explode_outer rather than a .where() (predicate/infer pushdown would
-    re-evaluate the whole cell expression inside the scan, measured 17x).
     """
     # cheap pre-estimate: covers average ~TARGET_CELLS per region by
     # construction (adaptive_cover_res aims at TARGET_CELLS), so a huge
@@ -318,7 +300,7 @@ def pip_join(
             len(regions), TARGET_CELLS, 2 * MAX_BROADCAST_CELLS,
         )
         return pip_join_partitioned(
-            spark, points, regions_to_df(spark, regions), lon=lon, lat=lat,
+            points, regions_to_df(spark, regions), lon=lon, lat=lat,
             keep_cols=keep_cols, cell_cols=cell_cols,
         )
     cover_pdf = build_cover(regions)
@@ -331,7 +313,6 @@ def pip_join(
         res_list,
         lon, lat, keep_cols, cell_cols,
         broadcast=len(cover_pdf) <= MAX_BROADCAST_CELLS,
-        prefilter_cells=cover_pdf["cell"].to_numpy() if coarse_prefilter else None,
     )
 
 
@@ -344,13 +325,10 @@ def _cover_join(
     keep_cols: list[str] | None,
     cell_cols: dict[int, str] | None,
     broadcast: bool,
-    prefilter_cells: np.ndarray | None = None,
 ) -> DataFrame:
     """The probe -> join -> refine tail of both PIP paths: ``cover`` holds
     cover rows (cover_rows, ``res`` optional) at the resolutions
-    ``res_list`` (no rows, and no cover needed, when it is empty);
-    ``prefilter_cells`` are its cells when pip_join's coarse_prefilter is
-    on."""
+    ``res_list`` (no rows, and no cover needed, when it is empty)."""
     out_cols = keep_cols or list(points.columns)
     if not res_list:
         return (
@@ -376,55 +354,9 @@ def _cover_join(
         )
         cell_cols.update(dict(zip(missing, new_names)))
     refs = [cell_cols[r] for r in res_list]
-    if prefilter_cells is not None:
-        base_res = min(res_list)
-        pre_res = base_res
-        anc = {int(c) for c in C.cell_parent(prefilter_cells, pre_res)}
-        # cap the InSet size by coarsening: a multi-thousand-literal isin()
-        # spends minutes marshalling Columns through py4j and bloats the
-        # generated code (the v_inset probe OOMed codegen near 4096
-        # entries). Each level up shrinks the set ~4x and keeps the filter
-        # an exact superset of matches.
-        while len(anc) > MAX_PREFILTER_CELLS and pre_res > 1:
-            pre_res -= 1
-            anc = {
-                int(c)
-                for c in C.cell_parent(np.fromiter(anc, dtype=np.int64), pre_res)
-            }
-        pre_col = (
-            F.col(cell_cols[base_res])
-            if pre_res == base_res
-            else C.cell_parent_expr(F.col(cell_cols[base_res]), base_res, pre_res)
-        )
-        # WHEN-GATED explode_outer, NOT a .where(): a Filter operator gets
-        # predicate-pushed below the cell projections with the whole
-        # morton-spread subtree SUBSTITUTED into the scan's DataFilters,
-        # re-evaluated per row outside codegen — measured 17x slower at
-        # 20M scan rows. A plain explode is no better: Spark's
-        # InferFiltersFromGenerate infers `size(_arr) > 0` and pushes THAT
-        # into the scan, inlining the same subtree. explode_outer defeats
-        # the inference structurally (empties are kept, so nothing can be
-        # inferred); non-candidates emit ONE null-key row that dies at the
-        # inner join's null check instead of 5 probes — output identical,
-        # scan clean (r5 measurements in BENCH/PLANS.md).
-        # ONE py4j call for the whole InSet: Column.isin marshals one
-        # literal per round trip (~0.4s of driver wall at 512 entries,
-        # profiled r6); a server-side-parsed IN expression builds the same
-        # In/InSet predicate in a single call.
-        in_list = ",".join(str(int(c)) for c in sorted(anc))
-        probe = (
-            probe.withColumn("_pre", pre_col)
-            .withColumn(
-                "_arr",
-                F.when(F.expr(f"_pre IN ({in_list})"), F.array(*refs)),
-            )
-            .withColumn("_cell", F.explode_outer(F.col("_arr")))
-            .drop("_pre", "_arr", *new_names)
-        )
-    else:
-        probe = probe.withColumn(
-            "_cell", F.expr(f"explode(array({', '.join(map(C.sql_ident, refs))}))")
-        ).drop(*new_names)
+    probe = probe.withColumn(
+        "_cell", F.expr(f"explode(array({', '.join(map(C.sql_ident, refs))}))")
+    ).drop(*new_names)
     # MAX_BROADCAST_CELLS alone decides the broadcast: the shuffle_hash hint
     # keeps Spark's own size threshold (static or AQE) from broadcasting a
     # cover the caller judged too large.
@@ -468,7 +400,6 @@ def build_cover_df(regions_df: DataFrame) -> DataFrame:
 
 
 def pip_join_partitioned(
-    spark: SparkSession,
     points: DataFrame,
     regions_df: DataFrame,
     lon: str = "lon",

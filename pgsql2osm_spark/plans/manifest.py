@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,10 +81,15 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = _manifest_path(out_dir)
+    """The manifest rows under ``out_dir``; empty when no manifest was ever
+    written. Any other read error raises: a manifest that reads as empty
+    would make a resume silently re-run every bucket. The explicit schema
+    lets a directory left empty by a crashed append read as empty too."""
     try:
-        return spark.read.parquet(path)
-    except Exception:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_path(out_dir))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 

@@ -327,7 +327,7 @@ def test_continent_partitioned_pip_all_regions(spark, continent):
     pts = spark.read.parquet(str(base / "pts"))
     got = {}
     for r in SJ.pip_join_partitioned(
-        spark, pts, regions_df, keep_cols=["image_id"]
+        pts, regions_df, keep_cols=["image_id"]
     ).select("image_id", "region_id").collect():
         got.setdefault(int(r["region_id"]), set()).add(r["image_id"])
     for reg in continent["regions"]:

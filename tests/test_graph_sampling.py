@@ -82,33 +82,6 @@ def test_hash_overflow_safe_and_duckdb_parity(spark):
     assert all(0 <= v < 4294967296 for v in got.values())
 
 
-def test_star_contraction_matches_union_find(spark):
-    """method='star' (large-star/small-star) equals union-find on random
-    graphs — same contract as the label-propagation default."""
-    for seed in (4, 5):
-        rng = np.random.default_rng(seed)
-        edges = [
-            (int(a), int(b))
-            for a, b in rng.integers(0, 60, size=(80, 2))
-            if a != b
-        ]
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        got = {r["v"]: r["component"]
-               for r in GR.connected_components(df, method="star").collect()}
-        assert got == _union_find_components(edges), f"seed {seed}"
-
-
-def test_star_contraction_deep_path_olog2_rounds(spark):
-    """A 200-vertex path (diameter 199) converges within the O(log^2 n)
-    star-contraction bound — far under the label variant's 199 rounds.
-    max_iter=16 would make label propagation raise; star must finish."""
-    edges = [(i, i + 1) for i in range(199)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["v"]: r["component"]
-           for r in GR.connected_components(df, method="star", max_iter=16).collect()}
-    assert got == {i: 0 for i in range(200)}
-
-
 def test_connected_components_raises_on_non_convergence(spark):
     edges = [(i, i + 1) for i in range(60)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")

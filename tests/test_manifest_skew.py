@@ -54,6 +54,25 @@ def test_manifest_partial_resume(spark, tmp_path):
     assert spark.read.parquet(f"{out}/s").count() == 1000
 
 
+def test_read_manifest_missing_is_empty_corrupt_raises(spark, tmp_path):
+    """Only a manifest that does not exist reads as empty: a corrupt one
+    must fail the read, not make a resume re-run every bucket."""
+    import pytest
+    from pyspark.sql.types import _parse_datatype_string
+
+    missing = M.read_manifest(spark, str(tmp_path / "never_written"))
+    assert missing.count() == 0
+    assert missing.schema == _parse_datatype_string(M.MANIFEST_SCHEMA)
+    # a crashed append can leave only _temporary/ behind: still empty
+    (tmp_path / "crashed" / "_manifest" / "_temporary").mkdir(parents=True)
+    assert M.read_manifest(spark, str(tmp_path / "crashed")).count() == 0
+    bad = tmp_path / "corrupt" / "_manifest"
+    bad.mkdir(parents=True)
+    (bad / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        M.read_manifest(spark, str(tmp_path / "corrupt")).count()
+
+
 def test_split_hot_cells(spark):
     df = _pts(spark, 4000)
     out = SK.split_hot_cells(df, cell_col="cell", res=4, hot_threshold=100)

@@ -59,7 +59,7 @@ def test_partitioned_pip_join_equals_broadcast_path(spark):
         pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat})
     )
     regions_df = SJ.regions_to_df(spark, regions)
-    got = SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"])
+    got = SJ.pip_join_partitioned(pts, regions_df, keep_cols=["idx"])
     got_set = {(int(r["idx"]), int(r["region_id"])) for r in got.collect()}
     assert got_set == oracle_assignments(lon, lat, regions)
 
@@ -187,7 +187,7 @@ def test_antimeridian_crossing_region(spark):
     ):
         got2 = {
             r["idx"]
-            for r in SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"]).collect()
+            for r in SJ.pip_join_partitioned(pts, regions_df, keep_cols=["idx"]).collect()
         }
         assert got2 == expected
     # normalize_rings itself: two parts, each within [-180, 180]
@@ -214,7 +214,7 @@ def test_partitioned_refine_boundary_skew_without_python(spark):
     lat = rng.uniform(y0 - 0.1, y1 + 0.1, n)
     pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
     regions_df = SJ.regions_to_df(spark, regions)
-    out = SJ.pip_join_partitioned(spark, pts, regions_df, keep_cols=["idx"])
+    out = SJ.pip_join_partitioned(pts, regions_df, keep_cols=["idx"])
     got = {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}
     assert got == oracle_assignments(lon, lat, regions)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -269,29 +269,3 @@ def test_cover_rejects_more_edges_than_slots_at_one_point():
                  (c[0] + np.cos(a + 0.5), c[1] + np.sin(a + 0.5))]
     with pytest.raises(ValueError, match="region 7: .* more than 8 edges"):
         SJ.build_cover([{"region_id": 7, "rings": [np.asarray(ring)]}])
-
-
-def test_pip_join_coarse_prefilter_identical(spark):
-    """coarse_prefilter adds a res_lo-ancestor InSet ahead of the explode —
-    an exact superset of matches, so output must be identical (and the
-    plan must contain the extra Filter)."""
-    import pandas as pd
-
-    from pgsql2osm_spark.sources import fixtures as FX
-
-    lon, lat = FX.gen_points_slice(0, 20000)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": [str(i) for i in range(20000)], "lon": lon, "lat": lat})
-    )
-    regions = FX.gen_admin_polygons(12)
-    base = {
-        (r["image_id"], r["region_id"])
-        for r in SJ.pip_join(spark, pts, regions, keep_cols=["image_id"]).collect()
-    }
-    pre = {
-        (r["image_id"], r["region_id"])
-        for r in SJ.pip_join(
-            spark, pts, regions, keep_cols=["image_id"], coarse_prefilter=True
-        ).collect()
-    }
-    assert pre == base and len(base) > 0

@@ -2,6 +2,7 @@
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query (suffix: before/after).
+Runs on local[$SPARK_GRAFT_CPUS], all cores by default.
 """
 
 from __future__ import annotations
@@ -9,7 +10,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
@@ -20,7 +21,7 @@ def main():
     from pgsql2osm_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     spark = get_spark(
         app="dump_plans", master=f"local[{cpus}]", shuffle_partitions=cpus * 2
     )
