@@ -165,15 +165,6 @@ def grid_disk(cell: int, k: int) -> np.ndarray:
     return np.unique(xy_to_cell(xs[keep], ys[keep], res))
 
 
-def grid_ring(cell: int, k: int) -> np.ndarray:
-    """Only the cells at exactly Chebyshev distance k (the k-th ring)."""
-    if k == 0:
-        return np.asarray([cell], dtype=np.int64)
-    disk = set(grid_disk(cell, k).tolist())
-    inner = set(grid_disk(cell, k - 1).tolist())
-    return np.asarray(sorted(disk - inner), dtype=np.int64)
-
-
 # ---------------------------------------------------------------------------
 # S2-style cube-face cells.
 # ---------------------------------------------------------------------------

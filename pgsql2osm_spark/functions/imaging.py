@@ -153,16 +153,6 @@ def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
     raise NotImplementedError(f"fmt={fmt!r}")
 
 
-def psnr_db(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio between two uint8 images."""
-    a = a.astype(np.float64)
-    b = b.astype(np.float64)
-    mse = float(np.mean((a - b) ** 2))
-    if mse == 0:
-        return float("inf")
-    return 20.0 * np.log10(255.0) - 10.0 * np.log10(mse)
-
-
 # ---------------------------------------------------------------------------
 # Perceptual hash (64-bit DCT pHash).
 # ---------------------------------------------------------------------------
@@ -208,6 +198,3 @@ def phash64(pixels: np.ndarray) -> int:
         val = (val << np.uint64(1)) | bits[i]
     return int(np.int64(val))
 
-
-def hamming64(a: int, b: int) -> int:
-    return int(bin((int(a) ^ int(b)) & 0xFFFFFFFFFFFFFFFF).count("1"))

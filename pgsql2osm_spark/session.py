@@ -4,15 +4,37 @@ Local mode stands in for the target multi-executor cluster: every conf here is
 one we would also set on a 1000-executor deployment (AQE on, skew-join on,
 Arrow batches bounded so image-decode stages can't blow executor memory —
 SURVEY.md X1/X9/X10).
+
+The session that launches the driver JVM starts it from a dynamic class-data
+archive of Spark's classes (AppCDS, JEP 350) kept in ``<repo root>/.cds/``:
+the JVM maps ~10k classes instead of loading and verifying them from the jars,
+which halves session start. When no archive exists for this JDK and Spark
+jar set, the launching session records one at JVM exit instead.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
 import tempfile
 import zipfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
+
+CDS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cds")
+# JVM unified logging (CDS warnings among it) goes to stderr: the CLI's stdout
+# is JSON lines.
+_JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
 
 
 def make_pyfiles_zip(dest: str | None = None) -> str:
@@ -37,7 +59,7 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
                 entries.append((full, os.path.relpath(full, root)))
     if not entries:
         raise RuntimeError(f"no .py files under {pkg_dir}")
-    tmp = dest + ".tmp"
+    tmp = f"{dest}.{os.getpid()}.tmp"  # concurrent starts each write their own
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
         for full, rel in entries:
             zf.write(full, rel)
@@ -52,6 +74,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     cores = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
     n_shuffle = shuffle_partitions or (64 if cores == "*" else max(int(cores) * 2, 8))
     b = (
@@ -68,14 +91,210 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # Pin UTC so DuckDB oracle comparisons are TZ-stable.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
+    # (under spark-submit, PYSPARK_GATEWAY_PORT names a JVM that is already up)
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        spark = _launch(b, CDS_DIR, (extra_conf or {}).get("spark.driver.memory", driver_mem))
+    else:
+        spark = b.getOrCreate()
     # Ship the package to python workers regardless of the driver's cwd —
     # the local-mode equivalent of spark-submit --py-files (north rule).
     # Re-adding the same zip in a reused session does not raise.
     spark.sparkContext.addPyFile(make_pyfiles_zip())
     return spark
+
+
+def _launch(builder, cds_dir: str, driver_mem: str) -> SparkSession:
+    """``builder.getOrCreate()`` for the session that launches the driver JVM,
+    with the class-data archive in ``cds_dir`` mapped, or recorded at exit
+    when there is none. ``spark.driver.defaultJavaOptions`` carries the JVM
+    options: Spark prepends it to ``extraJavaOptions``, which callers set."""
+    cds = _ClassData(cds_dir, driver_mem)
+    opts, conf_dir = cds.java_options()
+    builder = builder.config(
+        "spark.driver.defaultJavaOptions", " ".join([_JVM_LOG_TO_STDERR, *opts])
+    )
+    if conf_dir is None:
+        return builder.getOrCreate()
+    # the archive is tied to the classpath, which holds the conf dir: use an
+    # empty one (a non-empty directory on the classpath fails the dump)
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        del os.environ["SPARK_CONF_DIR"]
+    if cds.recording:
+        cds.launched(spark)
+    return spark
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, another user's
+        pass
+    return True
+
+
+class _ClassData:
+    """One JVM start's view of the class-data archives in ``cds_dir``.
+
+    Files, per key (a hash of the JDK and of Spark's jars, so a JDK or Spark
+    change records a new archive rather than falling back forever):
+
+    - ``<key>.jsa``: the archive. It only ever appears by ``os.replace`` of
+      a recording that was checked to map, because a JVM that maps a
+      truncated archive dies of SIGBUS.
+    - ``<key>.jsa.tmp``: the recording. The JVM writes it at exit, after
+      the Python process may have gone (the JVM exits on stdin EOF), so it
+      is checked and promoted by a later start.
+    - ``<key>.pid``: the recording JVM's pid. It is created with
+      ``O_CREAT|O_EXCL``, so only one JVM records; other starts meanwhile
+      run without the archive. A pid that is dead is taken over.
+    - ``<key>.classpath``: the recording JVM's ``java.class.path``, which
+      the map check needs.
+
+    Promoting an archive deletes the archives of other keys.
+
+    Starts that find no archive serialize on a ``flock`` of ``cds_dir``.
+    Each start that runs without mapping the archive logs why, once."""
+
+    def __init__(self, cds_dir: str, driver_mem: str):
+        self.dir = cds_dir
+        self.driver_mem = driver_mem
+        self.recording = False
+        java_home = os.environ.get("JAVA_HOME")
+        if java_home:
+            self.java = os.path.join(java_home, "bin", "java")
+        else:  # as spark-class finds it
+            self.java = shutil.which("java") or "java"
+            java_home = os.path.dirname(os.path.dirname(os.path.realpath(self.java)))
+        self.spark_home = _find_spark_home()
+        key = self._key(java_home)
+        self.jsa = os.path.join(cds_dir, key + ".jsa")
+        self.tmp = self.jsa + ".tmp"
+        self.pid_file = os.path.join(cds_dir, key + ".pid")
+        self.classpath_file = os.path.join(cds_dir, key + ".classpath")
+
+    def _key(self, java_home: str) -> str:
+        h = hashlib.sha256(os.path.realpath(java_home).encode())
+        with contextlib.suppress(OSError), open(os.path.join(java_home, "release"), "rb") as f:
+            h.update(f.read())
+        jars = os.path.join(self.spark_home, "jars")
+        h.update(os.path.realpath(jars).encode())
+        with os.scandir(jars) as it:
+            for e in sorted(it, key=lambda e: e.name):
+                st = e.stat()
+                h.update(f"\0{e.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+        return h.hexdigest()[:16]
+
+    def _conf_dir_problem(self) -> str | None:
+        if "SPARK_CONF_DIR" in os.environ:
+            return f"SPARK_CONF_DIR is set ({os.environ['SPARK_CONF_DIR']})"
+        conf = os.path.join(self.spark_home, "conf")
+        other = [f for f in sorted(os.listdir(conf)) if not f.endswith(".template")] \
+            if os.path.isdir(conf) else []
+        return f"{conf} holds {', '.join(other)}" if other else None
+
+    def java_options(self) -> tuple[list[str], str | None]:
+        """(JVM options, conf dir to launch with). No conf dir means this
+        start runs without class data."""
+        problem = self._conf_dir_problem()
+        if problem:
+            _LOG.warning("starting without class-data archive: %s (the archive needs an empty "
+                         "Spark conf dir on the classpath)", problem)
+            return [], None
+        conf_dir = os.path.join(self.dir, "conf")
+        if os.path.exists(self.jsa):
+            return [f"-XX:SharedArchiveFile={self.jsa}"], conf_dir
+        os.makedirs(conf_dir, exist_ok=True)
+        with self._locked():
+            return self._promote_or_claim(), conf_dir
+
+    @contextlib.contextmanager
+    def _locked(self):
+        fd = os.open(self.dir, os.O_RDONLY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield
+        finally:
+            os.close(fd)
+
+    def _promote_or_claim(self) -> list[str]:
+        if os.path.exists(self.jsa):  # promoted while this start waited
+            return [f"-XX:SharedArchiveFile={self.jsa}"]
+        try:
+            with open(self.pid_file) as f:
+                pid = int(f.read() or 0)
+        except FileNotFoundError:
+            pid = 0
+        if pid and _pid_alive(pid):
+            _LOG.info("starting without class-data archive: pid %d is recording %s",
+                      pid, self.tmp)
+            return []
+        why = "none yet for this JDK and Spark"
+        if os.path.exists(self.tmp):
+            if self._maps(self.tmp):
+                os.replace(self.tmp, self.jsa)
+                self._remove(self.pid_file)
+                for f in glob.glob(os.path.join(self.dir, "*.jsa")) + \
+                        glob.glob(os.path.join(self.dir, "*.classpath")):
+                    if f not in (self.jsa, self.classpath_file):
+                        self._remove(f)
+                return [f"-XX:SharedArchiveFile={self.jsa}"]
+            self._remove(self.tmp)
+            why = f"the recording {self.tmp} does not map and was deleted"
+        else:
+            stale = [f for f in glob.glob(os.path.join(self.dir, "*.jsa")) if f != self.jsa]
+            if stale:
+                why = f"{', '.join(stale)} was built for another JDK or Spark"
+        self._remove(self.pid_file)
+        fd = os.open(self.pid_file, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        with os.fdopen(fd, "w") as f:
+            f.write(str(os.getpid()))
+        self.recording = True
+        _LOG.info("starting without class-data archive (%s); this JVM records %s at exit",
+                  why, self.tmp)
+        return [f"-XX:ArchiveClassesAtExit={self.tmp}"]
+
+    def _maps(self, archive: str) -> bool:
+        """Whether a JVM started like the recording one maps ``archive``:
+        ``-Xshare:on`` fails instead of falling back, and
+        ``VerifySharedSpaces`` checksums every region, so a partial file
+        fails here rather than in the driver. A JVM that dies of a partial
+        file writes no crash report or core."""
+        try:
+            with open(self.classpath_file) as f:
+                classpath = f.read()
+        except FileNotFoundError:
+            return False
+        cmd = [self.java, "-Xshare:on", "-XX:+VerifySharedSpaces",
+               f"-XX:SharedArchiveFile={archive}", f"-Xmx{self.driver_mem}",
+               f"-XX:ErrorFile={os.devnull}", "-XX:-CreateCoredumpOnCrash",
+               "-cp", classpath, "-version"]
+        try:
+            return subprocess.run(cmd, capture_output=True, timeout=120).returncode == 0
+        except subprocess.TimeoutExpired:
+            return False
+
+    def launched(self, spark: SparkSession) -> None:
+        """Record what the map check needs from the recording JVM, and hand
+        the pid lock from this process to the JVM, which outlives it."""
+        jvm = spark.sparkContext._jvm
+        with open(self.classpath_file, "w") as f:
+            f.write(jvm.System.getProperty("java.class.path"))
+        tmp = f"{self.pid_file}.{os.getpid()}"
+        with open(tmp, "w") as f:
+            f.write(str(SparkContext._gateway.proc.pid))
+        os.replace(tmp, self.pid_file)
+
+    @staticmethod
+    def _remove(path: str) -> None:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)

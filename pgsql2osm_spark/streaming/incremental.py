@@ -75,25 +75,22 @@ def run_bounded_replay(
     bounded replay's state-task count 8x at identical output). A
     planet-scale tile stream wants it near the cluster's core count.
 
-    The value reaches the stream through a temporary swap of the session's
-    ``spark.sql.shuffle.partitions``, restored on exit: this assumes no
-    other thread plans a query on the session during the replay."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    stream = spark.readStream.schema(
+    The stream runs on ``spark.newSession()`` with ``STATE_PARTITIONS`` set
+    there, so the caller's session conf is never touched; the returned
+    memory table belongs to that session."""
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    stream = session.readStream.schema(
         "ts timestamp, lon double, lat double"
     ).parquet(input_dir)
-    agg = tile_count_stream(stream, z=z)
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(out_table)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(out_table)
+    q = (
+        tile_count_stream(stream, z=z)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(out_table)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return session.table(out_table)

@@ -41,7 +41,6 @@ def test_grid_disk_ring():
     assert len(C.grid_disk(c, 0)) == 1
     assert len(C.grid_disk(c, 1)) == 9
     assert len(C.grid_disk(c, 2)) == 25
-    assert len(C.grid_ring(c, 1)) == 8
     # pole clamp: near the top row the disk truncates
     cp = int(C.cell_encode(np.array([0.0]), np.array([89.99]), 9)[0])
     assert len(C.grid_disk(cp, 1)) == 6

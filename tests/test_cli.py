@@ -2,6 +2,9 @@
 iso error path (reference entry-point surface, SURVEY.md §3)."""
 
 import json
+import os
+import subprocess
+import sys
 
 import numpy as np
 import pandas as pd
@@ -32,6 +35,24 @@ def test_cli_bbox_and_resume(spark, pts_path, tmp_path, capsys):
     assert spark.read.parquet(f"{out}/tiles").count() == rows1
     progress = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert progress["rows"] == rows1
+
+
+def test_cli_process_stdout_is_json_lines(pts_path, tmp_path):
+    """The CLI as its own process: everything on fd 1, the driver JVM's output
+    included, is JSON lines (the in-process tests only see Python's
+    sys.stdout)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = str(tmp_path / "out")
+    p = subprocess.run(
+        [sys.executable, "-m", "pgsql2osm_spark.cli", "--input", pts_path,
+         "--bbox=-20,30,30,55", "--out", out, "--zoom", "10", "--cores", "2"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    lines = p.stdout.splitlines()
+    assert lines
+    assert [json.loads(line) for line in lines][-1]["rows"] > 100
 
 
 def test_cli_geojson(spark, pts_path, tmp_path):

@@ -18,9 +18,15 @@ def test_streaming_tiles_match_batch(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.createDataFrame(pdf).repartition(4).write.parquet(src)
 
-    got = ST.run_bounded_replay(
-        spark, src, str(tmp_path / "ckpt"), "stream_tiles", z=10
-    ).toPandas()
+    # a caller whose shuffle width differs from STATE_PARTITIONS: the replay
+    # must size its state by STATE_PARTITIONS and leave the caller's conf be
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "5")
+    ckpt = tmp_path / "ckpt"
+    got = ST.run_bounded_replay(caller, src, str(ckpt), "stream_tiles", z=10).toPandas()
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "5"
+    state = [p for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit()]
+    assert len(state) == ST.STATE_PARTITIONS
 
     batch = spark.read.parquet(src)
     x, y = G.tile_expr(F.col("lon"), F.col("lat"), 10)

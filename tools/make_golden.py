@@ -994,8 +994,9 @@ def make_oracle_goldens(sf_dir: str = ORACLE_SF, only: list | None = None) -> No
         f"{GOLDEN_DIR}/fixtures/member_edges.parquet", index=False
     )
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     spark = get_spark(
-        app="make_golden", master="local[8]", shuffle_partitions=16,
+        app="make_golden", master=f"local[{cpus}]", shuffle_partitions=cpus * 2,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

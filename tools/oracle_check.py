@@ -9,13 +9,14 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -64,7 +65,10 @@ def main():
     import __spark_entry__ as E
     from pgsql2osm_spark.session import get_spark
 
-    spark = get_spark(app="oracle_check", master="local[8]", shuffle_partitions=16)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
+    spark = get_spark(
+        app="oracle_check", master=f"local[{cpus}]", shuffle_partitions=cpus * 2
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
