@@ -726,8 +726,9 @@ def q_pip_fixture_regions(spark, sf_dir):
 
 
 def q_pip_partitioned_fixture(spark, sf_dir):
-    """Shuffle-partitioned PIP fallback (unbroadcastable region sets) on the
-    fixture points — exact-equal to the broadcast path per
+    """pip_join from a region table (the distributed cover build for region
+    sets too large for the driver) on the fixture points — exact-equal to
+    the region-list build per
     tests/test_spatial_join.py; golden oracle verified vs an
     independent even-odd implementation."""
     import pandas as pd
@@ -741,7 +742,7 @@ def q_pip_partitioned_fixture(spark, sf_dir):
         pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
     )
     rdf = SJ.regions_to_df(spark, FX.gen_admin_polygons(12))
-    out = SJ.pip_join_partitioned(pts, rdf, keep_cols=["image_id"])
+    out = SJ.pip_join(spark, pts, rdf, keep_cols=["image_id"])
     return out.groupBy("region_id").agg(F.count(F.lit(1)).alias("n")).transform(_psort, "region_id")
 
 

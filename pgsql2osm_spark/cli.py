@@ -47,7 +47,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="parquet of (region_id long, wkb binary) boundary geometries — the "
         "deployment contract replacing the fixture polygons: --osm-rel-id/--iso "
         "resolve REAL geometry from this table (region_id = the osm relation id, "
-        "wkb = geometry.pack_rings bytes; spatial_join.REGIONS_DF_SCHEMA)",
+        "wkb = geometry.pack_rings bytes; spatial_join.REGIONS_DF_SCHEMA), "
+        "joined by the same spatial_join.pip_join as the fixture polygons",
     )
     p.add_argument("--out", required=True, help="output parquet dir")
     p.add_argument("--zoom", type=int, default=12)
@@ -171,18 +172,19 @@ def main(argv=None, spark=None) -> int:
         return rc
     pts = spark.read.parquet(args.input)
 
-    region_list = None   # driver-side rings (fixture/geojson/bbox paths)
-    regions_df = None    # distributed (region_id, wkb) boundary rows
+    # the boundary: a driver-side region list (fixture/geojson/bbox paths)
+    # or a distributed (region_id, wkb) table (--boundaries)
+    regions = None
     if args.geojson:
-        region_list = [{"region_id": 1, "rings": _geojson_rings(args.geojson)}]
+        regions = [{"region_id": 1, "rings": _geojson_rings(args.geojson)}]
     elif args.osm_rel_id is not None:
         # the reference resolves the boundary polygon from the data itself by
         # relation id (polygon table row osm_id=-rel_id, settings.py:120-126)
         if args.boundaries:
-            regions_df = spark.read.parquet(args.boundaries).where(
+            regions = spark.read.parquet(args.boundaries).where(
                 F.col("region_id") == args.osm_rel_id
             )
-            if regions_df.limit(1).count() == 0:
+            if regions.limit(1).count() == 0:
                 print(
                     f"osm rel id {args.osm_rel_id} not in {args.boundaries}",
                     file=sys.stderr,
@@ -197,7 +199,7 @@ def main(argv=None, spark=None) -> int:
             if not matches:
                 print(f"osm rel id {args.osm_rel_id} has no boundary polygon", file=sys.stderr)
                 return 2
-            region_list = matches
+            regions = matches
     elif args.iso:
         dim = (
             RG.load_regions_dim(spark, args.regions_csv)
@@ -214,10 +216,10 @@ def main(argv=None, spark=None) -> int:
         if args.boundaries:
             # boundary-table contract: region_id = osm relation id
             wanted_ids = [abs(h["osm_id"]) for h in hits]
-            regions_df = spark.read.parquet(args.boundaries).where(
+            regions = spark.read.parquet(args.boundaries).where(
                 F.col("region_id").isin(wanted_ids)
             )
-            if regions_df.limit(1).count() == 0:
+            if regions.limit(1).count() == 0:
                 print(
                     f"iso {args.iso!r} resolved to relation ids {wanted_ids} "
                     f"not present in {args.boundaries}",
@@ -231,8 +233,8 @@ def main(argv=None, spark=None) -> int:
 
             all_regions = FX.gen_admin_polygons(64)
             wanted = {abs(h["osm_id"]) - 100000 for h in hits}
-            region_list = [r for r in all_regions if r["region_id"] in wanted]
-            if not region_list:
+            regions = [r for r in all_regions if r["region_id"] in wanted]
+            if not regions:
                 # real dimensions (--regions-csv) carry osm ids with no
                 # fixture polygon — err out like the reference's
                 # missing-boundary path instead of silently substituting
@@ -247,10 +249,10 @@ def main(argv=None, spark=None) -> int:
 
     if args.bbox:
         x0, y0, x1, y1 = (float(v) for v in args.bbox.split(","))
-        if region_list is None and regions_df is None:
+        if regions is None:
             # bbox alone IS the boundary (rectangle polygon)
             rings = [np.asarray([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])]
-            region_list = [{"region_id": 1, "rings": rings}]
+            regions = [{"region_id": 1, "rings": rings}]
         else:
             # conjunction: cheap bbox Column predicate AND'd ahead of the
             # exact PIP join — the reference's intersection-as-AND staging
@@ -260,16 +262,12 @@ def main(argv=None, spark=None) -> int:
                 & (F.col("lat") >= y0) & (F.col("lat") <= y1)
             )
 
-    if regions_df is not None:
-        # distributed boundary rows never visit the driver: the partitioned
-        # PIP path builds the cover with mapInPandas, broadcasts it when
-        # small, and refines in the join condition like pip_join
-        # (spatial_join.pip_join_partitioned)
-        joined = SJ.pip_join_partitioned(pts, regions_df)
-    else:
-        joined = SJ.pip_join(
-            spark, SJ.pip_join_bbox_prefilter(pts, region_list), region_list
-        )
+    if isinstance(regions, list):
+        # a region list's bboxes are on the driver: AND their union ahead of
+        # the exact join (a boundary table's rows stay distributed, and
+        # pip_join builds its cover with mapInPandas)
+        pts = SJ.pip_join_bbox_prefilter(pts, regions)
+    joined = SJ.pip_join(spark, pts, regions)
     x, y = G.tile_expr(F.col("lon"), F.col("lat"), args.zoom)
     tiles = joined.withColumn("tx", x).withColumn("ty", y).withColumn(
         "bucket", (F.col("tx") * (1 << args.zoom) + F.col("ty")) % 256

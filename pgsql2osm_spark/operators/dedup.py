@@ -8,9 +8,9 @@ Scale shapes:
   band keys -> explode(bands) -> groupBy band key: candidates only ever meet
   inside a bucket, never all-pairs. The classic shingle->minhash->band->
   bucket-join pipeline.
-* SimHash: 64-bit signed projection of token hashes, pure Spark built-ins
-  (xxhash64 + bit arithmetic via aggregate), near-dup = small hamming
-  distance within prefix buckets.
+* SimHash: 64-bit signed projection of token hashes (xxhash64 JVM-side, one
+  Arrow-vectorized majority fold), near-dup = small hamming distance within
+  band buckets.
 * n-gram Jaccard: exact verification of candidate pairs via explode +
   grouped intersection counts (pure SQL shape, oracle-checkable).
 """
@@ -169,50 +169,18 @@ def minhash_lsh_candidates(
 
 
 # ---------------------------------------------------------------------------
-# SimHash (pure built-ins — no Python).
+# SimHash (JVM token hashes, one Arrow-vectorized fold).
 # ---------------------------------------------------------------------------
 
 
 def simhash_col(text: str = "text") -> F.Column:
-    """64-bit SimHash over whitespace tokens with xxhash64 token hashes.
-
-    For each bit position: sum(+1 if token-hash bit set else -1) > 0.
-    Expressed with aggregate() over the token array — all JVM, codegen'd."""
-    toks = F.when(
-        F.length(F.trim(F.col(text))) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.lower(F.trim(F.col(text))), "\\s+"))
-    # per-token ±1 bit vector, shift amounts unrolled as constants (Spark's
-    # shift builtins take a literal bit count, not a Column)
-    bit_vec = F.transform(
-        toks,
-        lambda t: F.array(
-            *[
-                F.when(
-                    F.shiftright(F.xxhash64(t), i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-                for i in range(64)
-            ]
-        ),
-    )
-    zero = F.array_repeat(F.lit(0), 64)
-    counts = F.aggregate(bit_vec, zero, lambda acc, bits: F.zip_with(acc, bits, lambda a, d: a + d))
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        weight = (1 << i) if i < 63 else -(1 << 63)  # avoid signed-long overflow
-        out = out.bitwiseOR(
-            F.when(F.element_at(counts, i + 1) > 0, F.lit(weight).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
-
-
-def simhash_fast_col(text: str = "text") -> F.Column:
-    """SimHash with identical bits to simhash_col but a hybrid evaluation:
-    token hashes stay JVM-side (xxhash64), the 64-bit majority fold runs as
-    one Arrow-vectorized numpy pass. Spark's higher-order array lambdas are
-    evaluated interpreted per element, so the pure-built-in fold costs ~60
-    expression evals per token; this path is ~20x faster at equal output."""
+    """64-bit SimHash over whitespace tokens with xxhash64 token hashes:
+    bit i is set when more tokens have hash bit i set than unset (an empty
+    text hashes to 0). Token hashes stay JVM-side (xxhash64); the 64-bit
+    majority fold runs as one Arrow-vectorized numpy pass. Spark's
+    higher-order array lambdas are evaluated interpreted per element, so a
+    pure-built-in fold costs ~60 expression evals per token and runs
+    ~20x slower at equal output."""
     toks = F.when(
         F.length(F.trim(F.col(text))) == 0, F.array().cast("array<string>")
     ).otherwise(F.split(F.lower(F.trim(F.col(text))), "\\s+"))
@@ -368,7 +336,7 @@ def simhash_near_dups(
     exact duplicates, already owned by exact_dedup."""
     if drop_empty:
         df = df.where(F.length(F.trim(F.col(text))) > 0)
-    sh = df.select(F.col(id_col), simhash_fast_col(text).alias("simhash"))
+    sh = df.select(F.col(id_col), simhash_col(text).alias("simhash"))
     return _banded_hamming_pairs(sh, "simhash", id_col, max_hamming, max_bucket=max_bucket)
 
 

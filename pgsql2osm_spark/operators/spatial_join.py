@@ -7,9 +7,9 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
   1. cover: each region polygon -> grid-cell cover at an adaptively chosen
      resolution (geometry.adaptive_cover_res — the X1 "adaptive chunk" idea),
      each cover cell classified interior vs boundary (geometry.polygon_cover).
-     One function builds a region's rows (cover_rows): on the driver
-     (pip_join) or in one mapInPandas pass over a region table
-     (pip_join_partitioned).
+     One function builds a region's rows (cover_rows), and pip_join, the
+     one entry point, runs it on the driver for a region list or in one
+     mapInPandas pass for a region table (REGIONS_DF_SCHEMA).
   2. points: cell id per needed resolution computed with PURE JVM bitwise
      expressions (cells.cell_expr — whole-stage codegen, no Python).
   3. broadcast equi-join points.cell == cover.cell: each point explodes
@@ -262,16 +262,59 @@ def refine_sql(lon: str, lat: str) -> str:
     return f"((_par + {terms}) % 2) = 1"
 
 
+REGIONS_DF_SCHEMA = "region_id long, wkb binary"
+
+
+def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
+    """Lift a driver-side region list into a region table
+    (``REGIONS_DF_SCHEMA``): geometry packed to a binary column
+    (geometry.pack_rings — the WKB analogue; ragged nested arrays don't
+    survive pyspark's Arrow->pandas conversion)."""
+    rows = [(int(reg["region_id"]), G.pack_rings(normalized_rings(reg))) for reg in regions]
+    return spark.createDataFrame(rows, REGIONS_DF_SCHEMA)
+
+
+def _check_regions_df(regions_df: DataFrame) -> None:
+    """Raise ValueError naming the first ``REGIONS_DF_SCHEMA`` column that
+    the table lacks or holds with another type (extra columns are fine)."""
+    have = {f.name: f.dataType.typeName() for f in regions_df.schema.fields}
+    for name, typ in (col.split() for col in REGIONS_DF_SCHEMA.split(", ")):
+        if have.get(name) != typ:
+            got = f"is {have[name]}" if name in have else "is missing"
+            raise ValueError(
+                f"region table column {name!r} {got}; expected {REGIONS_DF_SCHEMA!r}"
+            )
+
+
+def _build_cover_df(regions_df: DataFrame) -> DataFrame:
+    """Distributed cover build: one mapInPandas pass over the region table
+    emitting cover_rows per region — each region's cover is independent, so
+    this scales with #regions instead of living on the driver. Rings are
+    split at the antimeridian here as on the driver: a region table may hold
+    unsplit rings."""
+
+    def gen(pdf_iter):
+        for pdf in pdf_iter:
+            for rid, blob in zip(pdf["region_id"], pdf["wkb"]):
+                yield cover_rows(rid, G.normalize_rings(G.unpack_rings(bytes(blob))))
+
+    schema = ", ".join(
+        ["region_id long", "res int", "cell long", "_par int", *(f"{c} double" for c in SLOT_COLS)]
+    )
+    return regions_df.mapInPandas(gen, schema)
+
+
 def pip_join(
     spark: SparkSession,
     points: DataFrame,
-    regions: list[dict],
+    regions: list[dict] | DataFrame,
     lon: str = "lon",
     lat: str = "lat",
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
 ) -> DataFrame:
-    """points x regions -> rows of points inside each region.
+    """points x regions -> rows of points inside each region — the one PIP
+    join, for a region list or a region table (``REGIONS_DF_SCHEMA``).
 
     Exact even-odd membership, bit-equal to geometry.points_in_rings: the
     join matches each point to the cover cells of its regions,
@@ -282,53 +325,51 @@ def pip_join(
     k overlapping regions yields k rows (nested admin levels do overlap, as
     in the reference's relation hierarchy).
 
-    Dispatch: a cover of more than ``MAX_BROADCAST_CELLS`` cells joins
-    through a cell-keyed shuffle instead of a broadcast, and a region list
-    too long to build its cover on the driver takes pip_join_partitioned —
-    one entry point, one refine, physical strategy chosen from cover size.
+    The input decides only how the cover is built. A region list builds it
+    on the driver (build_cover). A region table — or a list too long to
+    build on the driver — builds it in one mapInPandas pass
+    (_build_cover_df), so no geometry visits the driver (SURVEY.md J1
+    'range-partitioned fallback'); a table is checked against
+    ``REGIONS_DF_SCHEMA`` before anything is planned. Either cover takes
+    the same probe -> hash join -> refine: broadcast up to
+    ``MAX_BROADCAST_CELLS`` cells, a cell-keyed shuffle above.
     """
-    # cheap pre-estimate: covers average ~TARGET_CELLS per region by
-    # construction (adaptive_cover_res aims at TARGET_CELLS), so a huge
-    # region list skips the driver-side cover build entirely. The estimate
-    # is an upper bound (tiny polygons cover fewer cells), so it can route a
-    # small-cover region list to the shuffle path unmeasured — log it, and
-    # forward cell_cols so the fallback keeps the precomputed probe columns.
-    if len(regions) * TARGET_CELLS > 2 * MAX_BROADCAST_CELLS:
+    if not isinstance(regions, DataFrame) and (
+        len(regions) * TARGET_CELLS > 2 * MAX_BROADCAST_CELLS
+    ):
+        # cheap pre-estimate: covers average ~TARGET_CELLS per region by
+        # construction (adaptive_cover_res aims at TARGET_CELLS), so a huge
+        # region list skips the driver-side cover build entirely. The
+        # estimate is an upper bound (tiny polygons cover fewer cells), so it
+        # can route a small-cover region list to the table path unmeasured.
         _LOG.warning(
             "pip_join: pre-estimate %d regions x %d cells > %d — taking the "
             "partitioned path without building the cover",
             len(regions), TARGET_CELLS, 2 * MAX_BROADCAST_CELLS,
         )
-        return pip_join_partitioned(
-            points, regions_to_df(spark, regions), lon=lon, lat=lat,
-            keep_cols=keep_cols, cell_cols=cell_cols,
-        )
-    cover_pdf = build_cover(regions)
-    res_list = sorted(int(r) for r in cover_pdf["res"].unique())
-    return _cover_join(
-        points,
+        regions = regions_to_df(spark, regions)
+    if isinstance(regions, DataFrame):
+        _check_regions_df(regions)
+        # localCheckpoint: the res/count probe below and the join both read
+        # the cover, and one rasterization serves both. Lazy, so the probe is
+        # the job that materializes it; unlike persist(), ContextCleaner
+        # frees the blocks once the DataFrame is garbage-collected.
+        cover = _build_cover_df(regions).localCheckpoint(eager=False)
+        # ONE probe job yields both the distinct resolutions and the cell
+        # count. The count matters because a checkpointed cover has no
+        # Catalyst stats (LogicalRDD -> default huge size): without the
+        # broadcast hint the join shuffles the exploded fact side — measured
+        # 3x wall at 100M points x 256 regions against a 7 MB cover.
+        counts = cover.groupBy("res").agg(F.count(F.lit(1)).alias("_n")).collect()
+        res_list = sorted(r["res"] for r in counts)
+        n_cells = sum(r["_n"] for r in counts)
+    else:
+        cover_pdf = build_cover(regions)
+        res_list = sorted(int(r) for r in cover_pdf["res"].unique())
+        n_cells = len(cover_pdf)
         # without res, the join reads every cover column: a projection over
         # the local relation would run row by row on the driver at planning
-        spark.createDataFrame(cover_pdf.drop(columns="res")) if res_list else None,
-        res_list,
-        lon, lat, keep_cols, cell_cols,
-        broadcast=len(cover_pdf) <= MAX_BROADCAST_CELLS,
-    )
-
-
-def _cover_join(
-    points: DataFrame,
-    cover: DataFrame | None,
-    res_list: list[int],
-    lon: str,
-    lat: str,
-    keep_cols: list[str] | None,
-    cell_cols: dict[int, str] | None,
-    broadcast: bool,
-) -> DataFrame:
-    """The probe -> join -> refine tail of both PIP paths: ``cover`` holds
-    cover rows (cover_rows, ``res`` optional) at the resolutions
-    ``res_list`` (no rows, and no cover needed, when it is empty)."""
+        cover = spark.createDataFrame(cover_pdf.drop(columns="res")) if res_list else None
     out_cols = keep_cols or list(points.columns)
     if not res_list:
         return (
@@ -359,90 +400,14 @@ def _cover_join(
     ).drop(*new_names)
     # MAX_BROADCAST_CELLS alone decides the broadcast: the shuffle_hash hint
     # keeps Spark's own size threshold (static or AQE) from broadcasting a
-    # cover the caller judged too large.
-    cover = F.broadcast(cover) if broadcast else cover.hint("shuffle_hash")
+    # cover judged too large.
+    cover = F.broadcast(cover) if n_cells <= MAX_BROADCAST_CELLS else cover.hint("shuffle_hash")
     # Interior cells carry parity 1 and no slots, so their rows pass on the
     # parity bit alone (the X2 staging); boundary rows count crossings over
     # at most EDGE_SLOTS edges. The predicate spans both join sides, so the
     # optimizer folds it into the join's condition.
     cand = probe.join(cover, probe["_cell"] == cover["cell"], "inner")
     return cand.where(F.expr(refine_sql(lon, lat))).select(*out_cols, "region_id")
-
-
-REGIONS_DF_SCHEMA = "region_id long, wkb binary"
-
-
-def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
-    """Lift a driver-side region list into the distributed representation
-    used by the partitioned join path: geometry packed to a binary column
-    (geometry.pack_rings — the WKB analogue; ragged nested arrays don't
-    survive pyspark's Arrow->pandas conversion)."""
-    rows = [(int(reg["region_id"]), G.pack_rings(normalized_rings(reg))) for reg in regions]
-    return spark.createDataFrame(rows, REGIONS_DF_SCHEMA)
-
-
-def build_cover_df(regions_df: DataFrame) -> DataFrame:
-    """Distributed cover build: one mapInPandas pass over the region table
-    emitting cover_rows per region — each region's cover is independent, so
-    this scales with #regions instead of living on the driver (the
-    large-boundary-set path). Rings are split at the antimeridian here as on
-    the driver: a boundaries table may hold unsplit rings."""
-
-    def gen(pdf_iter):
-        for pdf in pdf_iter:
-            for rid, blob in zip(pdf["region_id"], pdf["wkb"]):
-                yield cover_rows(rid, G.normalize_rings(G.unpack_rings(bytes(blob))))
-
-    schema = ", ".join(
-        ["region_id long", "res int", "cell long", "_par int", *(f"{c} double" for c in SLOT_COLS)]
-    )
-    return regions_df.mapInPandas(gen, schema)
-
-
-def pip_join_partitioned(
-    points: DataFrame,
-    regions_df: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    keep_cols: list[str] | None = None,
-    cell_cols: dict[int, str] | None = None,
-) -> DataFrame:
-    """PIP join over a distributed region table (``REGIONS_DF_SCHEMA``) —
-    the path for region sets too large to build on the driver (SURVEY.md J1
-    'range-partitioned fallback').
-
-    Same cover rows, join and refine as pip_join (cover_rows, refine_sql in
-    the join condition, no Python past the cover build); only the cover
-    build differs: one mapInPandas pass over the region table
-    (build_cover_df), so no geometry visits the driver. The cover is
-    broadcast when it has at most ``MAX_BROADCAST_CELLS`` cells, and joined
-    through a cell-keyed shuffle otherwise (with a cell-bucketed fact table
-    this becomes co-located).
-
-    The cover is localCheckpoint()ed because the res/count probe below and
-    the join both read it: one rasterization serves both. Unlike persist(),
-    the checkpoint blocks are freed by ContextCleaner when the DataFrame is
-    garbage-collected, so repeated calls in a long-lived session don't leak
-    cache (the r1 persist did).
-    """
-    # lazy: the probe aggregate below is the first action and materializes
-    # the checkpoint — an eager one would pay a separate rasterization job
-    # before it
-    cover = build_cover_df(regions_df).localCheckpoint(eager=False)
-    # ONE probe job yields both the distinct resolutions and the total cell
-    # count. The count matters because a checkpointed cover has no Catalyst
-    # stats (LogicalRDD -> default huge size): without the broadcast hint the
-    # candidate join shuffles the exploded fact side — measured 3x wall
-    # regression at 100M points x 256 regions (the 500M-row probe shuffle
-    # against a 7 MB cover).
-    counts = cover.groupBy("res").agg(F.count(F.lit(1)).alias("_n")).collect()
-    return _cover_join(
-        points,
-        cover,
-        sorted(r["res"] for r in counts),
-        lon, lat, keep_cols, cell_cols,
-        broadcast=sum(r["_n"] for r in counts) <= MAX_BROADCAST_CELLS,
-    )
 
 
 def pip_join_bbox_prefilter(

@@ -52,10 +52,6 @@ def _in_list_sql(items: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in items)
 
 
-def stopword_count_col(text: str = "text", words: tuple[str, ...] = STOPWORDS) -> Column:
-    return stopword_count_of(tokens_col(text), words)
-
-
 def token_count_of(toks: Column) -> Column:
     """Token count from an already-projected token-array column — share one
     split across several derived measures instead of re-tokenizing per

@@ -27,6 +27,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.cells import sql_ident
+
 MANIFEST_SCHEMA = (
     "job_id string, stage string, bucket long, row_count long, "
     "input_fingerprint string, wrote_at double"
@@ -54,8 +56,10 @@ def write_stage_with_manifest(
     if not todo_ids:
         return
     # cache: counts below must describe exactly what was written, and the
-    # upstream pipeline (often a full PIP join) must not execute twice
-    part = df.where(F.col(bucket_col).isin(todo_ids)).persist()
+    # upstream pipeline (often a full PIP join) must not execute twice. One
+    # SQL IN-list: Column.isin would cost a py4j round trip per bucket id.
+    in_list = ", ".join(str(int(b)) for b in todo_ids)
+    part = df.where(F.expr(f"{sql_ident(bucket_col)} IN ({in_list})")).persist()
     (
         part.withColumn("_bucket", F.col(bucket_col))
         .write.mode("overwrite")

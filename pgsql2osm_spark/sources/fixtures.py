@@ -118,44 +118,6 @@ def images_df(spark, n: int = 1000, seed: int = SEED):
     return spark.createDataFrame(pdf, schema=schema)
 
 
-def points_jvm_df(spark, n: int, parts: int | None = None):
-    """Skewed synthetic points generated entirely JVM-side (spark.range +
-    xxhash64 + codegen math) — zero Python in the hot path, scales linearly
-    with cores. Same 80/20 world/metro skew SHAPE as gen_points_slice (not
-    bit-identical to the numpy path; golden tests use the numpy generator,
-    the benchmark uses this one)."""
-    from pyspark.sql import functions as F
-
-    parts = parts or 64
-    df = spark.range(0, n, 1, parts).select(
-        F.format_string("img%012d", F.col("id")).alias("image_id"), F.col("id")
-    )
-
-    def u(k):  # uniform [0,1) from a hash stream, 53-bit mantissa
-        return (
-            F.shiftrightunsigned(F.xxhash64(F.col("id"), F.lit(k)), 11).cast("double")
-            / float(1 << 53)
-        )
-
-    lon = u(1) * 360.0 - 180.0
-    lat = u(2) * 132.0 - 60.0
-    h3_ = F.xxhash64(F.col("id"), F.lit(3))
-    bucket = F.pmod(h3_, F.lit(5)) == 0
-    which = F.pmod(F.shiftrightunsigned(h3_, 3), F.lit(len(METROS)))
-    r = F.sqrt(u(4))
-    theta = u(5) * float(2 * np.pi)
-    mlon = F.lit(None).cast("double")
-    mlat = F.lit(None).cast("double")
-    for m, (cx, cy, rad) in enumerate(METROS):
-        mlon = F.when(which == m, F.lit(cx) + r * rad * F.cos(theta)).otherwise(mlon)
-        mlat = F.when(which == m, F.lit(cy) + r * rad * F.sin(theta)).otherwise(mlat)
-    return df.select(
-        "image_id",
-        F.when(bucket, mlon).otherwise(lon).alias("lon"),
-        F.when(bucket, mlat).otherwise(lat).alias("lat"),
-    )
-
-
 def gen_points_slice(lo: int, hi: int, seed: int = SEED) -> tuple[np.ndarray, np.ndarray]:
     """Row-indexed deterministic points: position i is a pure function of
     (seed, i) so any slice can be generated independently on any executor

@@ -15,6 +15,8 @@ import sys
 _CANARY = r"""
 import sys
 sys.path.insert(0, {repo!r})
+sys.path.insert(0, {repo!r} + "/perfbench")
+import inputs
 from pyspark.sql import functions as F
 from pgsql2osm_spark.session import get_spark
 from pgsql2osm_spark.functions import cells as C
@@ -27,7 +29,7 @@ spark = get_spark(
     extra_conf={{"spark.ui.showConsoleProgress": "false"}},
 )
 spark.sparkContext.setLogLevel("ERROR")
-pts = FX.points_jvm_df(spark, 1_000_000, parts=4)
+pts = inputs.points_jvm(spark, 1_000_000, 1, 4)
 pts, names = C.with_cell_columns(pts, "lon", "lat", (7, 8, 9, 10, 11))
 out = SJ.pip_join(
     spark, pts, FX.gen_admin_polygons(12),
@@ -45,7 +47,8 @@ print("ROWS_OK", n)
 
 
 def test_headline_composition_compiles_whole_stage():
-    """The headline composition as the benchmark runs it."""
+    """The headline composition as the benchmark runs it, on the
+    benchmark's own JVM point generator (perfbench/inputs.points_jvm)."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = _CANARY.format(repo=repo)
     proc = subprocess.run(

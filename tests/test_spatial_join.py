@@ -50,8 +50,9 @@ def test_bbox_prefilter_is_superset(spark):
 
 
 def test_partitioned_pip_join_equals_broadcast_path(spark):
-    """The shuffle-partitioned fallback produces exactly the same assignment
-    set as the broadcast path (and the brute-force oracle)."""
+    """pip_join from a region table (the distributed cover build) produces
+    exactly the same assignment set as from a region list (and the
+    brute-force oracle)."""
     n = 4000
     lon, lat = FX.gen_points_slice(0, n)
     regions = FX.gen_admin_polygons(12)
@@ -59,7 +60,7 @@ def test_partitioned_pip_join_equals_broadcast_path(spark):
         pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat})
     )
     regions_df = SJ.regions_to_df(spark, regions)
-    got = SJ.pip_join_partitioned(pts, regions_df, keep_cols=["idx"])
+    got = SJ.pip_join(spark, pts, regions_df, keep_cols=["idx"])
     got_set = {(int(r["idx"]), int(r["region_id"])) for r in got.collect()}
     assert got_set == oracle_assignments(lon, lat, regions)
 
@@ -106,8 +107,9 @@ def test_pip_join_random_polygons_property(spark):
 
 
 def test_pip_join_auto_dispatches_to_partitioned(spark, monkeypatch, caplog):
-    """One entry point: a cover above MAX_BROADCAST_CELLS takes the
-    partitioned path automatically (no raise) and still matches the oracle."""
+    """One entry point: a region list whose pre-estimate is above
+    MAX_BROADCAST_CELLS builds its cover from a region table automatically
+    (no raise) and still matches the oracle."""
     n = 2000
     lon, lat = FX.gen_points_slice(0, n)
     regions = FX.gen_admin_polygons(8)
@@ -120,7 +122,7 @@ def test_pip_join_auto_dispatches_to_partitioned(spark, monkeypatch, caplog):
     assert "taking the partitioned path" in records[0].getMessage()
     got_set = {(int(r["idx"]), int(r["region_id"])) for r in got.collect()}
     assert got_set == oracle_assignments(lon, lat, regions)
-    # and the plan is the partitioned shape: the checkpointed distributed
+    # and the plan is the region-table shape: the checkpointed distributed
     # cover (Scan ExistingRDD; the broadcast path scans a LocalTableScan)
     # joined through a shuffle, since 100 cells is below its cover too
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -141,9 +143,9 @@ def test_pip_join_post_build_fallback_shuffles_driver_cover(spark, monkeypatch):
     monkeypatch.setattr(SJ, "MAX_BROADCAST_CELLS", limit)
 
     def no_distributed_build(*args, **kwargs):
-        raise AssertionError("build_cover_df called")
+        raise AssertionError("_build_cover_df called")
 
-    monkeypatch.setattr(SJ, "build_cover_df", no_distributed_build)
+    monkeypatch.setattr(SJ, "_build_cover_df", no_distributed_build)
     n = 3000
     rng = np.random.default_rng(51)
     lon, lat = rng.uniform(-1.0, 21.0, n), rng.uniform(-1.0, 11.0, n)
@@ -179,15 +181,15 @@ def test_antimeridian_crossing_region(spark):
         for i in np.nonzero((slon >= 170) & (slon <= 190) & (lat >= 10) & (lat <= 20))[0]
     }
     assert got == expected
-    # partitioned path agrees too, also from a region table holding the
-    # unsplit ring (a boundaries parquet need not be split)
+    # a region table agrees too, also one holding the unsplit ring (a
+    # boundaries parquet need not be split)
     for regions_df in (
         SJ.regions_to_df(spark, region),
         spark.createDataFrame([(9, G.pack_rings([ring]))], SJ.REGIONS_DF_SCHEMA),
     ):
         got2 = {
             r["idx"]
-            for r in SJ.pip_join_partitioned(pts, regions_df, keep_cols=["idx"]).collect()
+            for r in SJ.pip_join(spark, pts, regions_df, keep_cols=["idx"]).collect()
         }
         assert got2 == expected
     # normalize_rings itself: two parts, each within [-180, 180]
@@ -214,7 +216,7 @@ def test_partitioned_refine_boundary_skew_without_python(spark):
     lat = rng.uniform(y0 - 0.1, y1 + 0.1, n)
     pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
     regions_df = SJ.regions_to_df(spark, regions)
-    out = SJ.pip_join_partitioned(pts, regions_df, keep_cols=["idx"])
+    out = SJ.pip_join(spark, pts, regions_df, keep_cols=["idx"])
     got = {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}
     assert got == oracle_assignments(lon, lat, regions)
     plan = out._jdf.queryExecution().executedPlan().toString()

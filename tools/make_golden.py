@@ -251,7 +251,7 @@ def _signed64(h: int) -> int:
 def _indep_simhash(text: str) -> int:
     """Scalar-python simhash: re.split tokens, xxh64 per token, per-bit
     majority loop — vs the engine's JVM xxhash64 + one vectorized numpy
-    fold over Arrow batches (dedup.simhash_fast_col)."""
+    fold over Arrow batches (dedup.simhash_col)."""
     import re
 
     t = (text or "").strip().lower()
