@@ -4,18 +4,21 @@ The north rule requires every partition to emit lineage + row-count metrics
 to a checkpoint manifest so jobs resume mid-shuffle. This is the Spark heir
 of the reference's done_ids dedup guard (/root/reference/pgsql2osm/
 pgsql2osm.py:521-522 etc. — "never fetch the same id twice") lifted from
-row granularity to partition granularity:
+row granularity to partition granularity. ``write_stage_with_manifest`` is
+one pass over its input, fresh job or resume alike:
 
-* a job writes output partitioned by a ``bucket`` column (e.g. cell prefix),
-  appending one manifest row per completed bucket: (job_id, bucket,
-  row_count, wrote_at, stage, input_fingerprint);
-* on restart, ``remaining_buckets`` anti-joins the manifest against the work
-  list — exactly all_subtract(todo, done) (SURVEY.md U2/J9) — and the job
-  re-plans only the unfinished buckets.
+* ``remaining_buckets`` left-anti-joins the rows against the buckets the
+  manifest lists as done for (job_id, stage) — exactly
+  all_subtract(todo, done) (SURVEY.md U2/J9). A fresh job's manifest is an
+  empty local relation, and Catalyst drops the join;
+* the rest is clustered by bucket and persisted, so the upstream runs once
+  and each bucket directory gets one file;
+* after the partitioned write, one manifest row per written bucket is
+  appended: (job_id, stage, bucket, row_count, started_at, wrote_at).
 
 The manifest itself is a plain parquet append (atomic at file granularity);
-row counts double as the progress/rate telemetry the reference logs
-(log.py:136-147, SURVEY.md A2/X12).
+row counts and the call's start and end times double as the progress/rate
+telemetry the reference logs (log.py:136-147, SURVEY.md A2/X12).
 """
 
 from __future__ import annotations
@@ -27,11 +30,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import sql_ident
-
 MANIFEST_SCHEMA = (
     "job_id string, stage string, bucket long, row_count long, "
-    "input_fingerprint string, wrote_at double"
+    "started_at double, wrote_at double"
 )
 
 
@@ -42,42 +43,44 @@ def write_stage_with_manifest(
     job_id: str,
     stage: str,
     bucket_col: str,
-    input_fingerprint: str = "",
 ) -> None:
-    """Write df partitioned by bucket, then append per-bucket manifest rows.
+    """Write df's unfinished buckets partitioned by bucket, then append one
+    manifest row per bucket written.
 
-    Restart-safe: buckets listed in the manifest are skipped by the caller
-    (see remaining_buckets); a crash between data write and manifest append
-    re-writes that bucket idempotently (partition overwrite)."""
-    data_dir = os.path.join(out_dir, stage)
-    todo = remaining_buckets(spark, df.select(F.col(bucket_col).alias("bucket")).distinct(),
-                             out_dir, job_id, stage)
-    todo_ids = [r["bucket"] for r in todo.collect()]
-    if not todo_ids:
-        return
-    # cache: counts below must describe exactly what was written, and the
-    # upstream pipeline (often a full PIP join) must not execute twice. One
-    # SQL IN-list: Column.isin would cost a py4j round trip per bucket id.
-    in_list = ", ".join(str(int(b)) for b in todo_ids)
-    part = df.where(F.expr(f"{sql_ident(bucket_col)} IN ({in_list})")).persist()
-    (
-        part.withColumn("_bucket", F.col(bucket_col))
-        .write.mode("overwrite")
-        .partitionBy("_bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(data_dir)
-    )
-    counts = (
-        part.groupBy(F.col(bucket_col).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("row_count"))
-        .withColumn("job_id", F.lit(job_id))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("input_fingerprint", F.lit(input_fingerprint))
-        .withColumn("wrote_at", F.lit(time.time()))
-        .select("job_id", "stage", "bucket", "row_count", "input_fingerprint", "wrote_at")
-    )
-    counts.write.mode("append").parquet(_manifest_path(out_dir))
-    part.unpersist()
+    Restart-safe: buckets the manifest lists are filtered out, and a
+    complete job writes and appends nothing; a crash between data write and
+    manifest append re-writes that bucket idempotently (partition
+    overwrite)."""
+    started_at = time.time()
+    # repartition: a bucket's rows meet in one task, which writes its one
+    # file; persist: the counts must describe exactly what was written, and
+    # the upstream (often a full PIP join) must run once
+    part = remaining_buckets(spark, df, out_dir, job_id, stage, bucket_col)
+    part = part.repartition(bucket_col).persist()
+    try:
+        counts = part.groupBy(F.col(bucket_col).alias("bucket")).agg(
+            F.count(F.lit(1)).alias("row_count")
+        )
+        if counts.isEmpty():
+            return
+        (
+            part.withColumn("_bucket", F.col(bucket_col))
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(os.path.join(out_dir, stage))
+        )
+        (
+            counts.withColumn("job_id", F.lit(job_id))
+            .withColumn("stage", F.lit(stage))
+            .withColumn("started_at", F.lit(started_at))
+            .withColumn("wrote_at", F.lit(time.time()))
+            .select("job_id", "stage", "bucket", "row_count", "started_at", "wrote_at")
+            .write.mode("append")
+            .parquet(_manifest_path(out_dir))
+        )
+    finally:
+        part.unpersist()
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -94,57 +97,33 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        # limit(0) optimises to an empty local relation, which Catalyst
+        # propagates: a fresh job's resume anti-join is dropped at planning
+        return spark.createDataFrame([], MANIFEST_SCHEMA).limit(0)
 
 
 def remaining_buckets(
-    spark: SparkSession, all_buckets: DataFrame, out_dir: str, job_id: str, stage: str
+    spark: SparkSession, df: DataFrame, out_dir: str, job_id: str, stage: str, bucket_col: str
 ) -> DataFrame:
-    """Work list minus completed buckets — the resume anti-join."""
+    """df's rows whose bucket the manifest does not list as done — the
+    resume anti-join."""
     done = (
         read_manifest(spark, out_dir)
         .where((F.col("job_id") == job_id) & (F.col("stage") == stage))
         .select("bucket")
-        .distinct()
     )
-    return all_buckets.join(done, "bucket", "left_anti")
-
-
-def rolling_rate(
-    spark: SparkSession, out_dir: str, job_id: str, window_sec: float = 60.0
-) -> DataFrame:
-    """Rolling throughput per stage: for every manifest append, rows written
-    in the trailing ``window_sec`` divided by the window span — the
-    reference's rolling-window rate logger (log.py:165-230, SURVEY.md A4)
-    lifted from its in-process deque to a range-frame window over
-    partition-completion events, so it works post-hoc on any manifest."""
-    from pyspark.sql.window import Window
-
-    m = read_manifest(spark, out_dir).where(F.col("job_id") == job_id)
-    # range frames take integer bounds: order on millisecond longs
-    m = m.withColumn("_t_ms", (F.col("wrote_at") * 1000.0).cast("long"))
-    w = (
-        Window.partitionBy("stage")
-        .orderBy(F.col("_t_ms"))
-        .rangeBetween(-int(window_sec * 1000), 0)
-    )
-    return m.select(
-        "stage",
-        "bucket",
-        "wrote_at",
-        (F.sum("row_count").over(w) / F.lit(float(window_sec))).alias("rows_per_sec_rolling"),
-        F.count(F.lit(1)).over(w).alias("buckets_in_window"),
-    )
+    return df.join(done, df[bucket_col] == done["bucket"], "left_anti")
 
 
 def job_progress(spark: SparkSession, out_dir: str, job_id: str) -> DataFrame:
     """Rows/sec + totals per stage from manifest rows — the telemetry view
-    (reference: rolling-window rate logger, log.py:165-230)."""
+    (reference: rolling-window rate logger, log.py:165-230). The rate runs
+    from the first call's start to the last bucket written."""
     m = read_manifest(spark, out_dir).where(F.col("job_id") == job_id)
     return m.groupBy("stage").agg(
         F.count(F.lit(1)).alias("buckets_done"),
         F.sum("row_count").alias("rows"),
-        F.min("wrote_at").alias("t0"),
+        F.min("started_at").alias("t0"),
         F.max("wrote_at").alias("t1"),
     ).withColumn(
         "rows_per_sec",

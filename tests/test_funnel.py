@@ -4,12 +4,13 @@ model on a planted corpus where EVERY stage drops at least one document
 alone never exercises stages 6-7)."""
 
 import hashlib
+import os
 import re
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E  # noqa: E402
 from pgsql2osm_spark.operators import curation as CU  # noqa: E402
 from pgsql2osm_spark.operators import text as TX  # noqa: E402

@@ -1,6 +1,8 @@
 """Engine outputs vs COMMITTED golden parquet (generated by the independent
 numpy oracles in tools/make_golden.py — catches engine/kernel drift)."""
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -10,7 +12,7 @@ from pgsql2osm_spark.operators import knn as K
 from pgsql2osm_spark.operators import spatial_join as SJ
 from pgsql2osm_spark.sources import fixtures as FX
 
-GOLDEN = "/root/repo/golden"
+GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "golden")
 N = 4000
 
 
@@ -58,8 +60,6 @@ def test_oracle_golden_files_exist_and_load():
     """Every golden-parquet-backed oracle must ship its file (a changed
     engine-only query without `make_golden --oracle` regeneration should
     fail HERE, not at the driver's gate)."""
-    import os
-
     import pandas as pd
 
     import __spark_entry__ as E

@@ -18,24 +18,44 @@ def _pts(spark, n):
 
 
 def test_manifest_write_and_resume(spark, tmp_path):
+    """One pass: the upstream runs once per call, each bucket directory gets
+    one file, a complete resume writes nothing, and a one-call job has a
+    rate."""
+    import glob
+
     out = str(tmp_path / "job")
-    df = _pts(spark, 2000)
+    n = 2000
+    seen = spark.sparkContext.accumulator(0)
+
+    def passthrough(c):
+        seen.add(1)
+        return c
+
+    # the bucket column itself comes through the counting UDF, so every
+    # pass over the upstream that reads it shows in the accumulator
+    df = _pts(spark, n).withColumn("cell", F.udf(passthrough, "long")("cell"))
     M.write_stage_with_manifest(spark, df, out, job_id="j1", stage="tiles", bucket_col="cell")
+    assert seen.value == n
     m1 = M.read_manifest(spark, out)
     n_buckets = m1.count()
     assert n_buckets > 0
-    assert m1.agg(F.sum("row_count")).collect()[0][0] == 2000
-    # resume: everything done -> no remaining buckets, second write is a no-op
-    rem = M.remaining_buckets(spark, df.select(F.col("cell").alias("bucket")).distinct(), out, "j1", "tiles")
-    assert rem.count() == 0
+    assert m1.agg(F.sum("row_count")).collect()[0][0] == n
+    dirs = glob.glob(f"{out}/tiles/_bucket=*")
+    assert len(dirs) == n_buckets
+    assert all(len(glob.glob(f"{d}/*.parquet")) == 1 for d in dirs)
+    # resume: everything done -> no remaining rows, second write is a no-op
+    assert M.remaining_buckets(spark, _pts(spark, n), out, "j1", "tiles", "cell").count() == 0
+    seen.value = 0
     M.write_stage_with_manifest(spark, df, out, job_id="j1", stage="tiles", bucket_col="cell")
+    assert seen.value <= n
     assert M.read_manifest(spark, out).count() == n_buckets  # no duplicate manifest rows
     # written data matches input
     data = spark.read.parquet(f"{out}/tiles")
-    assert data.count() == 2000
-    # progress telemetry view
+    assert data.count() == n
+    # progress telemetry view: a rate from the call's start to its write
     prog = M.job_progress(spark, out, "j1").collect()
-    assert prog[0]["rows"] == 2000
+    assert prog[0]["rows"] == n
+    assert prog[0]["rows_per_sec"] is not None and prog[0]["rows_per_sec"] > 0
 
 
 def test_manifest_partial_resume(spark, tmp_path):
@@ -46,8 +66,8 @@ def test_manifest_partial_resume(spark, tmp_path):
     M.write_stage_with_manifest(
         spark, df.where(F.col("cell").isin(half)), out, job_id="j2", stage="s", bucket_col="cell"
     )
-    rem = M.remaining_buckets(spark, df.select(F.col("cell").alias("bucket")).distinct(), out, "j2", "s")
-    rem_set = {r["bucket"] for r in rem.collect()}
+    rem = M.remaining_buckets(spark, df, out, "j2", "s", "cell").select("cell").distinct()
+    rem_set = {r["cell"] for r in rem.collect()}
     assert rem_set == set(cells) - set(half)
     # finish the rest; total rows across both writes == input
     M.write_stage_with_manifest(spark, df, out, job_id="j2", stage="s", bucket_col="cell")
@@ -71,6 +91,16 @@ def test_read_manifest_missing_is_empty_corrupt_raises(spark, tmp_path):
     (bad / "part-0.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         M.read_manifest(spark, str(tmp_path / "corrupt")).count()
+    # a manifest written before started_at existed (its fifth column was
+    # input_fingerprint) still reads, with started_at NULL
+    old = str(tmp_path / "old")
+    spark.createDataFrame(
+        [("j", "s", 1, 5, "", 1.0)],
+        "job_id string, stage string, bucket long, row_count long, "
+        "input_fingerprint string, wrote_at double",
+    ).write.parquet(f"{old}/_manifest")
+    row = M.read_manifest(spark, old).collect()[0]
+    assert (row["row_count"], row["started_at"], row["wrote_at"]) == (5, None, 1.0)
 
 
 def test_split_hot_cells(spark):

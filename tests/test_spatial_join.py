@@ -1,6 +1,7 @@
 """Flagship PIP-join parity: Spark two-stage join == brute-force numpy oracle."""
 
 import logging
+import os
 
 import numpy as np
 import pandas as pd
@@ -71,7 +72,7 @@ def test_pip_join_random_polygons_property(spark):
     division-form even-odd oracle — correctness beyond the fixture set."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.make_golden import _indep_point_in_rings
 
     n = 2500

@@ -1,5 +1,7 @@
 """Table sources: partitioned and bucketed writes, co-located joins."""
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -48,7 +50,6 @@ def test_write_bucketed_orphan_guard(spark):
     dir is deleted and rewritten ONLY when it looks like a completed orphan;
     a dir with an in-flight _temporary staging dir (concurrent writer
     marker) makes write_bucketed refuse loudly and leave the dir alone."""
-    import os
     import shutil
 
     df = spark.range(10).withColumnRenamed("id", "k")
@@ -81,30 +82,6 @@ def test_write_bucketed_orphan_guard(spark):
             shutil.rmtree(loc)
 
 
-def test_rolling_rate_telemetry(spark, tmp_path):
-    """A4: rolling rows/sec over a trailing window of manifest events."""
-    import os
-
-    from pgsql2osm_spark.plans import manifest as M
-
-    rows = [
-        ("j1", "tiles", b, 100 * (b + 1), "", 1000.0 + 10.0 * b) for b in range(6)
-    ]
-    mdir = str(tmp_path / "out")
-    os.makedirs(mdir, exist_ok=True)
-    spark.createDataFrame(rows, M.MANIFEST_SCHEMA).write.parquet(f"{mdir}/_manifest")
-    got = {
-        (r["bucket"], r["buckets_in_window"], r["rows_per_sec_rolling"])
-        for r in M.rolling_rate(spark, mdir, "j1", window_sec=20.0).collect()
-    }
-    # window [-20s, 0]: bucket b sees itself plus up to 2 predecessors
-    exp = set()
-    for b in range(6):
-        in_w = [x for x in range(6) if 0 <= (b - x) * 10.0 <= 20.0]
-        exp.add((b, len(in_w), sum(100 * (x + 1) for x in in_w) / 20.0))
-    assert got == exp
-
-
 def test_closure_bucketed_query_plan_and_oracle(spark):
     """The entry-level bucketed closure query (q_closure_bucketed): the
     membership semi-join runs with zero Exchange on the join key (both
@@ -112,7 +89,7 @@ def test_closure_bucketed_query_plan_and_oracle(spark):
     exploded-edges filter (VERDICT r2 next #9)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
     from pgsql2osm_spark.sources import fixtures as FX
 
