@@ -4,8 +4,13 @@ Mirrors the reference's CLI surface (/root/reference/pgsql2osm/cli.py:7-44:
 mutually-exclusive bounds group --iso | --geojson | --bbox, an output target,
 verbosity) re-expressed for the Spark engine:
 
-    spark-submit --py-files $(python -m pgsql2osm_spark.session zip) \
-        -m pgsql2osm_spark.cli --input points.parquet \
+    python -m pgsql2osm_spark.cli --input points.parquet \
+        --bbox=-10,40,10,55 --out tiles_out --zoom 12
+
+or, with the package shipped to executors (tools/submit_job.py runs main):
+
+    ZIP=$(python -c 'from pgsql2osm_spark.session import make_pyfiles_zip; print(make_pyfiles_zip())')
+    spark-submit --py-files $ZIP tools/submit_job.py --input points.parquet \
         --bbox=-10,40,10,55 --out tiles_out --zoom 12
 
 Boundary selection composes exactly like the reference's make_bounds_constr

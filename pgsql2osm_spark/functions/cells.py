@@ -248,9 +248,9 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def with_cell_columns(df, lon: str, lat: str, res_list, names=None, base_res: int = MAX_RES):
+def with_cell_columns(df, lon: str, lat: str, res_list, names=None):
     """Attach one cell-id column per resolution with the heavy bit-spreading
-    computed ONCE (at base_res) and every coarser cell derived by a single
+    computed ONCE (at MAX_RES) and every coarser cell derived by a single
     shift — the hierarchy is literal bit truncation (m_r = m_26 >> 2*(26-r)).
 
     Uses chained projections instead of one inline expression: Spark's
@@ -266,7 +266,7 @@ def with_cell_columns(df, lon: str, lat: str, res_list, names=None, base_res: in
     from pyspark.sql import functions as F
 
     names = list(names or [f"h3_{r}" for r in res_list])
-    n = 1 << base_res
+    n = 1 << MAX_RES
 
     def step(df, exprs):
         return df.withColumns({k: F.expr(v) for k, v in exprs.items()})
@@ -284,7 +284,7 @@ def with_cell_columns(df, lon: str, lat: str, res_list, names=None, base_res: in
     df = step(
         df,
         {
-            name: f"shiftrightunsigned(_cx | shiftleft(_cy, 1), {2 * (base_res - r)}) "
+            name: f"shiftrightunsigned(_cx | shiftleft(_cy, 1), {2 * (MAX_RES - r)}) "
             f"| {r << _RES_SHIFT}"
             for r, name in zip(res_list, names)
         },

@@ -22,20 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _maybe_broadcast(id_set: DataFrame, seeds_broadcastable: bool | None) -> DataFrame:
-    """Broadcast an id-set join side only when the caller vouches it is small.
-
-    The reference's seed sets reach tens of millions of ids (47.1M nodes for
-    Switzerland, reference README.md:99) and billions at the 100 TB target —
-    forcing F.broadcast there OOMs the driver. Policy:
-      True  -> F.broadcast (caller knows the set is small, e.g. a bounded
-               relation-id list);
-      None/False -> plain join; Catalyst broadcasts below
-               autoBroadcastJoinThreshold from stats, and AQE upgrades a
-               shuffle join to broadcast at runtime when the built side
-               turns out small — so small sets still avoid the shuffle
-               without the caller risking an unbounded collect."""
-    return F.broadcast(id_set) if seeds_broadcastable else id_set
+# Rel-in-rel expansion passes: the reference's explicit 2-pass loop
+# (pgsql2osm.py:316) — NOT a full transitive closure (SURVEY.md X7).
+REL_PASSES = 2
 
 
 def parents_of(
@@ -43,7 +32,6 @@ def parents_of(
     seed_ids: DataFrame,
     member_type: str,
     parent_kind: str | None = None,
-    seeds_broadcastable: bool | None = None,
     distinct_output: bool = True,
 ) -> DataFrame:
     """Reverse membership join: ids of parents containing any seed id as a
@@ -52,8 +40,12 @@ def parents_of(
     SURVEY.md J2/J3/J4).
 
     seed_ids: DataFrame with column ``id``. Returns distinct parent ids as
-    column ``id``. Seed sets are NOT broadcast unless the caller passes
-    ``seeds_broadcastable=True`` (see _maybe_broadcast).
+    column ``id``. Seed sets are not broadcast here: the reference's reach
+    tens of millions of ids (47.1M nodes for Switzerland, reference
+    README.md:99). Catalyst broadcasts a side below
+    autoBroadcastJoinThreshold from stats and AQE turns a shuffle join into
+    a broadcast one at runtime when a side turns out small; a caller that
+    knows its seeds are small passes ``F.broadcast(seed_ids)``.
     ``distinct_output=False`` skips the dedup shuffle — for callers that
     union this output into a set they distinct anyway (nwr_within_closure):
     every distinct is a shuffle, and chaining them doubles shuffle count for
@@ -66,7 +58,7 @@ def parents_of(
         F.col("parent_id"), F.explode("members").alias("mem")
     ).where(F.col("mem.type") == member_type)
     out = edges.join(
-        _maybe_broadcast(seed_ids.select(F.col("id")), seeds_broadcastable),
+        seed_ids.select(F.col("id")),
         edges["mem.ref"] == F.col("id"),
         "left_semi",
     ).select(F.col("parent_id").alias("id"))
@@ -77,7 +69,6 @@ def children_of(
     memberships: DataFrame,
     parent_ids: DataFrame,
     parent_kind: str | None = None,
-    seeds_broadcastable: bool | None = None,
     distinct_output: bool = True,
 ) -> DataFrame:
     """Forward expansion: (type, id) of all members of the given parents
@@ -87,8 +78,7 @@ def children_of(
     if parent_kind is not None:
         m = m.where(F.col("parent_kind") == parent_kind)
     out = (
-        m.join(_maybe_broadcast(parent_ids.select(F.col("id")), seeds_broadcastable),
-               m["parent_id"] == F.col("id"), "left_semi")
+        m.join(parent_ids.select(F.col("id")), m["parent_id"] == F.col("id"), "left_semi")
         .select(F.explode("members").alias("mem"))
         .select(F.col("mem.type").alias("kind"), F.col("mem.ref").alias("id"))
     )
@@ -100,12 +90,10 @@ def rels_children_closure(
     seed_rel_ids: DataFrame,
     only_multipolygon: bool = False,
     without_rels: bool = False,
-    passes: int = 2,
-    seeds_broadcastable: bool | None = None,
 ) -> DataFrame:
     """Relation member expansion with bounded rel-in-rel nesting.
 
-    Exactly ``passes`` iterations (default 2) to match the reference's
+    Exactly ``REL_PASSES`` iterations to match the reference's
     explicit 2-pass loop — NOT a full transitive closure; parity requires
     stopping where the reference stops (pgsql2osm.py:316, 364-365;
     SURVEY.md X7). Flags mirror only_multipolygon_rels / without_rels
@@ -125,17 +113,9 @@ def rels_children_closure(
         rels = rels.where(F.col("tags")["type"] == "multipolygon")
     frontier = seed_rel_ids.select("id")
     collected = None
-    effective_passes = 1 if without_rels else passes
-    for i in range(effective_passes):
-        # pass 0's frontier is the caller's seed set (honors the hint);
-        # later frontiers are computed id-sets of unknown size — never forced
-        frontier_hint = seeds_broadcastable if i == 0 else None
+    for _ in range(1 if without_rels else REL_PASSES):
         members = (
-            rels.join(
-                _maybe_broadcast(frontier, frontier_hint),
-                rels["parent_id"] == frontier["id"],
-                "left_semi",
-            )
+            rels.join(frontier, rels["parent_id"] == frontier["id"], "left_semi")
             .select(F.explode("members").alias("mem"))
             .select(F.col("mem.type").alias("kind"), F.col("mem.ref").alias("id"))
         )
@@ -153,13 +133,11 @@ def rels_children_closure(
 def ways_children_nodes(
     memberships: DataFrame,
     way_ids: DataFrame,
-    seeds_broadcastable: bool | None = None,
     distinct_output: bool = True,
 ) -> DataFrame:
     """way -> child node ids (pgsql2osm.py:369-385, SURVEY.md J6)."""
     out = (
-        children_of(memberships, way_ids, parent_kind="W",
-                    seeds_broadcastable=seeds_broadcastable, distinct_output=False)
+        children_of(memberships, way_ids, parent_kind="W", distinct_output=False)
         .where(F.col("kind") == "N")
         .select("id")
     )
@@ -203,7 +181,6 @@ def nwr_within_closure(
     seed_rels: DataFrame,
     only_multipolygon: bool = False,
     without_rels: bool = False,
-    seeds_broadcastable: bool | None = None,
 ) -> dict[str, DataFrame]:
     """The reference's full 4-phase id-closure (stream_osm_xml phases
     'within'->'children'->'parents', pgsql2osm.py:399-432) over the
@@ -220,36 +197,35 @@ def nwr_within_closure(
     (ways_parent_r is defined-but-disabled in the reference, pgsql2osm.py:427
     — matched by not calling parents_of(..., 'W', 'R') here.)
 
-    ``seeds_broadcastable=True`` marks the three caller seed sets as small
-    enough to broadcast; derived frontiers are never forced (_maybe_broadcast).
-
     Shuffle economy: (a) union everything per entity class FIRST, distinct
     ONCE (inner operators skip their dedup via distinct_output=False);
     (b) the multiply-referenced intermediate id-sets (nodes_within x3,
-    rel_members x3, ways_pre_parents x2) are lazily localCheckpoint()ed —
-    without that, every reference re-executes its semi-join subtree against
-    the full membership table (a DataFrame plan, unlike an RDD, is NOT
-    deduplicated across references). Id-sets are orders of magnitude smaller
-    than the membership table, and checkpoint blocks are GC-cleaned.
+    rel_members x3, ways_pre_parents x2) are localCheckpoint()ed — without
+    that, every reference re-executes its semi-join subtree against the full
+    membership table (a DataFrame plan, unlike an RDD, is NOT deduplicated
+    across references). Id-sets are orders of magnitude smaller than the
+    membership table, and checkpoint blocks are GC-cleaned. The checkpoints
+    are eager: with lazy ones, tasks that ran while the driver's GC cleaned
+    up reported to accumulators that no longer existed, and the DAGScheduler
+    logged one "non-existent accumulator" ERROR trace per task (75-125 over
+    two export runs; tests/test_closure.py).
     """
-    nodes_within = seed_nodes.select("id").distinct().localCheckpoint(eager=False)
+    nodes_within = seed_nodes.select("id").distinct().localCheckpoint()
 
     rel_members = rels_children_closure(
         memberships, seed_rels, only_multipolygon=only_multipolygon,
-        without_rels=without_rels, seeds_broadcastable=seeds_broadcastable,
-    ).localCheckpoint(eager=False)
+        without_rels=without_rels,
+    ).localCheckpoint()
     parent_ways = parents_of(memberships, nodes_within, "N", parent_kind="W",
-                             seeds_broadcastable=seeds_broadcastable,
                              distinct_output=False)
     parent_rels = parents_of(memberships, nodes_within, "N", parent_kind="R",
-                             seeds_broadcastable=seeds_broadcastable,
                              distinct_output=False)
 
     ways_pre_parents = (
         seed_ways.select("id")
         .unionByName(rel_members.where(F.col("kind") == "W").select("id"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     ways = ways_pre_parents.unionByName(parent_ways).distinct()
     rels = seed_rels.select("id")

@@ -25,6 +25,14 @@ from pyspark.sql import types as T
 
 from .text import fingerprint_col
 
+# Band buckets holding more rows than this are dropped before a bucket
+# self-join: a bucket of b rows costs b^2/2 pairs (see _drop_oversized).
+MAX_BUCKET = 65536
+# MinHash signature width and shingle length of minhash_lsh_candidates.
+N_HASHES = 64
+SHINGLE_K = 5
+
+
 # ---------------------------------------------------------------------------
 # Exact dedup.
 # ---------------------------------------------------------------------------
@@ -52,7 +60,9 @@ def _splitmix64_np(x: np.ndarray) -> np.ndarray:
         return x ^ (x >> np.uint64(31))
 
 
-def minhash_signature(texts: pd.Series, n_hashes: int = 64, shingle_k: int = 5) -> np.ndarray:
+def minhash_signature(
+    texts: pd.Series, n_hashes: int = N_HASHES, shingle_k: int = SHINGLE_K
+) -> np.ndarray:
     """(len(texts), n_hashes) uint64 MinHash signatures over k-char shingles.
 
     One base hash per shingle (FNV-1a 64), then n_hashes cheap derived
@@ -100,14 +110,27 @@ def minhash_signature(texts: pd.Series, n_hashes: int = 64, shingle_k: int = 5) 
     return out
 
 
+def _drop_oversized(banded: DataFrame, key: list[str]) -> DataFrame:
+    """``banded`` without the rows of buckets (equal ``key``) holding more
+    than ``MAX_BUCKET`` rows. Such buckets are non-discriminative by
+    definition, and at 10^12 docs boilerplate or empty inputs collapse into
+    one, which a bucket self-join would turn into a quadratic explosion."""
+    oversized = (
+        banded.groupBy(*key)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > MAX_BUCKET)
+        .select(*key)
+    )
+    # tiny by construction (each entry stands for > MAX_BUCKET rows):
+    # broadcast anti-join, the banded side never shuffles
+    return banded.join(F.broadcast(oversized), key, "left_anti")
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = 64,
     bands: int = 16,
-    shingle_k: int = 5,
-    max_bucket: int | None = 65536,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash LSH.
 
@@ -115,17 +138,15 @@ def minhash_lsh_candidates(
     groupBy(band, digest) bucket join -> distinct candidate pairs (a < b).
     Only same-bucket docs ever pair: no all-pairs blowup at scale.
 
-    ``max_bucket`` drops degenerate buckets holding more than that many
-    documents BEFORE the self-join (a bucket shared by b docs costs b^2/2
-    pairs; a boilerplate-heavy band digest shared by 1% of a 10^12 corpus
-    would otherwise be a quadratic explosion). Dropped buckets are
-    non-discriminative by definition — a pair sharing one is overwhelmingly
-    likely to share a smaller one too; pass None to disable the cap."""
-    rows_per_band = n_hashes // bands
+    Buckets holding more than ``MAX_BUCKET`` documents are dropped BEFORE
+    the self-join (a boilerplate-heavy band digest shared by 1% of a 10^12
+    corpus would otherwise be a quadratic explosion); a pair sharing one is
+    overwhelmingly likely to share a smaller one too."""
+    rows_per_band = N_HASHES // bands
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_digests(texts: pd.Series) -> pd.Series:
-        sig = minhash_signature(texts, n_hashes, shingle_k)
+        sig = minhash_signature(texts)
         n = len(texts)
         digs = np.empty((n, bands), dtype=np.int64)
         for b in range(bands):
@@ -143,17 +164,7 @@ def minhash_lsh_candidates(
     # signature UDF per occurrence (measured 3-4 ArrowEvalPython stages).
     # localCheckpoint blocks are GC-cleaned, unlike persist entries. Size is
     # bands x 2 longs per doc — parquet-materialize instead for 10^12-doc runs.
-    banded = banded.localCheckpoint(eager=False)
-    if max_bucket is not None:
-        oversized = (
-            banded.groupBy("band", "digest")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_bucket)
-            .select("band", "digest")
-        )
-        # the oversized list is tiny by construction (each entry represents
-        # > max_bucket docs) — broadcast anti-join keeps banded unshuffled
-        banded = banded.join(F.broadcast(oversized), ["band", "digest"], "left_anti")
+    banded = _drop_oversized(banded.localCheckpoint(eager=False), ["band", "digest"])
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -210,7 +221,6 @@ def simhash_col(text: str = "text") -> F.Column:
 
 def _banded_hamming_pairs(
     hashed: DataFrame, hash_col: str, id_col: str, max_hamming: int, total_bits: int = 64,
-    max_bucket: int | None = 65536,
     group_col: str | None = None,
 ) -> DataFrame:
     """Complete near-dup candidate generation for ``total_bits``-wide hashes:
@@ -224,17 +234,13 @@ def _banded_hamming_pairs(
     would put all the meaningful bits in band 0 and make the zero-filled
     bands collide everything (an accidental all-pairs join).
 
-    ``max_bucket`` drops band buckets holding more than that many rows
-    BEFORE the per-band self-join — same rationale as the cap in
-    minhash_lsh_candidates: a bucket of b rows costs b^2/2 pairs, and at
-    10^12 docs boilerplate/empty inputs collapse to one hash value (empty
-    text -> simhash 0 by construction), so one degenerate bucket would be a
-    quadratic explosion. Dropping an oversized bucket weakens the pigeonhole
-    COMPLETENESS guarantee only for pairs all of whose shared bands are
-    oversized — i.e. pairs indistinguishable from >max_bucket other rows in
-    every matching band, which is exactly the non-discriminative boilerplate
-    the cap exists to shed (true hash-identical floods still surface through
-    exact_dedup). Pass None to restore unconditional completeness.
+    Band buckets holding more than ``MAX_BUCKET`` rows are dropped BEFORE
+    the self-join (_drop_oversized; empty text -> simhash 0 by
+    construction). That weakens the pigeonhole COMPLETENESS guarantee only
+    for pairs all of whose shared bands are oversized — i.e. pairs
+    indistinguishable from >MAX_BUCKET other rows in every matching band,
+    which is exactly the non-discriminative boilerplate the cap exists to
+    shed (true hash-identical floods still surface through exact_dedup).
 
     ``group_col`` names an optional pre-existing column that must ALSO match
     for rows to be candidates (e.g. an LSH table index when the caller
@@ -293,16 +299,7 @@ def _banded_hamming_pairs(
         )
     )
     key = [*extra, "_bi", "_bv"]
-    if max_bucket is not None:
-        oversized = (
-            h.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_bucket)
-            .select(*key)
-        )
-        # tiny by construction (each entry stands for > max_bucket rows):
-        # broadcast anti-join, the banded side never shuffles
-        h = h.join(F.broadcast(oversized), key, "left_anti")
+    h = _drop_oversized(h, key)
     a, b = h.alias("a"), h.alias("b")
     cand = a.join(
         b,
@@ -320,24 +317,21 @@ def _banded_hamming_pairs(
 
 def simhash_near_dups(
     df: DataFrame, text: str = "text", id_col: str = "doc_id", max_hamming: int = 3,
-    max_bucket: int | None = 65536, drop_empty: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash — CONDITIONALLY complete recall at the
     given radius: banded multi-table candidate generation + exact hamming
     filter finds every qualifying pair EXCEPT those whose every shared band
-    bucket exceeds ``max_bucket`` rows (the default 65536 sheds degenerate
-    boilerplate buckets; such pairs are indistinguishable from >max_bucket
-    other rows in all matching bands). Pass ``max_bucket=None`` for the
-    unconditional pigeonhole guarantee (see _banded_hamming_pairs).
+    bucket exceeds ``MAX_BUCKET`` rows (degenerate boilerplate buckets; such
+    pairs are indistinguishable from >MAX_BUCKET other rows in all matching
+    bands; see _banded_hamming_pairs).
 
-    ``drop_empty`` excludes zero-token documents before banding: every empty
-    doc simhashes to 0 (no signal), so at corpus scale they form one
-    degenerate bucket in every band — and empty-vs-empty duplicates are
-    exact duplicates, already owned by exact_dedup."""
-    if drop_empty:
-        df = df.where(F.length(F.trim(F.col(text))) > 0)
+    Zero-token documents are excluded before banding: every empty doc
+    simhashes to 0 (no signal), so at corpus scale they form one degenerate
+    bucket in every band — and empty-vs-empty duplicates are exact
+    duplicates, already owned by exact_dedup."""
+    df = df.where(F.length(F.trim(F.col(text))) > 0)
     sh = df.select(F.col(id_col), simhash_col(text).alias("simhash"))
-    return _banded_hamming_pairs(sh, "simhash", id_col, max_hamming, max_bucket=max_bucket)
+    return _banded_hamming_pairs(sh, "simhash", id_col, max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -376,15 +370,12 @@ def word_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def phash_near_dups(
-    images: DataFrame, max_hamming: int = 6, max_bucket: int | None = 65536
-) -> DataFrame:
+def phash_near_dups(images: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Near-duplicate images by perceptual hash — banded candidate
     generation over the phash column of the input_hint schema, with recall
     complete EXCEPT for pairs whose every shared band bucket exceeds
-    ``max_bucket`` rows (degenerate buckets: uniform images — black frames,
+    ``MAX_BUCKET`` rows (degenerate buckets: uniform images — black frames,
     test cards — collapse to one phash and are shed; see
-    _banded_hamming_pairs). ``max_bucket=None`` restores the unconditional
-    guarantee."""
+    _banded_hamming_pairs)."""
     ph = images.select("image_id", "phash")
-    return _banded_hamming_pairs(ph, "phash", "image_id", max_hamming, max_bucket=max_bucket)
+    return _banded_hamming_pairs(ph, "phash", "image_id", max_hamming)

@@ -11,7 +11,7 @@ Algorithm: min-label propagation over the symmetrized edge list. Each round
 every vertex takes the minimum label in its closed neighborhood; labels are
 lazily localCheckpoint()ed per round (truncates the growing lineage — any
 iterative algorithm needs this or the plan tree doubles per round) and the
-loop stops at the fixpoint (no label changed) or ``max_iter``. Each round
+loop stops at the fixpoint (no label changed) or ``MAX_ITER``. Each round
 also pointer-jumps (label <- label(label)), so rounds needed are
 O(log diameter), not O(diameter); near-dup graphs are shallow anyway
 (clusters are quasi-cliques) and converge in a handful of rounds.
@@ -22,20 +22,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Label-propagation rounds before connected_components gives up: with
+# pointer jumping, enough for a diameter up to 2^25.
+MAX_ITER = 25
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(v, component) for every vertex in ``edges``; component = min vertex
-    id reachable from v. Deterministic, order-independent (SURVEY.md O1).
-    Min-label propagation with per-round pointer jumping: O(log diameter)
-    rounds."""
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(v, component) for every vertex of the ``(id_a, id_b)`` pair list
+    ``edges``; component = min vertex id reachable from v. Deterministic,
+    order-independent (SURVEY.md O1). Min-label propagation with per-round
+    pointer jumping: O(log diameter) rounds."""
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .unionByName(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -60,7 +59,7 @@ def connected_components(
 
     prev_sig = _sig(labels)  # also materializes the lazy checkpoints
     changed = True
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         neighbor_min = (
             sym.join(labels.withColumnRenamed("v", "u"), "u")
             .groupBy("v")
@@ -101,9 +100,9 @@ def connected_components(
         # silently returning partially-propagated labels would split true
         # components (and dedup_clusters would keep duplicate representatives)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
+            f"connected_components did not converge in {MAX_ITER} iterations "
             "(labels still changing — with pointer jumping that implies "
-            "diameter > 2^max_iter; raise max_iter)"
+            "diameter > 2^MAX_ITER; raise MAX_ITER)"
         )
     return labels.select(F.col("v"), F.col("label").alias("component"))
 

@@ -114,6 +114,8 @@ def _cell_min_dist_m(
 
 
 COARSE_PROBE_RES = 8  # 4^8 = 65,536 cells: the coarse-probe collect bound
+# Bound on the cells a two-level probe's fine collect may bring to the driver.
+MAX_FINE_CELLS = 4_000_000
 
 
 def _query_keep_masks(
@@ -158,7 +160,6 @@ def knn_rings(
     res: int = 7,
     point_id: str = "image_id",
     query_id: str = "query_id",
-    max_fine_cells: int = 4_000_000,
 ) -> DataFrame:
     """Exact kNN via cell-count probes + one bounded candidate join — the
     scale path of SURVEY.md J11 (the r1 design ran one job per doubling
@@ -176,7 +177,7 @@ def knn_rings(
     in the union of kept coarse cells (cells.cell_parent_expr + IN-list —
     the fact table still never shuffles), with the fine collect bounded a
     priori by sum(min(4^(res-8), n_coarse)) over kept coarse cells and
-    guarded by ``max_fine_cells``. Correctness: a fine cell outside every
+    guarded by ``MAX_FINE_CELLS``. Correctness: a fine cell outside every
     kept coarse cell has min-dist > its query's coarse U >= the k-th
     distance, so its points are provably excluded; the fine masks then
     tighten U on the restricted cell set.
@@ -215,10 +216,10 @@ def knn_rings(
         bound = int(
             np.minimum(ccounts[union], 1 << (2 * (res - COARSE_PROBE_RES))).sum()
         )
-        if bound > max_fine_cells:
+        if bound > MAX_FINE_CELLS:
             raise ValueError(
                 f"fine probe could collect up to {bound} cells at res {res} "
-                f"(> max_fine_cells={max_fine_cells}); lower res or raise the cap"
+                f"(> MAX_FINE_CELLS={MAX_FINE_CELLS}); lower res"
             )
         # one F.expr for the whole IN-list: Column.isin costs one py4j round
         # trip per literal (up to 65,536 here)

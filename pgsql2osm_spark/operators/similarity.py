@@ -22,6 +22,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .dedup import _banded_hamming_pairs
+
+# Seed of the random hyperplanes and of ivf_topk's random codebook: seeded
+# so signatures are reproducible across runs.
+SEED = 42
+# embedding_near_dups' LSH: signature bits per table, band radius and
+# independent plane sets (see its docstring for why these values).
+N_PLANES = 32
+MAX_HAMMING = 2
+N_TABLES = 2
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -63,12 +74,12 @@ def cosine_topk_bruteforce(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+def _hyperplanes(dim: int, n_planes: int, seed: int = SEED) -> np.ndarray:
     rng = np.random.Generator(np.random.PCG64(seed))
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def lsh_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
+def lsh_signature_udf(dim: int, n_planes: int = 16, seed: int = SEED):
     planes = _hyperplanes(dim, n_planes, seed)
 
     @F.pandas_udf(T.LongType())
@@ -139,7 +150,6 @@ def ivf_topk(
     dim: int,
     n_centroids: int = 32,
     n_probe: int = 4,
-    seed: int = 42,
     vec_col: str = "embedding",
     corpus_id: str = "vec_id",
     query_id: str = "query_id",
@@ -161,7 +171,7 @@ def ivf_topk(
         if cents.shape != (n_centroids, dim):
             raise ValueError(f"codebook shape {cents.shape} != ({n_centroids}, {dim})")
     else:
-        cents = _hyperplanes(dim, n_centroids, seed + 1)  # unit-ish random codebook
+        cents = _hyperplanes(dim, n_centroids, SEED + 1)  # unit-ish random codebook
         cents /= np.linalg.norm(cents, axis=1, keepdims=True)
 
     def assign_udf(n_best: int):
@@ -200,11 +210,6 @@ def embedding_near_dups(
     corpus: DataFrame,
     threshold: float = 0.98,
     dim: int = 64,
-    n_planes: int = 32,
-    max_hamming: int = 2,
-    n_tables: int = 2,
-    seed: int = 42,
-    max_bucket: int | None = 65536,
     vec_col: str = "embedding",
     corpus_id: str = "vec_id",
 ) -> DataFrame:
@@ -213,31 +218,29 @@ def embedding_near_dups(
     of MinHash dedup.
 
     Candidate generation reuses the pigeonhole-complete banded scheme of the
-    simhash/phash dedups (dedup._banded_hamming_pairs over the n_planes-bit
-    signature): every pair within ``max_hamming`` signature bits is
-    GUARANTEED to collide in at least one of the max_hamming+1 bands — the
+    simhash/phash dedups (dedup._banded_hamming_pairs over the N_PLANES-bit
+    signature): every pair within ``MAX_HAMMING`` signature bits is
+    GUARANTEED to collide in at least one of the MAX_HAMMING+1 bands — the
     r1 single-bucket join silently missed pairs differing in any one bit
     (VERDICT r1 'what's wrong #4'). Residual miss probability is only for
-    pairs whose signatures differ in > max_hamming planes: for cosine >=
+    pairs whose signatures differ in > MAX_HAMMING planes: for cosine >=
     threshold the per-plane flip probability is arccos(threshold)/pi (random
-    hyperplane LSH), so threshold 0.98, n_planes 32, max_hamming 2 leaves
+    hyperplane LSH), so threshold 0.98, N_PLANES 32, MAX_HAMMING 2 leaves
     P(miss) = P[Binom(32, 0.0641) > 2] ~= 33% per borderline pair PER TABLE.
 
-    ``n_tables`` INDEPENDENT plane sets (seeds seed+t) fix that borderline
-    recall: a pair is missed only if every table misses it, so the default
-    n_tables=2 drives the 0.98-borderline miss to ~0.33^2 ~= 11% (planted
+    ``N_TABLES`` INDEPENDENT plane sets (seeds SEED+t) fix that borderline
+    recall: a pair is missed only if every table misses it, so
+    N_TABLES=2 drives the 0.98-borderline miss to ~0.33^2 ~= 11% (planted
     cosine-0.985 pairs: per-table miss ~0.26 -> ~7% union miss, recall
     >= 0.9 — property-tested). More tables beat more planes here: raising
-    n_planes raises EXPECTED flips linearly (Binom mean = n_planes * p) so
-    recall at fixed max_hamming *drops*; raising max_hamming at fixed
-    n_planes narrows bands below the ~10-bit bucket-discipline floor
+    N_PLANES raises EXPECTED flips linearly (Binom mean = N_PLANES * p) so
+    recall at fixed MAX_HAMMING *drops*; raising MAX_HAMMING at fixed
+    N_PLANES narrows bands below the ~10-bit bucket-discipline floor
     (measured 4x wall regression at 10-bit bands on 50k vectors). Identical
     duplicates flip no plane and are found by table 0 alone. Cost is
-    n_tables candidate generations — each still bucketed (never all-pairs),
-    and ``max_bucket`` sheds degenerate buckets (zero vectors sign-collapse)
-    per _banded_hamming_pairs."""
-    from .dedup import _banded_hamming_pairs
-
+    N_TABLES candidate generations — each still bucketed (never all-pairs),
+    and buckets over ``dedup.MAX_BUCKET`` rows are shed (zero vectors
+    sign-collapse) per _banded_hamming_pairs."""
     c = corpus.select(F.col(corpus_id), F.col(vec_col))
     # All tables' signatures feed ONE banded self-join: each table's rows
     # carry a table index that joins the band key (group_col), so candidate
@@ -246,16 +249,15 @@ def embedding_near_dups(
     # Exchanges). Set-identical: rows only pair within their own table's
     # bands, exactly as the former per-table union.
     sigs = None
-    for t in range(n_tables):
-        sig = lsh_signature_udf(dim, n_planes, seed=seed + t)
+    for t in range(N_TABLES):
+        sig = lsh_signature_udf(dim, N_PLANES, seed=SEED + t)
         sigd = (
             c.withColumn("_sig", sig(F.col(vec_col)))
             .select(F.lit(t).alias("_t"), F.col(corpus_id), "_sig")
         )
         sigs = sigd if sigs is None else sigs.unionByName(sigd)
     cand = _banded_hamming_pairs(
-        sigs, "_sig", corpus_id, max_hamming,
-        total_bits=n_planes, max_bucket=max_bucket, group_col="_t",
+        sigs, "_sig", corpus_id, MAX_HAMMING, total_bits=N_PLANES, group_col="_t"
     ).select("id_a", "id_b").distinct()
     a = c.select(F.col(corpus_id).alias("id_a"), F.col(vec_col).alias("_va"))
     b = c.select(F.col(corpus_id).alias("id_b"), F.col(vec_col).alias("_vb"))

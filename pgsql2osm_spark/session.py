@@ -37,16 +37,17 @@ CDS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 _JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
 
 
-def make_pyfiles_zip(dest: str | None = None) -> str:
+def make_pyfiles_zip() -> str:
     """Zip this package for spark-submit --py-files / addPyFile shipment —
-    the deployment unit the north rule's multi-executor run uses.
+    the deployment unit the north rule's multi-executor run uses. Writes
+    and returns ``<tempdir>/pgsql2osm_spark_pyfiles.zip``.
 
     No-ops (returns the existing zip) when the package was itself imported
     FROM a zip: os.walk can't see into zipimport paths, and overwriting the
     shipped zip with an empty one would break every later import."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    dest = dest or os.path.join(tempfile.gettempdir(), "pgsql2osm_spark_pyfiles.zip")
+    dest = os.path.join(tempfile.gettempdir(), "pgsql2osm_spark_pyfiles.zip")
     if not os.path.isdir(pkg_dir):  # zipimported — pkg_dir is inside a zip
         if os.path.exists(dest):
             return dest

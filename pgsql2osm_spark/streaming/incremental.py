@@ -21,31 +21,32 @@ from pyspark.sql import functions as F
 from ..functions import cells as C
 from ..functions import geometry as G
 
+# tile_count_stream's cell resolution, event-time column, lateness bound
+# and tumbling window.
+CELL_RES = 7
+EVENT_TIME = "ts"
+WATERMARK = "10 minutes"
+WINDOW = "5 minutes"
 
-def tile_count_stream(
-    stream: DataFrame,
-    z: int = 12,
-    cell_res: int = 7,
-    event_time: str = "ts",
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-) -> DataFrame:
+
+def tile_count_stream(stream: DataFrame, z: int = 12) -> DataFrame:
     """Streaming per-(window, tile) counts with late-data handling.
 
     stream: a streaming DataFrame with (ts:timestamp, lon:double,
     lat:double). Returns a streaming aggregation keyed by
-    (window, z, x, y, h3_cell) in update mode semantics.
+    (window, z, x, y, h3_cell) in update mode semantics; events later than
+    ``WATERMARK`` behind the latest event time are dropped.
     """
     x, y = G.tile_expr(F.col("lon"), F.col("lat"), z)
     keyed = (
-        stream.withWatermark(event_time, watermark)
+        stream.withWatermark(EVENT_TIME, WATERMARK)
         .withColumn("x", x)
         .withColumn("y", y)
         .withColumn("z", F.lit(z).cast("int"))
-        .withColumn("h3", C.cell_expr(F.col("lon"), F.col("lat"), cell_res))
+        .withColumn("h3", C.cell_expr(F.col("lon"), F.col("lat"), CELL_RES))
     )
     return keyed.groupBy(
-        F.window(F.col(event_time), window), "z", "x", "y", "h3"
+        F.window(F.col(EVENT_TIME), WINDOW), "z", "x", "y", "h3"
     ).agg(F.count(F.lit(1)).alias("n"))
 
 

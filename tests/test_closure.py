@@ -2,6 +2,11 @@
 encodes the reference engine's exact semantics (2-pass nesting, flags,
 first-wins cascade — SURVEY.md §5.5)."""
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from pyspark.sql import functions as F
 
 from pgsql2osm_spark.operators import closure as CL
@@ -100,9 +105,10 @@ def test_large_seed_set_is_not_broadcast(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     # the seed side must not be forced into a broadcast build
     assert "BroadcastExchange" not in plan, plan
-    # hinted-small seeds still broadcast (no shuffle of the membership table)
+    # seeds hinted small with Spark's own hint still broadcast (no shuffle of
+    # the membership table)
     small = spark.createDataFrame([(i,) for i in range(1, 50)], "id long")
-    out_small = CL.parents_of(mdf, small, "N", parent_kind="W", seeds_broadcastable=True)
+    out_small = CL.parents_of(mdf, F.broadcast(small), "N", parent_kind="W")
     plan_small = out_small._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_small, plan_small
     # and the result is identical either way
@@ -232,3 +238,46 @@ def test_closure_property_random_graphs(spark):
         assert got_sets["N"] == exp_n, f"seed {seed} N"
         assert got_sets["W"] == exp_w, f"seed {seed} W"
         assert got_sets["R"] == exp_r, f"seed {seed} R"
+
+
+# Runs q_export_pipeline twice in one session while a thread asks the
+# driver JVM for a GC every 50 ms, and prints whether both runs gave the same
+# rows. Between runs alone, a GC hit the race only now and then.
+RERUN = textwrap.dedent("""
+    import threading, time
+    import __spark_entry__ as E
+    from pgsql2osm_spark.session import get_spark
+    spark = get_spark(app="closure_rerun", master="local[4]", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    jvm = spark.sparkContext._jvm
+    done = threading.Event()
+    def collect_garbage():
+        while not done.is_set():
+            jvm.java.lang.System.gc()
+            time.sleep(0.05)
+    gc = threading.Thread(target=collect_garbage)
+    gc.start()
+    first = sorted(E.q_export_pipeline(spark, None).collect())
+    second = sorted(E.q_export_pipeline(spark, None).collect())
+    done.set()
+    gc.join()
+    print("SAME" if first == second and first else "DIFFERENT")
+    spark.stop()
+""")
+
+
+def test_closure_rerun_under_gc_logs_no_accumulator_errors(tmp_path):
+    """The closure's id-set checkpoints are eager. With lazy ones, the
+    export pipeline under driver GCs logged a DAGScheduler ERROR trace
+    "attempted to access non-existent accumulator" per task (75-125 over
+    two runs)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = root + os.pathsep + env.get("PYTHONPATH", "")
+    p = subprocess.run(
+        [sys.executable, "-c", RERUN], capture_output=True, text=True, env=env,
+        cwd=tmp_path, timeout=600,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    assert p.stdout.split()[-1] == "SAME", p.stdout
+    assert "non-existent accumulator" not in p.stderr, p.stderr[-3000:]

@@ -44,7 +44,7 @@ def test_connected_components_long_chain(spark):
     """Diameter stress: a 40-node path needs many propagation rounds."""
     edges = [(i, i + 1) for i in range(40)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["v"]: r["component"] for r in GR.connected_components(df, max_iter=50).collect()}
+    got = {r["v"]: r["component"] for r in GR.connected_components(df).collect()}
     assert got == {i: 0 for i in range(41)}
 
 
@@ -82,11 +82,12 @@ def test_hash_overflow_safe_and_duckdb_parity(spark):
     assert all(0 <= v < 4294967296 for v in got.values())
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     edges = [(i, i + 1) for i in range(60)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
+    monkeypatch.setattr(GR, "MAX_ITER", 3)
     with pytest.raises(RuntimeError, match="did not converge"):
-        GR.connected_components(df, max_iter=3)
+        GR.connected_components(df)
 
 
 def test_empty_and_degenerate_inputs(spark):

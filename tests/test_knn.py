@@ -105,12 +105,13 @@ def test_knn_rings_two_level_probe_equals_bruteforce(spark):
         assert ring_set == bf_set, res
 
 
-def test_knn_rings_fine_cap_guard(spark):
+def test_knn_rings_fine_cap_guard(spark, monkeypatch):
     """The a-priori fine-collect bound raises instead of collecting
-    unboundedly when max_fine_cells is exceeded."""
+    unboundedly when MAX_FINE_CELLS is exceeded."""
     import pytest
 
     pts = _points_df(spark, 2000)
     queries = pd.DataFrame({"query_id": [0], "lon": [8.54], "lat": [47.37]})
-    with pytest.raises(ValueError, match="max_fine_cells"):
-        K.knn_rings(spark, pts, queries, 5, res=13, max_fine_cells=10)
+    monkeypatch.setattr(K, "MAX_FINE_CELLS", 10)
+    with pytest.raises(ValueError, match="MAX_FINE_CELLS"):
+        K.knn_rings(spark, pts, queries, 5, res=13)

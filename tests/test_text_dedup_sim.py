@@ -262,40 +262,33 @@ def test_banded_near_dup_complete_recall(spark):
         assert ("h0", f"h{i}") in got, f"missed pair h0-h{i}"
 
 
-def test_banded_hamming_degenerate_bucket_cap(spark):
+def test_banded_hamming_degenerate_bucket_cap(spark, monkeypatch):
     """A 5000-row identical-hash flood (boilerplate collapse) is shed by
-    max_bucket BEFORE the band self-join — bounded candidates instead of
-    O(b^2) pairs — while a true near-dup pair outside the flood survives.
-    The opt-out (max_bucket=None) restores unconditional completeness."""
+    the MAX_BUCKET cap BEFORE the band self-join — bounded candidates
+    instead of O(b^2) pairs — while a true near-dup pair outside the flood
+    survives. Under the default cap a 20-row bucket still pairs in full."""
     n = 5000
     # planted pair: high bands nonzero so it does NOT share the flood's
     # all-zero upper bands (those buckets are oversized and shed)
     ph = (1 << 40) | (1 << 50)
     rows = [(i, 12345) for i in range(n)] + [(1000000, ph), (1000001, ph ^ 1)]
     df = spark.createDataFrame(rows, "doc_id long, h long")
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in DD._banded_hamming_pairs(df, "h", "doc_id", 2, max_bucket=100).collect()
-    }
-    assert got == {(1000000, 1000001)}
     small = spark.createDataFrame([(i, 99) for i in range(20)], "doc_id long, h long")
-    allp = DD._banded_hamming_pairs(small, "h", "doc_id", 2, max_bucket=None)
-    assert allp.count() == 20 * 19 // 2  # hamming 0 all-pairs, uncapped
+    allp = DD._banded_hamming_pairs(small, "h", "doc_id", 2)
+    assert allp.count() == 20 * 19 // 2  # hamming 0 all-pairs, under the cap
+    monkeypatch.setattr(DD, "MAX_BUCKET", 100)
+    got = {(r["id_a"], r["id_b"]) for r in DD._banded_hamming_pairs(df, "h", "doc_id", 2).collect()}
+    assert got == {(1000000, 1000001)}
 
 
 def test_simhash_near_dups_drops_empty_docs(spark):
     """Zero-token docs all simhash to 0 (a degenerate bucket in EVERY band);
-    drop_empty=True (default) excludes them from pairing — empty-vs-empty
-    duplicates belong to exact_dedup — while the opt-out keeps them."""
+    simhash_near_dups excludes them from pairing — empty-vs-empty
+    duplicates belong to exact_dedup."""
     rows = [(1, ""), (2, "   "), (3, "alpha beta gamma"), (4, "alpha beta gamma")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["id_a"], r["id_b"]) for r in DD.simhash_near_dups(df).collect()}
     assert got == {(3, 4)}
-    got2 = {
-        (r["id_a"], r["id_b"])
-        for r in DD.simhash_near_dups(df, drop_empty=False).collect()
-    }
-    assert (1, 2) in got2 and (3, 4) in got2
 
 
 def test_embedding_near_dups_borderline_recall(spark):

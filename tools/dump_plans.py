@@ -2,15 +2,23 @@
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query (suffix: before/after).
-Runs on local[$SPARK_GRAFT_CPUS], all cores by default.
+Runs on local[$SPARK_GRAFT_CPUS], all cores by default. Expression ids
+(``#<n>``) and ``plan_id=<n>`` are masked, as they count up per session, so
+two dumps of the same code compare byte for byte.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def mask_ids(plan: str) -> str:
+    """``plan`` with the per-session expression and plan ids replaced."""
+    return re.sub(r"(#|plan_id=)\d+", r"\1N", plan)
 
 
 def main():
@@ -37,7 +45,7 @@ def main():
         except Exception as ex:
             plan = f"PLAN FAILED: {type(ex).__name__}: {ex}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(plan)
+            f.write(mask_ids(plan))
         print(name, flush=True)
     spark.stop()
 

@@ -174,7 +174,7 @@ def _check_embedding_near_dups(pdf: pd.DataFrame, sf_dir: str) -> None:
     keep = vids < 10
     all_vecs = np.vstack([vecs, vecs[keep]])
     all_ids = np.concatenate([vids, vids[keep] + 1000000])
-    # default n_tables=2: candidate iff within hamming 2 in EITHER plane set
+    # similarity.N_TABLES = 2: candidate iff within hamming 2 in EITHER plane set
     sigs_t = []
     for seed in (42, 43):
         rng = np.random.Generator(np.random.PCG64(seed))
@@ -277,7 +277,7 @@ def _check_simhash_near_dups(pdf: pd.DataFrame, sf_dir: str) -> None:
     rows = [(int(r.doc_id), r.text) for r in docs.itertuples()]
     rows += [(int(r.doc_id) + 1000000, r.text + " xq")
              for r in docs.itertuples() if r.doc_id < 15]
-    # drop_empty parity: zero-token docs are excluded before pairing
+    # zero-token docs are excluded before pairing, as simhash_near_dups does
     hashed = [(i, _indep_simhash(t)) for i, t in rows if (t or "").strip()]
     exp = set()
     for a in range(len(hashed)):
