@@ -384,7 +384,7 @@ def q_doc_features(spark, sf_dir):
     from pgsql2osm_spark.operators import text as TX
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    feats = TX.with_lang_id(TX.quality_features(d))
+    feats = TX.doc_features(d)
     return feats.select(
         "doc_id",
         "n_chars_calc",
@@ -401,7 +401,7 @@ def q_lang_quality_agg(spark, sf_dir):
     from pgsql2osm_spark.operators import text as TX
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    feats = TX.quality_features(d)
+    feats = TX.doc_features(d)
     return (
         feats.groupBy("lang", "quality_ok")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("total_tokens"))
@@ -490,7 +490,7 @@ def q_seq_packing(spark, sf_dir):
     from pgsql2osm_spark.operators import text as TX
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", TX.token_count_col().cast("long").alias("n_tokens")
+        "doc_id", F.size(TX.tokens_col()).cast("long").alias("n_tokens")
     )
     out = PK.chunk_assignments(d, "n_tokens", "doc_id", 512)
     return out.select("doc_id", "stream", "chunk", "offset").transform(_psort, "doc_id")

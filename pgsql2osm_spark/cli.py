@@ -22,7 +22,23 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import sys
+
+
+def _bbox(value: str) -> tuple[float, ...]:
+    """argparse type of --bbox: four finite numbers with min < max."""
+    try:
+        box = tuple(float(v) for v in value.split(","))
+    except ValueError:
+        box = ()
+    if not (len(box) == 4 and all(map(math.isfinite, box))
+            and box[0] < box[2] and box[1] < box[3]):
+        raise argparse.ArgumentTypeError(
+            f"{value!r} is not lon_min,lat_min,lon_max,lat_max: four finite "
+            "numbers with lon_min < lon_max and lat_min < lat_max"
+        )
+    return box
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -39,7 +55,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="relation id whose polygon makes the boundary (reference settings.py:120-126)",
     )
     p.add_argument(
-        "--bbox",
+        "--bbox", type=_bbox,
         help="lon_min,lat_min,lon_max,lat_max — AND'd with the polygon boundary "
         "when one is given, else the boundary itself",
     )
@@ -148,14 +164,7 @@ def _geojson_rings(path: str) -> list:
 
 def main(argv=None, spark=None) -> int:
     args = build_parser().parse_args(argv)
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from .functions import geometry as G
-    from .operators import spatial_join as SJ
-    from .plans import manifest as M
     from .session import get_spark
-    from .sources import regions as RG
 
     if not args.curate and not (args.bbox or args.iso or args.geojson or args.osm_rel_id):
         # the reference's "no boundary provided" guard (settings.py:143-146)
@@ -170,11 +179,24 @@ def main(argv=None, spark=None) -> int:
         spark = get_spark(
             app="pgsql2osm_spark_cli", master=f"local[{args.cores}]" if args.cores else None
         )
-    if args.curate:
-        rc = run_curate(args, spark)
+    try:
+        return run_curate(args, spark) if args.curate else run_tiles(args, spark)
+    finally:
         if owns_session:
             spark.stop()
-        return rc
+
+
+def run_tiles(args, spark) -> int:
+    """The spatial pipeline: points -> boundary PIP join -> z tiles, written
+    through the manifest-tracked partitioned writer."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from .functions import geometry as G
+    from .operators import spatial_join as SJ
+    from .plans import manifest as M
+    from .sources import regions as RG
+
     pts = spark.read.parquet(args.input)
 
     # the boundary: a driver-side region list (fixture/geojson/bbox paths)
@@ -253,7 +275,7 @@ def main(argv=None, spark=None) -> int:
                 return 2
 
     if args.bbox:
-        x0, y0, x1, y1 = (float(v) for v in args.bbox.split(","))
+        x0, y0, x1, y1 = args.bbox
         if regions is None:
             # bbox alone IS the boundary (rectangle polygon)
             rings = [np.asarray([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])]
@@ -283,8 +305,6 @@ def main(argv=None, spark=None) -> int:
     prog = M.job_progress(spark, args.out, args.job_id).collect()
     for row in prog:
         print(json.dumps(row.asDict()))
-    if owns_session:
-        spark.stop()
     return 0
 
 

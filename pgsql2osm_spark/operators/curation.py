@@ -14,9 +14,10 @@ dedup/quality (operators/dedup.py, operators/text.py):
 
 Scale shapes:
 * n-grams are built per document in ONE Arrow-vectorized pandas stage (no
-  shuffle — the token->gram window formulation costs a full token shuffle,
-  and the pure-HOF formulation evaluates interpreted per element, measured
-  10x slower; BENCH/PLANS.md). The document side never shuffles.
+  shuffle) that tokenizes with ``text.tokens_py``, the twin of the
+  ``text.tokens_col`` every other text operator reads. Every JVM form
+  measured slower (ROADMAP direction 3(c)). The document side never
+  shuffles.
 * decontamination joins exploded doc grams (explode is narrow) against the
   benchmark gram set with a left-semi join — BROADCAST when the counted
   gram set fits (the common eval-suite case; the corpus never shuffles),
@@ -40,24 +41,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .text import tokens_py
+
 # ---------------------------------------------------------------------------
 # Shared per-document word n-grams (one Arrow stage).
 # ---------------------------------------------------------------------------
 
 
 def word_ngrams_udf(n: int):
-    """Arrow-batched per-document word n-grams (lowercased, space-joined).
-
-    Tokenization parity: str.split() splits on whitespace runs and drops
-    empties — identical to text.tokens_col's trim + split('\\s+') and to the
-    DuckDB oracle's string_split_regex(trim(x), '\\s+')."""
+    """Arrow-batched per-document word n-grams (space-joined), over
+    ``text.tokens_py``: the tokens of ``text.tokens_col`` and of the DuckDB
+    oracle's ``_toks_sql``. NULL text gives NULL grams, as in the oracle."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def grams(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            toks = (t or "").lower().split()
-            out.append([" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)])
+            toks = tokens_py(t)
+            out.append(
+                None if toks is None
+                else [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+            )
         return pd.Series(out)
 
     return grams
@@ -367,7 +371,7 @@ def funnel_flags(
     from . import sampling as SP
     from . import text as TX
 
-    feats = TX.with_lang_id(TX.quality_features(docs))
+    feats = TX.doc_features(docs)
     w = Window.partitionBy(TX.fingerprint_col()).orderBy(F.col("doc_id").asc())
     flags = with_repetition_flags(
         feats.withColumn("_dup_rank", F.row_number().over(w)), n=rep_n
@@ -414,16 +418,14 @@ def funnel_counts(flags: DataFrame, size: int = 48, overlap: int = 8) -> DataFra
     unpivoted by map-explode (a per-stage union would re-execute the agg
     subtree per branch). Stage 9's unit is RAG chunk windows of ``size``
     tokens with ``overlap`` over the final (s8) survivors."""
-    stride = size - overlap
-    nc = F.when(F.col("n_tokens") <= size, F.lit(1).cast("long")).otherwise(
-        F.lit(1)
-        + F.expr(f"CAST(n_tokens - {size} + {stride} - 1 AS BIGINT) DIV {stride}")
-    )
+    from . import packing as PK
+
     flags = flags.withColumn(
         "_nc",
-        F.when(F.col("s8") & (F.col("n_tokens") > 0), nc).otherwise(
-            F.lit(0).cast("long")
-        ),
+        F.when(
+            F.col("s8") & (F.col("n_tokens") > 0),
+            PK.n_chunks_col("n_tokens", size, overlap),
+        ).otherwise(F.lit(0).cast("long")),
     )
     stages = [("2_lang", "s2"), ("3_quality", "s3"), ("4_dedup", "s4"),
               ("5_decontam", "s5"), ("6_repetition", "s6"), ("7_pii", "s7"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import fingerprint_col
+from .text import fingerprint_col, tokens_col
 
 # Band buckets holding more rows than this are dropped before a bucket
 # self-join: a bucket of b rows costs b^2/2 pairs (see _drop_oversized).
@@ -192,10 +192,7 @@ def simhash_col(text: str = "text") -> F.Column:
     higher-order array lambdas are evaluated interpreted per element, so a
     pure-built-in fold costs ~60 expression evals per token and runs
     ~20x slower at equal output."""
-    toks = F.when(
-        F.length(F.trim(F.col(text))) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.lower(F.trim(F.col(text))), "\\s+"))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    hashes = F.transform(tokens_col(text), lambda t: F.xxhash64(t))
 
     @F.pandas_udf(T.LongType())
     def fold(hs: pd.Series) -> pd.Series:
@@ -345,9 +342,11 @@ def word_jaccard_pairs(
     """Exact word-set Jaccard for candidate pairs: |A∩B| / |A∪B|, computed
     with array_intersect/array_union on distinct token arrays (JVM).
     Counts are ints, the division is one double op — oracle-hash-safe."""
-    toks = df.select(
+    toks = df.select(F.col(id_col), tokens_col(text).alias("_t")).select(
         F.col(id_col),
-        F.array_distinct(F.split(F.lower(F.trim(F.col(text))), "\\s+")).alias("toks"),
+        # a token-less doc's word set is {''}, as in the oracle's split
+        F.expr("CASE WHEN size(_t) = 0 THEN array('') ELSE array_distinct(_t) END")
+        .alias("toks"),
     )
     a = toks.alias("ta")
     b = toks.alias("tb")

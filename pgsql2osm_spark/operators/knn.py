@@ -26,7 +26,6 @@ from pyspark.sql.window import Window
 
 from ..functions import cells as C
 from ..functions import geometry as G
-from ..functions import udfs
 
 
 def _haversine_col(lon1, lat1, lon2, lat2):

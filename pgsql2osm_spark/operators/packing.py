@@ -20,10 +20,11 @@ like the concatenated-stream semantics they model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.cells import sql_ident
 from .sampling import hash_col, hash_sql
 
 
@@ -79,6 +80,20 @@ def chunk_assignments_sql(
     """
 
 
+def n_chunks_col(n_tokens: str, size: int, overlap: int) -> Column:
+    """The number of ``size``-token windows with ``overlap`` that cover a
+    document of ``n_tokens`` tokens (a BIGINT; >= 1, also for 0 tokens):
+    1 for n <= size, else 1 + ceil((n - size) / stride)."""
+    if not 0 <= overlap < size:
+        raise ValueError("need 0 <= overlap < size")
+    stride = size - overlap
+    n = sql_ident(n_tokens)
+    return F.expr(
+        f"CASE WHEN {n} <= {size} THEN CAST(1 AS BIGINT) "
+        f"ELSE 1 + CAST({n} - {size} + {stride} - 1 AS BIGINT) DIV {stride} END"
+    )
+
+
 def chunk_windows(
     docs: DataFrame,
     size: int = 512,
@@ -88,25 +103,17 @@ def chunk_windows(
 ) -> DataFrame:
     """RAG-style overlapping token-window coordinates per document.
 
-    Each document of n tokens yields chunks starting at 0, stride, 2*stride
-    (stride = size - overlap), i.e. n_chunks = 1 for n <= size else
-    1 + ceil((n - size) / stride); chunk ends clip to n; zero-token
-    documents yield nothing. Pure integer Column math over a narrow
-    explode — no shuffle, no Python — and bit-replicable in SQL
-    (chunk_windows_sql). Token counts reuse text.tokens_col semantics so
+    Each document of n tokens yields ``n_chunks_col`` chunks starting at 0,
+    stride, 2*stride (stride = size - overlap); chunk ends clip to n;
+    zero-token documents yield nothing. Pure integer Column math over a
+    narrow explode — no shuffle, no Python — and bit-replicable in SQL
+    (chunk_windows_sql). Token counts are the size of text.tokens_col, so
     chunk coordinates agree with every other token-based operator."""
-    from .text import token_count_col
+    from .text import tokens_col
 
-    if not 0 <= overlap < size:
-        raise ValueError("need 0 <= overlap < size")
     stride = size - overlap
-    d = docs.select(F.col(id_col), token_count_col(text).cast("long").alias("_n"))
-    d = d.where(F.col("_n") > 0).withColumn(
-        "_nc",
-        F.when(F.col("_n") <= size, F.lit(1).cast("long")).otherwise(
-            F.lit(1) + F.expr(f"CAST(_n - {size} + {stride} - 1 AS BIGINT) DIV {stride}")
-        ),
-    )
+    d = docs.select(F.col(id_col), F.size(tokens_col(text)).cast("long").alias("_n"))
+    d = d.where(F.col("_n") > 0).withColumn("_nc", n_chunks_col("_n", size, overlap))
     out = d.select(
         F.col(id_col),
         F.col("_n"),

@@ -6,17 +6,25 @@ fingerprinting. Every operator is pure built-in Column expressions (JVM,
 whole-stage codegen — zero Python) and each has an exactly-equivalent DuckDB
 SQL emitted beside it for the driver's oracle cross-check.
 
+What a document's tokens are is decided here once: ``tokens_col`` is the
+token array every text, dedup, packing and curation operator reads, and
+``tokens_py`` is the same tokenizer in Python for the one Arrow n-gram stage
+(operators/curation.py).
+
 The reference's nearest analogue is its tag/string normalization layer
-(hstore_to_json + text member decode, /root/reference/pgsql2osm/
-pgsql2osm.py:497-501, 343-344 — SURVEY.md F2/F3): dynamic text columns
-normalized to typed values in-query.
+(hstore_to_json + text member decode, pgsql2osm.py:497-501, 343-344 —
+SURVEY.md F2/F3): dynamic text columns normalized to typed values in-query.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..functions.cells import sql_ident
 
 # Tiny per-language stopword lexicons for the deterministic lang-ID heuristic.
 LANG_LEXICONS: dict[str, tuple[str, ...]] = {
@@ -27,18 +35,30 @@ LANG_LEXICONS: dict[str, tuple[str, ...]] = {
 }
 STOPWORDS = tuple(sorted({w for ws in LANG_LEXICONS.values() for w in ws}))
 
-_TOKEN_SPLIT = "\\s+"
+# Java's \s, which tokens_col's split matches: Python's \s would also match
+# U+00A0 and the other Unicode spaces.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def tokens_col(text: str = "text") -> Column:
-    """Whitespace tokenization of trimmed text (empty string -> 0 tokens)."""
-    return F.when(
-        F.length(F.trim(F.col(text))) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.trim(F.col(text)), _TOKEN_SPLIT))
+    """A document's tokens, the one definition every text operator reads:
+    lowercased, split on runs of Java's \\s after Spark's trim (which strips
+    only U+0020, so an edge tab or newline leaves an empty edge token); empty
+    text -> no tokens, NULL text -> NULL. ``tokens_py`` is its Python twin."""
+    t = sql_ident(text)
+    return F.expr(
+        f"CASE WHEN length(trim({t})) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split(lower(trim({t})), '\\\\s+') END"
+    )
 
 
-def token_count_col(text: str = "text") -> Column:
-    return F.size(tokens_col(text))
+def tokens_py(s: str | None) -> list[str] | None:
+    """``tokens_col`` for one Python string, token for token (the Arrow
+    n-gram stage tokenizes with it)."""
+    if s is None:
+        return None
+    t = s.strip(" ")
+    return _JAVA_WS.split(t.lower()) if t else []
 
 
 def token_count_sql(text: str = "text") -> str:
@@ -52,17 +72,6 @@ def _in_list_sql(items: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in items)
 
 
-def token_count_of(toks: Column) -> Column:
-    """Token count from an already-projected token-array column — share one
-    split across several derived measures instead of re-tokenizing per
-    expression (reused Column objects inline their whole subtree)."""
-    return F.size(toks)
-
-
-def stopword_count_of(toks: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(toks, lambda t: F.lower(t).isin(*words)))
-
-
 def stopword_count_sql(text: str = "text", words: tuple[str, ...] = STOPWORDS) -> str:
     return (
         f"CASE WHEN length(trim({text})) = 0 THEN 0 ELSE "
@@ -71,32 +80,48 @@ def stopword_count_sql(text: str = "text", words: tuple[str, ...] = STOPWORDS) -
     )
 
 
-def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
-    """Length / token / punctuation / stopword features + a quality score.
+def doc_features(df: DataFrame, text: str = "text") -> DataFrame:
+    """df + length / token / stopword / punctuation features, a quality flag
+    and a language ID (``n_chars_calc``, ``n_tokens``, ``n_stopwords``,
+    ``n_punct``, ``quality_ok``, ``pred_lang``).
 
-    Score (deterministic, int-ratio based so the oracle hash-matches):
-      good length (64..2048 chars) + token length sanity + stopword presence.
-    """
-    n_chars = F.length(F.col(text))
-    n_punct = n_chars - F.length(F.regexp_replace(F.col(text), "[\\.,;:!\\?]", ""))
-    toks_name = "_quality_toks"
+    quality_ok (integer math, so the oracle hash-matches): 32..4096 chars,
+    >= 8 tokens and >= 5% stopwords. pred_lang: the language whose lexicon
+    has the most token hits, ties to the first in sorted order, 'und' when
+    no lexicon matches (deterministic and oracle-checkable, where an n-gram
+    model would need training data).
+
+    The tokens are projected once and every measure reads that column; the
+    lexicon scores are projected before the argmax reads them twice."""
+    t = sql_ident(text)
+    langs = sorted(LANG_LEXICONS)
+    scores = [f"_score_{lang}" for lang in langs]
+
+    def hits(words: tuple[str, ...]) -> str:
+        return f"size(filter(_toks, x -> x IN ({_in_list_sql(words)})))"
+
+    argmax = " ".join(f"WHEN {s} THEN '{lang}'" for lang, s in zip(langs, scores))
     return (
-        # project the token array ONCE; every reuse of a raw Column object
-        # would inline the whole split/filter subtree again
-        df.withColumn(toks_name, tokens_col(text))
-        .withColumn("n_chars_calc", n_chars.cast("long"))
-        .withColumn("n_tokens", token_count_of(F.col(toks_name)).cast("long"))
-        .withColumn("n_stopwords", stopword_count_of(F.col(toks_name)).cast("long"))
-        .withColumn("n_punct", n_punct.cast("long"))
-        .withColumn(
-            "quality_ok",
-            (F.col("n_chars_calc") >= 32)
-            & (F.col("n_chars_calc") <= 4096)
-            & (F.col("n_tokens") >= 8)
-            # >=5% stopwords — integer math only
-            & (F.col("n_stopwords") * 20 >= F.col("n_tokens")),
-        )
-        .drop(toks_name)
+        df.withColumn("_toks", tokens_col(text))
+        .withColumns({
+            "n_chars_calc": F.expr(f"CAST(length({t}) AS BIGINT)"),
+            "n_tokens": F.expr("CAST(size(_toks) AS BIGINT)"),
+            "n_stopwords": F.expr(f"CAST({hits(STOPWORDS)} AS BIGINT)"),
+            "n_punct": F.expr(
+                f"CAST(length({t}) - length(regexp_replace({t}, '[\\\\.,;:!\\\\?]', '')) AS BIGINT)"
+            ),
+            **{s: F.expr(hits(LANG_LEXICONS[lang])) for lang, s in zip(langs, scores)},
+        })
+        .withColumns({
+            "quality_ok": F.expr(
+                "n_chars_calc >= 32 AND n_chars_calc <= 4096 AND n_tokens >= 8 "
+                "AND n_stopwords * 20 >= n_tokens"
+            ),
+            "pred_lang": F.expr(
+                f"CASE greatest({', '.join(scores)}) WHEN 0 THEN 'und' {argmax} ELSE 'und' END"
+            ),
+        })
+        .drop("_toks", *scores)
     )
 
 
@@ -114,60 +139,6 @@ def quality_sql(text: str = "text") -> str:
     return QUALITY_SQL_COLS.format(tok=token_count_sql(text), stop=stopword_count_sql(text))
 
 
-def lang_id_col(text: str = "text") -> Column:
-    """Deterministic language-ID heuristic: argmax of per-language stopword
-    hits, ties broken by fixed language order, 'und' (undetermined) if no
-    lexicon matches. (An n-gram model would need training data; this stays
-    deterministic and oracle-checkable.)
-
-    NOTE: as a single Column, the strictly-greater fold must re-reference
-    each score subtree recursively — the expression tree doubles per
-    language (the reused-Column pitfall). Prefer ``with_lang_id`` where a
-    DataFrame is in hand: it projects the scores first and folds over cheap
-    attribute references (measured ~4x on the 50k-doc suite query)."""
-    toks = tokens_col(text)
-
-    def score_for(ws):
-        # single-arg lambda: pyspark maps every lambda parameter to a
-        # higher-order-function variable, so the lexicon must be closed over
-        return F.size(F.filter(toks, lambda t: F.lower(t).isin(*ws)))
-
-    scores = {lang: score_for(ws) for lang, ws in LANG_LEXICONS.items()}
-    return _argmax_fold(scores)
-
-
-def _argmax_fold(scores: dict) -> Column:
-    best = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(scores):  # fixed order: later wins only if strictly greater
-        s = scores[lang]
-        take = s > best_score
-        best = F.when(take, F.lit(lang)).otherwise(best)
-        best_score = F.when(take, s).otherwise(best_score)
-    return best
-
-
-def with_lang_id(df: DataFrame, text: str = "text", out: str = "pred_lang") -> DataFrame:
-    """df + a ``out`` language column — same bits as lang_id_col, linear
-    expression size: per-language scores are PROJECTED columns, so the
-    argmax fold references attributes instead of duplicating score
-    subtrees."""
-    toks_name = f"_lang_toks_{out}"
-    cur = df.withColumn(
-        toks_name, F.transform(tokens_col(text), lambda t: F.lower(t))
-    )
-    names = []
-    for lang in sorted(LANG_LEXICONS):
-        ws = LANG_LEXICONS[lang]
-        name = f"_score_{lang}_{out}"
-        names.append(name)
-        cur = cur.withColumn(
-            name, F.size(F.filter(F.col(toks_name), lambda t: t.isin(*ws)))
-        )
-    fold = _argmax_fold({lang: F.col(f"_score_{lang}_{out}") for lang in sorted(LANG_LEXICONS)})
-    return cur.withColumn(out, fold).drop(toks_name, *names)
-
-
 def lang_id_sql(text: str = "text") -> tuple[list[str], str]:
     parts = []
     for lang in sorted(LANG_LEXICONS):
@@ -178,7 +149,7 @@ def lang_id_sql(text: str = "text") -> tuple[list[str], str]:
             f"x -> lower(x) IN ({_in_list_sql(ws)}))) END AS score_{lang}"
         )
     langs = sorted(LANG_LEXICONS)
-    # same strictly-greater fold as lang_id_col
+    # the first language with the highest score wins; 'und' when all are 0
     expr = "'und'"
     score = "0"
     for lang in langs:
@@ -209,15 +180,12 @@ def ngram_topk(df: DataFrame, n_gram: int = 2, k: int = 20, text: str = "text") 
     gram) evaluates INTERPRETED per element — measured 25 s vs ~2 s on 25M
     bigrams — so the extra token shuffle for the window buys 10x. Ties
     broken by gram text so output is deterministic (O1)."""
-    # tokenization shared with token_count_col so counts and grams agree;
     # the row key only needs uniqueness (monotonic ids are fine: counts are
     # invariant to which unique key a row gets)
     toks = df.select(tokens_col(text).alias("toks")).withColumn(
         "_rid", F.monotonically_increasing_id()
     )
-    tok = toks.select("_rid", F.posexplode("toks").alias("pos", "_t")).select(
-        "_rid", "pos", F.lower(F.col("_t")).alias("t")
-    )
+    tok = toks.select("_rid", F.posexplode("toks").alias("pos", "t"))
     w = Window.partitionBy("_rid").orderBy(F.col("pos").asc())
     g = tok
     names = []
@@ -257,9 +225,7 @@ def doc_top_terms(
     ones) -> per-doc window for the top-k (third shuffle keyed by doc).
     Corpus constant N arrives via a 1-row broadcast cross-join, not a
     driver-side collect — the plan stays a single lazy DAG."""
-    tok = df.select(
-        F.col(id_col), F.explode(tokens_col(text)).alias("_t")
-    ).select(F.col(id_col), F.lower(F.col("_t")).alias("term"))
+    tok = df.select(F.col(id_col), F.explode(tokens_col(text)).alias("term"))
     tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
     n_docs = df.agg(F.count(F.lit(1)).cast("double").alias("_n"))

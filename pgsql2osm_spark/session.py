@@ -39,31 +39,34 @@ _JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
 
 def make_pyfiles_zip() -> str:
     """Zip this package for spark-submit --py-files / addPyFile shipment —
-    the deployment unit the north rule's multi-executor run uses. Writes
-    and returns ``<tempdir>/pgsql2osm_spark_pyfiles.zip``.
+    the deployment unit the north rule's multi-executor run uses. Returns
+    ``<tempdir>/pgsql2osm_spark_pyfiles-<hash>.zip``, named by a hash of the
+    package's .py files, so a session from another checkout or after an edit
+    never rewrites the zip a running session ships (its tasks would fail
+    with "exists and does not match contents"). The same files give the same
+    bytes, and an existing zip of that name is left as it is.
 
-    No-ops (returns the existing zip) when the package was itself imported
-    FROM a zip: os.walk can't see into zipimport paths, and overwriting the
-    shipped zip with an empty one would break every later import."""
+    When the package was itself imported FROM a zip, returns that archive:
+    os.walk can't see into zipimport paths."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    dest = os.path.join(tempfile.gettempdir(), "pgsql2osm_spark_pyfiles.zip")
-    if not os.path.isdir(pkg_dir):  # zipimported — pkg_dir is inside a zip
-        if os.path.exists(dest):
-            return dest
-        raise RuntimeError("package imported from a zip and no prebuilt pyfiles zip found")
+    if not os.path.isdir(pkg_dir):  # zipimported — root is the archive
+        return root
     entries = []
-    for dirpath, _, files in os.walk(pkg_dir):
-        for f in files:
-            if f.endswith(".py"):
-                full = os.path.join(dirpath, f)
-                entries.append((full, os.path.relpath(full, root)))
-    if not entries:
-        raise RuntimeError(f"no .py files under {pkg_dir}")
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+        with open(path, "rb") as f:
+            entries.append((os.path.relpath(path, root), f.read()))
+    digest = hashlib.sha256(repr(entries).encode()).hexdigest()[:16]
+    dest = os.path.join(tempfile.gettempdir(), f"pgsql2osm_spark_pyfiles-{digest}.zip")
+    if os.path.exists(dest):
+        return dest
     tmp = f"{dest}.{os.getpid()}.tmp"  # concurrent starts each write their own
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for full, rel in entries:
-            zf.write(full, rel)
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for rel, data in entries:
+            # a fixed timestamp: the same files always give the same bytes
+            info = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+            info.external_attr = 0o644 << 16
+            zf.writestr(info, data, zipfile.ZIP_DEFLATED)
     os.replace(tmp, dest)  # atomic — readers never see a partial zip
     return dest
 

@@ -87,6 +87,49 @@ def test_cli_bad_iso_exit_code(spark, pts_path, tmp_path):
     assert rc == 2
 
 
+@pytest.mark.parametrize(
+    "bbox",
+    ["1,2,3", "a,b,c,d", "0,nan,1,1", "10,40,-10,55", "-10,55,10,40"],
+    ids=["three_numbers", "not_numbers", "non_finite", "lon_min_above_max",
+         "lat_min_above_max"],
+)
+def test_cli_bad_bbox_exits_2_before_spark(pts_path, tmp_path, monkeypatch, capsys, bbox):
+    """A bad --bbox is an argument error naming the value, raised before a
+    session is asked for. With a polygon boundary a reversed box used to
+    filter every point out and exit 0 with no tiles."""
+    from pgsql2osm_spark import session
+
+    def no_session(**_):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as e:
+        cli.main(["--input", pts_path, "--osm-rel-id", "100001", f"--bbox={bbox}",
+                  "--out", str(tmp_path / "o")])
+    assert e.value.code == 2
+    assert bbox in capsys.readouterr().err
+
+
+def test_cli_stops_its_own_session_on_error_return(spark, pts_path, tmp_path, monkeypatch):
+    """A CLI run that started its session stops it on an error return too."""
+    from pgsql2osm_spark import session
+
+    class Owned:
+        """The test session, with stop() counted instead of run."""
+
+        stops = 0
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+        def stop(self):
+            Owned.stops += 1
+
+    monkeypatch.setattr(session, "get_spark", lambda **_: Owned())
+    rc = cli.main(["--input", pts_path, "--osm-rel-id", "999", "--out", str(tmp_path / "o")])
+    assert rc == 2 and Owned.stops == 1
+
+
 def test_cli_iso_bbox_conjunction(spark, pts_path, tmp_path):
     """Reference parity (cli.py:18-22, settings.py:132-140): --bbox given IN
     ADDITION to --iso extracts the INTERSECTION — every output point is in

@@ -1,9 +1,11 @@
 """Curation operators: decontamination, repetition stats, PII scrubbing —
-planted-behavior checks plus independent python-re / set recomputations
-(the DuckDB bit-parity check lives in the driver oracles)."""
+planted-behavior checks, independent python-re / set recomputations, and
+DuckDB-oracle parity on whitespace-edge documents."""
 
 import re
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from pgsql2osm_spark.operators import curation as CU
@@ -78,6 +80,45 @@ def test_repetition_stats_planted(spark):
     assert got[1]["n_grams"] == 10 and got[1]["n_distinct"] == 3
     assert got[2]["n_grams"] == 4 == got[2]["n_distinct"]
     assert got[3]["n_grams"] == 0
+
+
+# Documents whose tokens depend on the whitespace rules: Spark's and DuckDB's
+# trim strip only U+0020, and \s does not match U+00A0, so a no-break space
+# joins two words.
+EDGE_DOCS = [
+    (1, "\tone two three four five six seven"),          # empty first token
+    (2, "\tone two three four five six seven eight\n"),  # benchmark
+    (3, "one two\u00a0three four five six seven eight nine"),
+    (4, "one two three four five six seven eight nine"),  # benchmark
+    (5, "a b c a b c\r"),
+    (6, "The Cat the CAT the cat"),
+    (7, ""),
+    (8, "    "),
+    (9, None),
+]
+
+
+def _edge_docs(spark):
+    pdf = pd.DataFrame(EDGE_DOCS, columns=["doc_id", "text"])
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string"), con
+
+
+def test_repetition_matches_duckdb_on_whitespace_edges(spark):
+    docs, con = _edge_docs(spark)
+    got = sorted(tuple(r) for r in CU.repetition_stats(docs, n=3).collect())
+    assert got == con.sql(CU.repetition_sql(n=3)).fetchall()
+
+
+def test_decontaminate_matches_duckdb_on_whitespace_edges(spark):
+    docs, con = _edge_docs(spark)
+    bench = docs.where("doc_id IN (2, 4)")
+    got = sorted(tuple(r) for r in CU.decontaminate(docs, bench, n=8).collect())
+    assert got == con.sql(CU.decontaminate_sql("{id} IN (2, 4)", n=8)).fetchall()
+    # doc 1 shares the benchmark's tab-led gram; doc 3's no-break space
+    # keeps it apart from doc 4
+    assert dict(got)[1] and not dict(got)[3]
 
 
 def test_pii_scrub_matches_python_re(spark):

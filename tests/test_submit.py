@@ -4,7 +4,10 @@ driver import pgsql2osm_spark from the shipped archive (tools/submit_job.py
 injects --py-files into the driver's sys.path after session creation)."""
 
 import os
+import shutil
 import subprocess
+import sys
+import zipfile
 
 import numpy as np
 import pandas as pd
@@ -46,3 +49,38 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     assert ((pdf["lat"] >= 30) & (pdf["lat"] <= 55)).all()
     exp = int(np.sum((lon >= -20) & (lon <= 30) & (lat >= 30) & (lat <= 55)))
     assert rows == exp
+
+
+def test_pyfiles_zip_is_named_by_content(tmp_path):
+    """Package trees that differ by one byte get two zips, the same tree gets
+    the same zip, and no call rewrites another's file (a running session
+    ships its zip by path). A zipimported package returns its own archive."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    for tree in ("a", "b"):
+        shutil.copytree(
+            os.path.join(REPO, "pgsql2osm_spark"), tmp_path / tree / "pgsql2osm_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+    with open(tmp_path / "b" / "pgsql2osm_spark" / "__init__.py", "a") as f:
+        f.write("\n")
+
+    def zip_of(cwd, pythonpath=""):
+        code = "from pgsql2osm_spark.session import make_pyfiles_zip; print(make_pyfiles_zip())"
+        env = dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=pythonpath)
+        p = subprocess.run([sys.executable, "-c", code], cwd=cwd, env=env,
+                           capture_output=True, text=True, timeout=120)
+        assert p.returncode == 0, p.stderr[-2000:]
+        return p.stdout.split()[-1]
+
+    za = zip_of(tmp_path / "a")
+    stat_a = os.stat(za)
+    zb = zip_of(tmp_path / "b")
+    assert za != zb
+    assert zip_of(tmp_path / "a") == za
+    after = os.stat(za)
+    assert (after.st_ino, after.st_mtime_ns) == (stat_a.st_ino, stat_a.st_mtime_ns)
+    with zipfile.ZipFile(za) as a, zipfile.ZipFile(zb) as b:
+        init = "pgsql2osm_spark/__init__.py"
+        assert b.read(init) == a.read(init) + b"\n"
+    assert zip_of(tmp, pythonpath=za) == za

@@ -13,31 +13,66 @@ DOCS = "/root/testdata/sf0.001/documents.parquet"
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
 
+# Whitespace and case edges. Spark's trim strips only U+0020 and \s does not
+# match U+00A0, in Spark and DuckDB alike, so an edge tab or newline is an
+# empty edge token and a no-break space joins two words.
+EDGE_TEXTS = [
+    "\tHello world the cat\n",       # leading tab, trailing newline
+    "the a\rof and\r",               # CR
+    "one two\u00a0three four",        # U+00A0 inside a word
+    "",                               # empty
+    "    ",                           # spaces only
+    "The Cat AND the DOG Der Die",    # mixed case
+]
+
+
+def _docs_with_edges(spark):
+    """The sf0.001 documents plus EDGE_TEXTS, as a Spark and a pandas frame."""
+    pdf = pd.read_parquet(DOCS, columns=["doc_id", "text"])
+    first = int(pdf["doc_id"].max()) + 1
+    edges = pd.DataFrame(
+        {"doc_id": range(first, first + len(EDGE_TEXTS)), "text": EDGE_TEXTS}
+    )
+    pdf = pd.concat([pdf, edges], ignore_index=True)
+    return spark.createDataFrame(pdf, "doc_id long, text string"), pdf
+
+
 def test_token_and_stopword_counts_match_duckdb(spark):
-    sdf = spark.read.parquet(DOCS).select(
-        "doc_id",
-        TX.token_count_col().alias("n_tokens"),
-        TX.stopword_count_of(TX.tokens_col()).alias("n_stop"),
+    sdf, pdf = _docs_with_edges(spark)
+    feats = TX.doc_features(sdf).select(
+        "doc_id", "n_chars_calc", "n_tokens", "n_stopwords", "n_punct", "quality_ok",
         TX.fingerprint_col().alias("fp"),
     )
-    got = {r["doc_id"]: (r["n_tokens"], r["n_stop"], r["fp"]) for r in sdf.collect()}
+    got = {r[0]: tuple(r[1:]) for r in feats.collect()}
     oracle = duckdb.sql(
-        f"SELECT doc_id, {TX.token_count_sql()} AS t, {TX.stopword_count_sql()} AS s, "
-        f"{TX.fingerprint_sql()} AS fp FROM '{DOCS}'"
-    ).df()
-    for r in oracle.itertuples():
-        assert got[r.doc_id] == (r.t, r.s, r.fp), f"doc {r.doc_id}"
+        f"SELECT doc_id, {TX.quality_sql()}, {TX.fingerprint_sql()} AS fp FROM pdf"
+    ).fetchall()
+    assert len(oracle) == len(got)
+    for r in oracle:
+        assert got[r[0]] == tuple(r[1:]), f"doc {r[0]}"
 
 
 def test_lang_id_matches_duckdb(spark):
-    sdf = spark.read.parquet(DOCS).select("doc_id", TX.lang_id_col().alias("pred"))
-    got = {r["doc_id"]: r["pred"] for r in sdf.collect()}
+    sdf, pdf = _docs_with_edges(spark)
+    got = {r["doc_id"]: r["pred_lang"] for r in TX.doc_features(sdf).collect()}
     parts, expr = TX.lang_id_sql()
     oracle = duckdb.sql(
-        f"SELECT doc_id, {expr} AS pred FROM (SELECT doc_id, {', '.join(parts)} FROM '{DOCS}')"
-    ).df()
-    assert {r.doc_id: r.pred for r in oracle.itertuples()} == got
+        f"SELECT doc_id, {expr} AS pred FROM (SELECT doc_id, {', '.join(parts)} FROM pdf)"
+    ).fetchall()
+    assert dict(oracle) == got
     assert len(set(got.values())) > 1  # heuristic actually discriminates
+
+
+def test_tokens_py_matches_tokens_col(spark):
+    """The Arrow n-gram stage's tokenizer is tokens_col, token for token."""
+    # U+000B is in Java's \s (not RE2's, so the DuckDB parity docs lack it)
+    texts = EDGE_TEXTS + [None, "x\x0by", "  two  spaces  "] + list(
+        pd.read_parquet(DOCS, columns=["text"])["text"][:50]
+    )
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    got = {r["i"]: r["t"] for r in df.select("i", TX.tokens_col().alias("t")).collect()}
+    for i, t in enumerate(texts):
+        assert TX.tokens_py(t) == got[i], repr(t)
 
 
 def test_exact_dedup_with_planted_duplicates(spark):

@@ -3,8 +3,10 @@
 Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query (suffix: before/after).
 Runs on local[$SPARK_GRAFT_CPUS], all cores by default. Expression ids
-(``#<n>``) and ``plan_id=<n>`` are masked, as they count up per session, so
-two dumps of the same code compare byte for byte.
+(``#<n>``), ``plan_id=<n>``, RDD ids (``RDD[<n>]``) and lambda variable
+suffixes (``lambda x_<n>``) are masked, as they count up per session, so two
+dumps of the same code compare byte for byte, and a query whose plan did not
+change compares equal when an earlier query's did.
 """
 
 from __future__ import annotations
@@ -17,8 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def mask_ids(plan: str) -> str:
-    """``plan`` with the per-session expression and plan ids replaced."""
-    return re.sub(r"(#|plan_id=)\d+", r"\1N", plan)
+    """``plan`` with the per-session expression, plan, RDD and lambda
+    variable ids replaced."""
+    return re.sub(r"(#|plan_id=|RDD\[|lambda [a-z]+_)\d+", r"\1N", plan)
 
 
 def main():

@@ -1,11 +1,12 @@
 """spark-submit entry script — the north rule's deployment shape:
 
+    ZIP=$(python -c 'from pgsql2osm_spark.session import make_pyfiles_zip; print(make_pyfiles_zip())')
     /opt/spark/bin/spark-submit --master local[16] \
-        --py-files /tmp/pgsql2osm_spark_pyfiles.zip \
+        --py-files "$ZIP" \
         tools/submit_job.py --input pts.parquet --bbox=-20,30,30,55 --out out/
 
-(build the zip with:
- python -c 'from pgsql2osm_spark.session import make_pyfiles_zip; print(make_pyfiles_zip())')
+(the zip is named by a hash of the package's files:
+``<tempdir>/pgsql2osm_spark_pyfiles-<hash>.zip``)
 
 Identical dataflow to `python -m pgsql2osm_spark.cli`; this script exists so
 the engine demonstrably runs under spark-submit with the package shipped via
