@@ -248,6 +248,28 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _axis_sql(col: str, off: float, span: float, res: int) -> str:
+    """Spark SQL text of latlon_to_xy's x (``off`` 180, ``span`` 360) or y
+    (90, 180) at ``res`` for the quoted column ``col``."""
+    n = 1 << res
+    return f"CAST(least(greatest(floor(({col} + {off}D) / {span}D * {n}), 0), {n - 1}) AS BIGINT)"
+
+
+def grid_sql(lon: str, lat: str, res: int) -> str:
+    """Spark SQL text of a point's res-``res`` grid index ``x << res | y``
+    (latlon_to_xy's x and y; ``lon``/``lat`` are column names): it names
+    the point's cell without the Morton spread. grid_index is its twin for
+    cell ids."""
+    x, y = _axis_sql(sql_ident(lon), 180.0, 360.0, res), _axis_sql(sql_ident(lat), 90.0, 180.0, res)
+    return f"shiftleft({x}, {res}) | {y}"
+
+
+def grid_index(cell: np.ndarray, res: int) -> np.ndarray:
+    """The grid index ``x << res | y`` of cells at ``res`` (grid_sql's twin)."""
+    x, y = cell_to_xy(cell)
+    return (x << res) | y
+
+
 def with_cell_columns(df, lon: str, lat: str, res_list, names=None):
     """Attach one cell-id column per resolution with the heavy bit-spreading
     computed ONCE (at MAX_RES) and every coarser cell derived by a single
@@ -266,18 +288,17 @@ def with_cell_columns(df, lon: str, lat: str, res_list, names=None):
     from pyspark.sql import functions as F
 
     names = list(names or [f"h3_{r}" for r in res_list])
-    n = 1 << MAX_RES
 
     def step(df, exprs):
         return df.withColumns({k: F.expr(v) for k, v in exprs.items()})
 
-    def grid(col, off, span):
-        return (
-            f"CAST(least(greatest(floor(({sql_ident(col)} + {off}D) / {span}D * {n}), 0), "
-            f"{n - 1}) AS BIGINT) & 4294967295"
-        )
-
-    df = step(df, {"_cx": grid(lon, 180.0, 360.0), "_cy": grid(lat, 90.0, 180.0)})
+    df = step(
+        df,
+        {
+            "_cx": f"{_axis_sql(sql_ident(lon), 180.0, 360.0, MAX_RES)} & 4294967295",
+            "_cy": f"{_axis_sql(sql_ident(lat), 90.0, 180.0, MAX_RES)} & 4294967295",
+        },
+    )
     for shift, mask in _SPREAD_MASKS:
         m = int(np.int64(mask))
         df = step(df, {c: f"({c} | shiftleft({c}, {shift})) & {m}" for c in ("_cx", "_cy")})
@@ -303,6 +324,16 @@ def cell_parent_expr(cell_col, res: int, parent_res: int):
     morton = cell_col.bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
     pm = F.shiftrightunsigned(morton, 2 * (res - parent_res))
     return pm.bitwiseOR(F.lit(parent_res << _RES_SHIFT))
+
+
+def cell_parent_sql(cell: str, res: str, parent_res: int) -> str:
+    """Spark SQL text computing cell_parent(cell, parent_res) for a cell
+    expression whose resolution (>= ``parent_res``) is the int expression
+    ``res`` (both SQL text): one mask, one shift, one OR."""
+    return (
+        f"shiftrightunsigned({cell} & {(1 << _RES_SHIFT) - 1}, 2 * ({res} - {parent_res})) "
+        f"| {parent_res << _RES_SHIFT}"
+    )
 
 
 def cell_expr(lon_col, lat_col, res: int):

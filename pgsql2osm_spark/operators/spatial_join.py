@@ -11,10 +11,14 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
      one entry point, runs it on the driver for a region list or in one
      mapInPandas pass for a region table (REGIONS_DF_SCHEMA).
   2. points: cell id per needed resolution computed with PURE JVM bitwise
-     expressions (cells.cell_expr — whole-stage codegen, no Python).
-  3. broadcast equi-join points.cell == cover.cell: each point explodes
-     into one probe row per distinct cover resolution. No shuffle of the fact table at all:
-     broadcast hash join + codegen'd cell computation stream through the scan.
+     expressions (cells.with_cell_columns — whole-stage codegen, no Python).
+  3. broadcast equi-join with ONE probe row per point: every cover row
+     carries ``_key``, its cell's ancestor at the cover's coarsest
+     resolution, and a point probes with its own cell at that resolution;
+     ``CASE res WHEN r THEN <point's res-r cell> ... END = cell`` in the join
+     condition keeps the cover rows of the point's own cells. No shuffle of
+     the fact table at all: broadcast hash join + codegen'd cell computation
+     stream through the scan.
   4. the exact even-odd test rides in the join condition as ONE SQL
      predicate (refine_sql) over per-cell data computed with the cover
      (cell_slots, in the style of S2ShapeIndex's per-cell clipped edges): a
@@ -33,8 +37,9 @@ Scale notes (100 TB): the fact side is never collected, and never
 shuffled while the cover fits the broadcast; the cover (with its slot
 columns) is O(regions * cells_per_region) data (bounded by TARGET_CELLS per
 region). A cover above MAX_BROADCAST_CELLS joins through a cell-keyed
-shuffle of the probe rows instead — the fallback, not the default (at
-planet scale it shuffles the planet).
+shuffle of the points instead — the fallback, not the default. Ahead of
+that shuffle, one IN-list over the cover's res-RES_LO cells (at most
+4^RES_LO of them) drops every point that no cover cell can hold.
 """
 
 from __future__ import annotations
@@ -286,6 +291,23 @@ def _check_regions_df(regions_df: DataFrame) -> None:
             )
 
 
+# The cover's columns: the join resolves them by name, so no point column
+# may share one.
+_COVER_COLS = ("region_id", "res", "cell", "_par", *SLOT_COLS, "_key")
+
+
+def _check_point_cols(points: DataFrame) -> None:
+    """Raise ValueError naming the first point column that a cover column
+    shares (Spark compares names without case)."""
+    cover = {c.lower() for c in _COVER_COLS}
+    for name in points.columns:
+        if name.lower() in cover:
+            raise ValueError(
+                f"point column {name!r} collides with the cover column of that "
+                f"name; rename it before pip_join"
+            )
+
+
 def _build_cover_df(regions_df: DataFrame) -> DataFrame:
     """Distributed cover build: one mapInPandas pass over the region table
     emitting cover_rows per region — each region's cover is independent, so
@@ -331,9 +353,13 @@ def pip_join(
     (_build_cover_df), so no geometry visits the driver (SURVEY.md J1
     'range-partitioned fallback'); a table is checked against
     ``REGIONS_DF_SCHEMA`` before anything is planned. Either cover takes
-    the same probe -> hash join -> refine: broadcast up to
-    ``MAX_BROADCAST_CELLS`` cells, a cell-keyed shuffle above.
+    the same one-probe-per-point hash join -> refine: broadcast up to
+    ``MAX_BROADCAST_CELLS`` cells, a cell-keyed shuffle of the masked points
+    above. A point column that shares a cover column's name
+    (``_COVER_COLS``) is a ValueError, raised before anything is planned.
     """
+    out_cols = keep_cols or list(points.columns)
+    _check_point_cols(points)
     if not isinstance(regions, DataFrame) and (
         len(regions) * TARGET_CELLS > 2 * MAX_BROADCAST_CELLS
     ):
@@ -355,22 +381,31 @@ def pip_join(
         # the job that materializes it; unlike persist(), ContextCleaner
         # frees the blocks once the DataFrame is garbage-collected.
         cover = _build_cover_df(regions).localCheckpoint(eager=False)
-        # ONE probe job yields both the distinct resolutions and the cell
-        # count. The count matters because a checkpointed cover has no
-        # Catalyst stats (LogicalRDD -> default huge size): without the
-        # broadcast hint the join shuffles the exploded fact side — measured
-        # 3x wall at 100M points x 256 regions against a 7 MB cover.
-        counts = cover.groupBy("res").agg(F.count(F.lit(1)).alias("_n")).collect()
-        res_list = sorted(r["res"] for r in counts)
+        # ONE probe job yields the distinct resolutions, the cell count and
+        # the res-RES_LO parents of the shuffle branch's mask. The count
+        # matters because a checkpointed cover has no Catalyst stats
+        # (LogicalRDD -> default huge size): without the broadcast hint the
+        # join shuffles the fact side — measured 3x wall at 100M points x
+        # 256 regions against a 7 MB cover.
+        counts = (
+            cover.groupBy("res", F.expr(C.cell_parent_sql("cell", "res", RES_LO)).alias("_p"))
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .collect()
+        )
+        res_list = sorted({r["res"] for r in counts})
         n_cells = sum(r["_n"] for r in counts)
+        parents = {r["_p"] for r in counts}
+        if res_list:
+            cover = cover.withColumn("_key", F.expr(C.cell_parent_sql("cell", "res", res_list[0])))
     else:
         cover_pdf = build_cover(regions)
         res_list = sorted(int(r) for r in cover_pdf["res"].unique())
         n_cells = len(cover_pdf)
-        # without res, the join reads every cover column: a projection over
-        # the local relation would run row by row on the driver at planning
-        cover = spark.createDataFrame(cover_pdf.drop(columns="res")) if res_list else None
-    out_cols = keep_cols or list(points.columns)
+        if res_list:
+            cells_arr = cover_pdf["cell"].to_numpy()
+            parents = set(C.cell_parent(cells_arr, RES_LO).tolist())
+            cover_pdf["_key"] = C.cell_parent(cells_arr, res_list[0])
+            cover = spark.createDataFrame(cover_pdf)
     if not res_list:
         return (
             points.select(*out_cols)
@@ -381,33 +416,42 @@ def pip_join(
     # the expensive part (a 100 TB scan, or here heavy synthetic
     # generation): a branch-per-stage union re-executes it per branch
     # (measured 1.6-1.8x total wall on the 500M-row headline).
-    # Materialize per-res cells as projected columns (single shared Morton
-    # spread at res 26, per-res shift — cells.with_cell_columns) and explode
-    # only the column references: Generate evaluates its expressions
-    # interpreted (outside whole-stage codegen), so inlining the bit-math
-    # there costs ~100x (measured 16s vs 0.14s on 2M rows).
+    # Each point probes once, with its cell at the cover's coarsest
+    # resolution against every cover row's ``_key`` (that cell's ancestor);
+    # the join condition then picks, per cover row, the point's cell at the
+    # row's own resolution. Per-res cells are projected columns (a single
+    # shared Morton spread at res 26, per-res shift — cells.with_cell_columns).
     cell_cols = dict(cell_cols or {})
     missing = [r for r in res_list if r not in cell_cols]
-    probe, new_names = points, []
+    probe = points
     if missing:
-        probe, new_names = C.with_cell_columns(
+        probe, names = C.with_cell_columns(
             points, lon, lat, missing, names=[f"_cell_r{r}" for r in missing]
         )
-        cell_cols.update(dict(zip(missing, new_names)))
-    refs = [cell_cols[r] for r in res_list]
-    probe = probe.withColumn(
-        "_cell", F.expr(f"explode(array({', '.join(map(C.sql_ident, refs))}))")
-    ).drop(*new_names)
+        cell_cols.update(zip(missing, names))
+    ref = {r: C.sql_ident(name) for r, name in cell_cols.items()}
     # MAX_BROADCAST_CELLS alone decides the broadcast: the shuffle_hash hint
     # keeps Spark's own size threshold (static or AQE) from broadcasting a
     # cover judged too large.
-    cover = F.broadcast(cover) if n_cells <= MAX_BROADCAST_CELLS else cover.hint("shuffle_hash")
+    if n_cells <= MAX_BROADCAST_CELLS:
+        cover = F.broadcast(cover)
+    else:
+        # the shuffle moves only points whose res-RES_LO cell holds cover
+        # cells: at most 4^RES_LO = 16,384 such cells, so one IN-list. It
+        # reads lon/lat, not a cell column: Catalyst pushes a filter below
+        # the projections it reads and inlines them, and the Morton spread's
+        # repeated references then outgrow codegen's 64 KB method limit.
+        cover = cover.hint("shuffle_hash")
+        keys = C.grid_index(np.fromiter(parents, np.int64), RES_LO)
+        probe = probe.where(
+            F.expr(f"{C.grid_sql(lon, lat, RES_LO)} IN ({', '.join(map(str, sorted(keys)))})")
+        )
     # Interior cells carry parity 1 and no slots, so their rows pass on the
     # parity bit alone (the X2 staging); boundary rows count crossings over
-    # at most EDGE_SLOTS edges. The predicate spans both join sides, so the
-    # optimizer folds it into the join's condition.
-    cand = probe.join(cover, probe["_cell"] == cover["cell"], "inner")
-    return cand.where(F.expr(refine_sql(lon, lat))).select(*out_cols, "region_id")
+    # at most EDGE_SLOTS edges.
+    fine = " ".join(f"WHEN {r} THEN {ref[r]}" for r in res_list)
+    cond = f"{ref[res_list[0]]} = _key AND CASE res {fine} END = cell AND {refine_sql(lon, lat)}"
+    return probe.join(cover, F.expr(cond), "inner").select(*out_cols, "region_id")
 
 
 def pip_join_bbox_prefilter(

@@ -23,6 +23,7 @@ import os
 import shutil
 import subprocess
 import tempfile
+import time
 import zipfile
 
 from pyspark import SparkContext
@@ -35,6 +36,9 @@ CDS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 # JVM unified logging (CDS warnings among it) goes to stderr: the CLI's stdout
 # is JSON lines.
 _JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
+# make_pyfiles_zip deletes the zips of other package states, and partial
+# writes, that no session has used for this long.
+_STALE_ZIP_S = 24 * 3600
 
 
 def make_pyfiles_zip() -> str:
@@ -44,7 +48,10 @@ def make_pyfiles_zip() -> str:
     package's .py files, so a session from another checkout or after an edit
     never rewrites the zip a running session ships (its tasks would fail
     with "exists and does not match contents"). The same files give the same
-    bytes, and an existing zip of that name is left as it is.
+    bytes, and an existing zip of that name is left as it is but for its
+    access time, which marks it in use. Writing a new zip deletes the other
+    ``pgsql2osm_spark_pyfiles-*`` zips and partial writes that no session
+    has used for ``_STALE_ZIP_S``.
 
     When the package was itself imported FROM a zip, returns that archive:
     os.walk can't see into zipimport paths."""
@@ -58,8 +65,11 @@ def make_pyfiles_zip() -> str:
             entries.append((os.path.relpath(path, root), f.read()))
     digest = hashlib.sha256(repr(entries).encode()).hexdigest()[:16]
     dest = os.path.join(tempfile.gettempdir(), f"pgsql2osm_spark_pyfiles-{digest}.zip")
-    if os.path.exists(dest):
+    try:
+        os.utime(dest, ns=(time.time_ns(), os.stat(dest).st_mtime_ns))
         return dest
+    except FileNotFoundError:
+        pass
     tmp = f"{dest}.{os.getpid()}.tmp"  # concurrent starts each write their own
     with zipfile.ZipFile(tmp, "w") as zf:
         for rel, data in entries:
@@ -68,7 +78,22 @@ def make_pyfiles_zip() -> str:
             info.external_attr = 0o644 << 16
             zf.writestr(info, data, zipfile.ZIP_DEFLATED)
     os.replace(tmp, dest)  # atomic — readers never see a partial zip
+    _drop_stale_zips(dest)
     return dest
+
+
+def _drop_stale_zips(keep: str) -> None:
+    """Delete the pyfiles zips and partial writes beside ``keep`` whose last
+    access or write is older than ``_STALE_ZIP_S``."""
+    cutoff = time.time() - _STALE_ZIP_S
+    pattern = os.path.join(glob.escape(os.path.dirname(keep)), "pgsql2osm_spark_pyfiles-*")
+    for path in glob.glob(pattern):
+        if path == keep or not path.endswith((".zip", ".tmp")):
+            continue
+        with contextlib.suppress(OSError):  # another session start got there first
+            st = os.stat(path)
+            if max(st.st_atime, st.st_mtime) < cutoff:
+                os.remove(path)
 
 
 def get_spark(

@@ -7,9 +7,18 @@ to a bounded number of Arrow stages per query (a regression that re-inlines
 a UDF subtree shows up as extra ArrowEvalPython/MapInPandas nodes).
 """
 
+import re
+
+import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as E
+from pgsql2osm_spark.functions import cells as C
+from pgsql2osm_spark.functions import geometry as G
+from pgsql2osm_spark.operators import spatial_join as SJ
+from pgsql2osm_spark.sources import fixtures as FX
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,3 +65,27 @@ def test_query_plan_shapes(spark, name):
         assert "Scan parquet" in plan, plan
         scan_line = next(l for l in plan.splitlines() if "Scan parquet" in l)
         assert "shiftrightunsigned" not in scan_line and "FLOOR" not in scan_line, scan_line
+
+
+def test_headline_composition_probes_once(spark):
+    """perfbench's headline composition (res 7-11 cell columns, pip_join
+    against the 12 admin polygons, z12 tile, per-(region, tile) count)
+    probes the cover once per point: no Generate node, one broadcast join."""
+    lon, lat = FX.gen_points_slice(0, 2000)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"image_id": np.arange(2000).astype(str), "lon": lon, "lat": lat})
+    )
+    res = (7, 8, 9, 10, 11)
+    pts, names = C.with_cell_columns(pts, "lon", "lat", res)
+    out = SJ.pip_join(
+        spark, pts, FX.gen_admin_polygons(12), keep_cols=["image_id", "lon", "lat"],
+        cell_cols=dict(zip(res, names)),
+    )
+    x, y = G.tile_expr(F.col("lon"), F.col("lat"), 12)
+    df = (
+        out.withColumn("tx", x).withColumn("ty", y)
+        .groupBy("region_id", "tx", "ty").agg(F.count(F.lit(1)).alias("n"))
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"\bGenerate\b", plan), plan
+    assert plan.count("BroadcastHashJoin") == 1, plan

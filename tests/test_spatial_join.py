@@ -5,6 +5,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from pgsql2osm_spark.functions import geometry as G
 from pgsql2osm_spark.operators import spatial_join as SJ
@@ -263,8 +264,6 @@ def test_pip_join_splits_cells_with_many_edges(spark):
 def test_cover_rejects_more_edges_than_slots_at_one_point():
     """Ten edges meeting at one vertex cannot be split below EDGE_SLOTS at
     any resolution: the cover build names the region instead of looping."""
-    import pytest
-
     c = (10.0, 20.0)
     ring = []
     for a in np.linspace(0.0, 2 * np.pi, 5, endpoint=False):
@@ -272,3 +271,73 @@ def test_cover_rejects_more_edges_than_slots_at_one_point():
                  (c[0] + np.cos(a + 0.5), c[1] + np.sin(a + 0.5))]
     with pytest.raises(ValueError, match="region 7: .* more than 8 edges"):
         SJ.build_cover([{"region_id": 7, "rings": [np.asarray(ring)]}])
+
+
+def _mixed_res_regions():
+    """A 90 x 60 deg hexagon with a hole (cover res 7), a 0.5 deg square
+    inside it (res 11) and the 100-vertex ring of
+    test_pip_join_splits_cells_with_many_edges, also inside it (cells split
+    finer than RES_HI)."""
+    ang = np.linspace(0.0, 2 * np.pi, 6, endpoint=False)
+    big = np.stack([35.0 + 45.0 * np.cos(ang), 30.0 + 30.0 * np.sin(ang)], axis=1)
+    hole = np.stack([60.0 + 5.0 * np.cos(ang), 20.0 + 5.0 * np.sin(ang)], axis=1)
+    square = np.array([[30.0, 30.0], [30.5, 30.0], [30.5, 30.5], [30.0, 30.5]])
+    ang = np.linspace(0.0, 2 * np.pi, 100, endpoint=False)
+    rad = 0.05 * (1.0 + 0.3 * np.sin(7 * ang))
+    wavy = np.stack([12.3 + rad * np.cos(ang), 45.6 + rad * np.sin(ang)], axis=1)
+    return [
+        {"region_id": 1, "outer_rings": [big], "inner_rings": [hole]},
+        {"region_id": 2, "outer_rings": [square], "inner_rings": []},
+        {"region_id": 3, "outer_rings": [wavy], "inner_rings": []},
+    ]
+
+
+def test_pip_join_mixed_resolution_cover(spark, monkeypatch):
+    """One probe per point on a cover that mixes res 7, res 11 and cells
+    split finer than RES_HI, with the finer regions inside the coarse one:
+    rows equal the oracle for a region list and a region table on the
+    broadcast branch, and on the masked shuffle branch."""
+    regions = _mixed_res_regions()
+    res = set(SJ.build_cover(regions)["res"])
+    assert {SJ.RES_LO, SJ.RES_HI} <= res and max(res) > SJ.RES_HI
+    rng = np.random.default_rng(61)
+    lon = np.concatenate([rng.uniform(-15.0, 85.0, 2000), rng.uniform(29.8, 30.7, 1500),
+                          rng.uniform(12.22, 12.38, 2000)])
+    lat = np.concatenate([rng.uniform(-5.0, 65.0, 2000), rng.uniform(29.8, 30.7, 1500),
+                          rng.uniform(45.52, 45.68, 2000)])
+    pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(lon.size), "lon": lon, "lat": lat}))
+    exp = oracle_assignments(lon, lat, regions)
+    assert {rid for _, rid in exp} == {1, 2, 3}
+
+    def rows(regs):
+        out = SJ.pip_join(spark, pts, regs, keep_cols=["idx"])
+        return {(int(r["idx"]), int(r["region_id"])) for r in out.collect()}, out
+
+    assert rows(regions)[0] == exp
+    assert rows(SJ.regions_to_df(spark, regions))[0] == exp
+    monkeypatch.setattr(SJ, "MAX_BROADCAST_CELLS", 100)
+    got, out = rows(regions)
+    assert got == exp
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan and "ShuffledHashJoin" in plan, plan
+
+
+def _assert_names_colliding_columns(spark, regions):
+    lon, lat = FX.gen_points_slice(0, 50)
+    for name in ("cell", "_par", "region_id", "Res", "_key", "_dx_7"):
+        pts = spark.createDataFrame(
+            pd.DataFrame({"idx": np.arange(50), "lon": lon, "lat": lat, name: 0})
+        )
+        with pytest.raises(ValueError, match=f"point column '{name}' collides"):
+            SJ.pip_join(spark, pts, regions)
+
+
+def test_pip_join_names_colliding_point_column_list(spark):
+    """A point column that a cover column shares is named in a ValueError
+    (not an AMBIGUOUS_REFERENCE at analysis) — region list input."""
+    _assert_names_colliding_columns(spark, FX.gen_admin_polygons(3))
+
+
+def test_pip_join_names_colliding_point_column_table(spark):
+    """The same for a region table input."""
+    _assert_names_colliding_columns(spark, SJ.regions_to_df(spark, FX.gen_admin_polygons(3)))

@@ -84,3 +84,43 @@ def test_pyfiles_zip_is_named_by_content(tmp_path):
         init = "pgsql2osm_spark/__init__.py"
         assert b.read(init) == a.read(init) + b"\n"
     assert zip_of(tmp, pythonpath=za) == za
+
+
+def test_pyfiles_zip_drops_stale_zips(tmp_path, monkeypatch):
+    """Writing a zip deletes other package states' zips and partial writes
+    unused for a day; a fresh zip, unrelated files and the zip being
+    returned stay. Returning an existing zip refreshes its access time
+    only, so a later cleanup sees it in use."""
+    import tempfile
+    import time
+
+    from pgsql2osm_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    old = time.time() - 2 * session._STALE_ZIP_S
+    files = {
+        name: tmp_path / name
+        for name in (
+            "pgsql2osm_spark_pyfiles-0000000000000000.zip",
+            "pgsql2osm_spark_pyfiles-1111111111111111.zip.4242.tmp",
+            "pgsql2osm_spark_pyfiles-2222222222222222.zip",
+            "pgsql2osm_spark_pyfiles.txt",
+            "other.zip",
+        )
+    }
+    for path in files.values():
+        path.write_bytes(b"x")
+    for name in ("pgsql2osm_spark_pyfiles-0000000000000000.zip",
+                 "pgsql2osm_spark_pyfiles-1111111111111111.zip.4242.tmp",
+                 "pgsql2osm_spark_pyfiles.txt", "other.zip"):
+        os.utime(files[name], (old, old))
+    cur = session.make_pyfiles_zip()
+    left = sorted(p.name for p in tmp_path.iterdir())
+    assert left == sorted([
+        os.path.basename(cur), "other.zip", "pgsql2osm_spark_pyfiles-2222222222222222.zip",
+        "pgsql2osm_spark_pyfiles.txt",
+    ])
+    os.utime(cur, (old, old))
+    assert session.make_pyfiles_zip() == cur
+    st = os.stat(cur)
+    assert st.st_mtime == old and st.st_atime > time.time() - 60
