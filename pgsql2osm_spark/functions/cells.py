@@ -114,8 +114,9 @@ def xy_to_cell(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | m).astype(np.int64)
 
 
-def cell_parent(cell: np.ndarray, parent_res: int | None = None) -> np.ndarray:
-    """Parent cell (one or more levels up) — a pure bit shift, no geometry."""
+def cell_parent(cell: np.ndarray, parent_res=None) -> np.ndarray:
+    """Parent cell (one or more levels up) — a pure bit shift, no geometry.
+    ``parent_res`` is one resolution or one per cell; None: one level up."""
     cell = np.asarray(cell)
     res = cell_res(cell)
     if parent_res is None:
@@ -313,26 +314,14 @@ def with_cell_columns(df, lon: str, lat: str, res_list, names=None):
     return df.drop("_cx", "_cy"), names
 
 
-def cell_parent_expr(cell_col, res: int, parent_res: int):
-    """Spark Column computing cell_parent for cells KNOWN to be at ``res``
-    (pure bit shifts, codegen-friendly — the Column twin of cell_parent
-    for distributed coarse/fine probe filtering)."""
-    from pyspark.sql import functions as F
-
-    if parent_res > res:
-        raise ValueError("parent_res must be <= res")
-    morton = cell_col.bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
-    pm = F.shiftrightunsigned(morton, 2 * (res - parent_res))
-    return pm.bitwiseOR(F.lit(parent_res << _RES_SHIFT))
-
-
-def cell_parent_sql(cell: str, res: str, parent_res: int) -> str:
+def cell_parent_sql(cell: str, res: str, parent_res: int | str) -> str:
     """Spark SQL text computing cell_parent(cell, parent_res) for a cell
-    expression whose resolution (>= ``parent_res``) is the int expression
-    ``res`` (both SQL text): one mask, one shift, one OR."""
+    expression whose resolution is the int expression ``res`` (SQL text);
+    ``parent_res`` (<= ``res``) is an int or an int SQL expression. One
+    mask, one shift, one OR — pure bit math, codegen-friendly."""
     return (
         f"shiftrightunsigned({cell} & {(1 << _RES_SHIFT) - 1}, 2 * ({res} - {parent_res})) "
-        f"| {parent_res << _RES_SHIFT}"
+        f"| shiftleft(CAST({parent_res} AS BIGINT), {_RES_SHIFT})"
     )
 
 

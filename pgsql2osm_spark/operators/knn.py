@@ -173,7 +173,7 @@ def knn_rings(
     #3': the single-level collect is bounded by 4^res): a coarse probe at
     res 8 (<= 65,536 rows) first computes per-query coarse candidate
     masks; the fine probe then aggregates ONLY cells whose res-8 parent is
-    in the union of kept coarse cells (cells.cell_parent_expr + IN-list —
+    in the union of kept coarse cells (cells.cell_parent_sql + IN-list —
     the fact table still never shuffles), with the fine collect bounded a
     priori by sum(min(4^(res-8), n_coarse)) over kept coarse cells and
     guarded by ``MAX_FINE_CELLS``. Correctness: a fine cell outside every
@@ -201,7 +201,7 @@ def knn_rings(
     fine = pts
     if res > COARSE_PROBE_RES:
         coarse = pts.withColumn(
-            "_pcell", C.cell_parent_expr(F.col("_cell"), res, COARSE_PROBE_RES)
+            "_pcell", F.expr(C.cell_parent_sql("_cell", str(res), COARSE_PROBE_RES))
         )
         coarse_pdf = coarse.groupBy("_pcell").agg(F.count(F.lit(1)).alias("n")).toPandas()
         ccells = coarse_pdf["_pcell"].to_numpy(dtype=np.int64)

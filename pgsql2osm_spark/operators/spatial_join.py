@@ -12,13 +12,18 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
      mapInPandas pass for a region table (REGIONS_DF_SCHEMA).
   2. points: cell id per needed resolution computed with PURE JVM bitwise
      expressions (cells.with_cell_columns — whole-stage codegen, no Python).
-  3. broadcast equi-join with ONE probe row per point: every cover row
-     carries ``_key``, its cell's ancestor at the cover's coarsest
-     resolution, and a point probes with its own cell at that resolution;
+  3. broadcast equi-join with one probe row per point and key band: the
+     cover's resolutions fall into bands (_key_res), every cover row
+     carries ``_key``, its cell's ancestor at its band's lowest resolution,
+     and a point probes each band with its own cell there;
      ``CASE res WHEN r THEN <point's res-r cell> ... END = cell`` in the join
-     condition keeps the cover rows of the point's own cells. No shuffle of
-     the fact table at all: broadcast hash join + codegen'd cell computation
-     stream through the scan.
+     condition keeps the cover rows of the point's own cells (a band's
+     lowest resolution needs no CASE branch: its key is the cell). A probe reads
+     every row under its key, so a band holds resolutions together only
+     while its rows stay few per key (KEY_ROWS): one band and one probe for
+     disjoint regions of nearby resolutions, a band per resolution for
+     nested admin levels. No shuffle of the fact table at all: broadcast
+     hash join + codegen'd cell computation stream through the scan.
   4. the exact even-odd test rides in the join condition as ONE SQL
      predicate (refine_sql) over per-cell data computed with the cover
      (cell_slots, in the style of S2ShapeIndex's per-cell clipped edges): a
@@ -37,9 +42,11 @@ Scale notes (100 TB): the fact side is never collected, and never
 shuffled while the cover fits the broadcast; the cover (with its slot
 columns) is O(regions * cells_per_region) data (bounded by TARGET_CELLS per
 region). A cover above MAX_BROADCAST_CELLS joins through a cell-keyed
-shuffle of the points instead — the fallback, not the default. Ahead of
-that shuffle, one IN-list over the cover's res-RES_LO cells (at most
-4^RES_LO of them) drops every point that no cover cell can hold.
+shuffle of the points instead — the fallback, not the default — keyed on
+each resolution's own cell, so a dense area's points spread over reducers
+as its fine cells do. Ahead of that shuffle, one IN-list over the cover's
+res-RES_LO cells (at most 4^RES_LO of them) drops every point that no
+cover cell can hold.
 """
 
 from __future__ import annotations
@@ -83,6 +90,9 @@ SLOT_COLS = [f"_{f}_{k}" for k in range(EDGE_SLOTS) for f in _SLOT_FIELDS]
 # cells, and batches its (cells x edges) temporaries to this many entries.
 MAX_SPLIT_CELLS = TARGET_CELLS * 16
 _SLOT_BATCH = 1 << 21
+# Cover resolutions share one probe key while their rows average at most
+# this many per key (_key_res): each probe reads every row under its key.
+KEY_ROWS = 4
 
 
 def _ring_edges(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
@@ -291,21 +301,46 @@ def _check_regions_df(regions_df: DataFrame) -> None:
             )
 
 
-# The cover's columns: the join resolves them by name, so no point column
-# may share one.
-_COVER_COLS = ("region_id", "res", "cell", "_par", *SLOT_COLS, "_key")
+# The cover's columns and the probe's band key: the join resolves them by
+# name, so no point column that the join reads may share one.
+_JOIN_COLS = ("region_id", "res", "cell", "_par", *SLOT_COLS, "_key", "_pk")
 
 
 def _check_point_cols(points: DataFrame) -> None:
-    """Raise ValueError naming the first point column that a cover column
+    """Raise ValueError naming the first point column that a join column
     shares (Spark compares names without case)."""
-    cover = {c.lower() for c in _COVER_COLS}
+    join = {c.lower() for c in _JOIN_COLS}
     for name in points.columns:
-        if name.lower() in cover:
+        if name.lower() in join:
             raise ValueError(
-                f"point column {name!r} collides with the cover column of that "
+                f"point column {name!r} collides with the join column of that "
                 f"name; rename it before pip_join"
             )
+
+
+def _key_res(res_rows: dict[int, int], broadcast: bool) -> dict[int, int]:
+    """Each cover resolution -> the resolution of its probe key, given the
+    cover's row count per resolution. Resolutions fall into bands and a
+    point probes each band once, with its cell at the band's lowest
+    resolution b, reading every cover row under that key. A resolution r
+    joins the band below it while the band averages at most ``KEY_ROWS``
+    rows per key, counting n res-r rows as no fewer than n / 4^(r - b)
+    keys (a region's cells pack at most that many under one key). Nested
+    admin levels (gen_continent) keep a band per resolution, disjoint
+    regions at res 9 and 11 (the headline's) share one.
+
+    A shuffled cover (``broadcast`` False) keys every resolution on its own
+    cell: the shuffle partitions points by key, and a coarse key would send
+    a dense area's points all to one reducer."""
+    out, base, rows, keys = {}, None, 0, 0
+    for r, n in sorted(res_rows.items()):
+        if broadcast and base is not None:
+            k = max(keys, -(-n // 4 ** (r - base)))
+            if (rows + n) / k <= KEY_ROWS:
+                out[r], rows, keys = base, rows + n, k
+                continue
+        out[r], base, rows, keys = r, r, n, n
+    return out
 
 
 def _build_cover_df(regions_df: DataFrame) -> DataFrame:
@@ -353,12 +388,15 @@ def pip_join(
     (_build_cover_df), so no geometry visits the driver (SURVEY.md J1
     'range-partitioned fallback'); a table is checked against
     ``REGIONS_DF_SCHEMA`` before anything is planned. Either cover takes
-    the same one-probe-per-point hash join -> refine: broadcast up to
-    ``MAX_BROADCAST_CELLS`` cells, a cell-keyed shuffle of the masked points
-    above. A point column that shares a cover column's name
-    (``_COVER_COLS``) is a ValueError, raised before anything is planned.
+    the same hash join (one probe per point and key band, _key_res) ->
+    refine: broadcast up to ``MAX_BROADCAST_CELLS`` cells, a cell-keyed
+    shuffle of the masked points above. The join reads only the kept point
+    columns, ``lon``/``lat`` and ``cell_cols``; one of those that shares a
+    join column's name (``_JOIN_COLS``) is a ValueError, raised before
+    anything is planned.
     """
     out_cols = keep_cols or list(points.columns)
+    points = points.select(*dict.fromkeys([*out_cols, lon, lat, *(cell_cols or {}).values()]))
     _check_point_cols(points)
     if not isinstance(regions, DataFrame) and (
         len(regions) * TARGET_CELLS > 2 * MAX_BROADCAST_CELLS
@@ -381,7 +419,7 @@ def pip_join(
         # the job that materializes it; unlike persist(), ContextCleaner
         # frees the blocks once the DataFrame is garbage-collected.
         cover = _build_cover_df(regions).localCheckpoint(eager=False)
-        # ONE probe job yields the distinct resolutions, the cell count and
+        # ONE probe job yields the row count per resolution and
         # the res-RES_LO parents of the shuffle branch's mask. The count
         # matters because a checkpointed cover has no Catalyst stats
         # (LogicalRDD -> default huge size): without the broadcast hint the
@@ -392,35 +430,42 @@ def pip_join(
             .agg(F.count(F.lit(1)).alias("_n"))
             .collect()
         )
-        res_list = sorted({r["res"] for r in counts})
-        n_cells = sum(r["_n"] for r in counts)
-        parents = {r["_p"] for r in counts}
-        if res_list:
-            cover = cover.withColumn("_key", F.expr(C.cell_parent_sql("cell", "res", res_list[0])))
+        res_rows: dict[int, int] = {}
+        for row in counts:
+            res_rows[row["res"]] = res_rows.get(row["res"], 0) + row["_n"]
+        parents = {row["_p"] for row in counts}
     else:
-        cover_pdf = build_cover(regions)
-        res_list = sorted(int(r) for r in cover_pdf["res"].unique())
-        n_cells = len(cover_pdf)
-        if res_list:
-            cells_arr = cover_pdf["cell"].to_numpy()
-            parents = set(C.cell_parent(cells_arr, RES_LO).tolist())
-            cover_pdf["_key"] = C.cell_parent(cells_arr, res_list[0])
-            cover = spark.createDataFrame(cover_pdf)
-    if not res_list:
+        cover = build_cover(regions)
+        res_rows = {int(r): int(n) for r, n in cover["res"].value_counts().items()}
+        parents = set(C.cell_parent(cover["cell"].to_numpy(), RES_LO).tolist())
+    if not res_rows:
         return (
             points.select(*out_cols)
             .withColumn("region_id", F.lit(None).cast("long"))
             .where(F.lit(False))
         )
+    broadcast = sum(res_rows.values()) <= MAX_BROADCAST_CELLS
+    key_res = _key_res(res_rows, broadcast)
+    if isinstance(cover, pd.DataFrame):
+        # _key in pandas: a projection over the local relation would run
+        # row by row on the driver at planning
+        key_of = cover["res"].map(key_res).to_numpy()
+        cover["_key"] = C.cell_parent(cover["cell"].to_numpy(), key_of)
+        cover = spark.createDataFrame(cover)
+    else:
+        key_of = "CASE res " + " ".join(f"WHEN {r} THEN {b}" for r, b in key_res.items()) + " END"
+        cover = cover.withColumn("_key", F.expr(C.cell_parent_sql("cell", "res", key_of)))
     # ONE scan, ONE join, ONE refine — fused, because the source subtree is
     # the expensive part (a 100 TB scan, or here heavy synthetic
     # generation): a branch-per-stage union re-executes it per branch
     # (measured 1.6-1.8x total wall on the 500M-row headline).
-    # Each point probes once, with its cell at the cover's coarsest
-    # resolution against every cover row's ``_key`` (that cell's ancestor);
-    # the join condition then picks, per cover row, the point's cell at the
-    # row's own resolution. Per-res cells are projected columns (a single
-    # shared Morton spread at res 26, per-res shift — cells.with_cell_columns).
+    # Each point probes once per key band, with its cell at the band's
+    # lowest resolution against every cover row's ``_key`` (that cell's
+    # ancestor); the join condition then picks, per cover row, the point's
+    # cell at the row's own resolution. Per-res cells are projected columns
+    # (a single shared Morton spread at res 26, per-res shift —
+    # cells.with_cell_columns).
+    res_list = sorted(key_res)
     cell_cols = dict(cell_cols or {})
     missing = [r for r in res_list if r not in cell_cols]
     probe = points
@@ -433,7 +478,7 @@ def pip_join(
     # MAX_BROADCAST_CELLS alone decides the broadcast: the shuffle_hash hint
     # keeps Spark's own size threshold (static or AQE) from broadcasting a
     # cover judged too large.
-    if n_cells <= MAX_BROADCAST_CELLS:
+    if broadcast:
         cover = F.broadcast(cover)
     else:
         # the shuffle moves only points whose res-RES_LO cell holds cover
@@ -446,11 +491,25 @@ def pip_join(
         probe = probe.where(
             F.expr(f"{C.grid_sql(lon, lat, RES_LO)} IN ({', '.join(map(str, sorted(keys)))})")
         )
+    bands = sorted(set(key_res.values()))
+    pk = ref[bands[0]]
+    if len(bands) > 1:
+        # Generate evaluates its expressions interpreted (outside
+        # whole-stage codegen), so it explodes column references only:
+        # inlining the bit math there costs ~100x (16 s vs 0.14 s on 2M rows)
+        refs = ", ".join(ref[b] for b in bands)
+        probe = probe.withColumn("_pk", F.expr(f"explode(array({refs}))"))
+        pk = "_pk"
     # Interior cells carry parity 1 and no slots, so their rows pass on the
     # parity bit alone (the X2 staging); boundary rows count crossings over
     # at most EDGE_SLOTS edges.
-    fine = " ".join(f"WHEN {r} THEN {ref[r]}" for r in res_list)
-    cond = f"{ref[res_list[0]]} = _key AND CASE res {fine} END = cell AND {refine_sql(lon, lat)}"
+    # A row at its band's lowest resolution has _key = cell, so the key
+    # match is the cell match; the CASE picks the point's cell only for the
+    # finer resolutions of a band (none when every band holds one, so the
+    # probe carries no cell column past the join).
+    fine = " ".join(f"WHEN {r} THEN {ref[r]}" for r, b in key_res.items() if r != b)
+    pick = f"CASE res {fine} ELSE cell END = cell AND " if fine else ""
+    cond = f"{pk} = _key AND {pick}{refine_sql(lon, lat)}"
     return probe.join(cover, F.expr(cond), "inner").select(*out_cols, "region_id")
 
 

@@ -37,8 +37,11 @@ CDS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 # is JSON lines.
 _JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
 # make_pyfiles_zip deletes the zips of other package states, and partial
-# writes, that no session has used for this long.
+# writes, that no process has used for this long (and, for a zip, that no
+# process holds locked).
 _STALE_ZIP_S = 24 * 3600
+# path -> descriptor of each pyfiles zip this process holds a shared flock on
+_HELD_ZIPS: dict[str, int] = {}
 
 
 def make_pyfiles_zip() -> str:
@@ -49,15 +52,19 @@ def make_pyfiles_zip() -> str:
     never rewrites the zip a running session ships (its tasks would fail
     with "exists and does not match contents"). The same files give the same
     bytes, and an existing zip of that name is left as it is but for its
-    access time, which marks it in use. Writing a new zip deletes the other
-    ``pgsql2osm_spark_pyfiles-*`` zips and partial writes that no session
-    has used for ``_STALE_ZIP_S``.
+    access time. The calling process holds a shared ``flock`` on the zip it
+    gets until it exits, so a session, or a spark-submit driver whose
+    get_spark returns its --py-files archive, keeps its zip. Writing a new
+    zip deletes the other ``pgsql2osm_spark_pyfiles-*`` zips that no
+    process holds and that were unused for ``_STALE_ZIP_S``, and partial
+    writes as old.
 
     When the package was itself imported FROM a zip, returns that archive:
     os.walk can't see into zipimport paths."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
     if not os.path.isdir(pkg_dir):  # zipimported — root is the archive
+        _hold_zip(root)
         return root
     entries = []
     for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
@@ -65,11 +72,10 @@ def make_pyfiles_zip() -> str:
             entries.append((os.path.relpath(path, root), f.read()))
     digest = hashlib.sha256(repr(entries).encode()).hexdigest()[:16]
     dest = os.path.join(tempfile.gettempdir(), f"pgsql2osm_spark_pyfiles-{digest}.zip")
-    try:
-        os.utime(dest, ns=(time.time_ns(), os.stat(dest).st_mtime_ns))
+    if _hold_zip(dest):
+        with contextlib.suppress(OSError):
+            os.utime(dest, ns=(time.time_ns(), os.stat(dest).st_mtime_ns))
         return dest
-    except FileNotFoundError:
-        pass
     tmp = f"{dest}.{os.getpid()}.tmp"  # concurrent starts each write their own
     with zipfile.ZipFile(tmp, "w") as zf:
         for rel, data in entries:
@@ -78,13 +84,38 @@ def make_pyfiles_zip() -> str:
             info.external_attr = 0o644 << 16
             zf.writestr(info, data, zipfile.ZIP_DEFLATED)
     os.replace(tmp, dest)  # atomic — readers never see a partial zip
+    _hold_zip(dest)  # new, so no cleanup deletes it meanwhile
     _drop_stale_zips(dest)
     return dest
 
 
+def _hold_zip(path: str) -> bool:
+    """Take a shared flock on the zip at ``path`` for the rest of this
+    process; False when there is no such file. A cleanup deletes a zip only
+    under an exclusive lock, so a zip that this check finds still linked
+    stays until this process exits."""
+    if path in _HELD_ZIPS:
+        return True
+    try:
+        fd = os.open(path, os.O_RDONLY)
+    except FileNotFoundError:
+        return False
+    fcntl.flock(fd, fcntl.LOCK_SH)
+    try:
+        linked = os.stat(path).st_ino == os.fstat(fd).st_ino
+    except FileNotFoundError:
+        linked = False
+    if not linked:
+        os.close(fd)
+        return False
+    _HELD_ZIPS[path] = fd
+    return True
+
+
 def _drop_stale_zips(keep: str) -> None:
-    """Delete the pyfiles zips and partial writes beside ``keep`` whose last
-    access or write is older than ``_STALE_ZIP_S``."""
+    """Delete the pyfiles zips beside ``keep`` that no process holds
+    (make_pyfiles_zip) and whose last access and write are older than
+    ``_STALE_ZIP_S``, and partial writes as old."""
     cutoff = time.time() - _STALE_ZIP_S
     pattern = os.path.join(glob.escape(os.path.dirname(keep)), "pgsql2osm_spark_pyfiles-*")
     for path in glob.glob(pattern):
@@ -92,8 +123,17 @@ def _drop_stale_zips(keep: str) -> None:
             continue
         with contextlib.suppress(OSError):  # another session start got there first
             st = os.stat(path)
-            if max(st.st_atime, st.st_mtime) < cutoff:
+            if max(st.st_atime, st.st_mtime) >= cutoff:
+                continue
+            if path.endswith(".tmp"):
                 os.remove(path)
+                continue
+            fd = os.open(path, os.O_RDONLY)
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)  # BlockingIOError: held
+                os.remove(path)
+            finally:
+                os.close(fd)
 
 
 def get_spark(

@@ -324,7 +324,7 @@ def test_pip_join_mixed_resolution_cover(spark, monkeypatch):
 
 def _assert_names_colliding_columns(spark, regions):
     lon, lat = FX.gen_points_slice(0, 50)
-    for name in ("cell", "_par", "region_id", "Res", "_key", "_dx_7"):
+    for name in ("cell", "_par", "region_id", "Res", "_key", "_pk", "_dx_7"):
         pts = spark.createDataFrame(
             pd.DataFrame({"idx": np.arange(50), "lon": lon, "lat": lat, name: 0})
         )
@@ -341,3 +341,33 @@ def test_pip_join_names_colliding_point_column_list(spark):
 def test_pip_join_names_colliding_point_column_table(spark):
     """The same for a region table input."""
     _assert_names_colliding_columns(spark, SJ.regions_to_df(spark, FX.gen_admin_polygons(3)))
+
+
+def test_pip_join_ignores_unkept_point_column_named_like_cover(spark):
+    """The join reads only the kept point columns and lon/lat: a point
+    column named like a cover column that is not kept (an image's ``res``)
+    joins as if it were absent."""
+    lon, lat = FX.gen_points_slice(0, 3000)
+    pdf = pd.DataFrame({"idx": np.arange(3000), "lon": lon, "lat": lat})
+    regions = FX.gen_admin_polygons(12)
+
+    def rows(df):
+        out = SJ.pip_join(spark, spark.createDataFrame(df), regions, keep_cols=["idx"])
+        return sorted((int(r["idx"]), int(r["region_id"])) for r in out.collect())
+
+    got = rows(pdf.assign(res=np.int32(640)))
+    assert got and got == rows(pdf)
+
+
+def test_key_bands_follow_rows_per_key():
+    """Resolutions share a probe key only while their rows stay few per
+    key: the headline's disjoint res-9 and res-11 regions share one band,
+    gen_continent's nested levels keep the res-7 continent and the res-11
+    provinces apart, and a shuffled cover keys each resolution on itself."""
+    def res_rows(regions):
+        return {int(r): int(n) for r, n in SJ.build_cover(regions)["res"].value_counts().items()}
+
+    admin = res_rows(FX.gen_admin_polygons(12))
+    assert SJ._key_res(admin, True) == {9: 9, 11: 9}
+    assert SJ._key_res(admin, False) == {9: 9, 11: 11}
+    assert SJ._key_res(res_rows(FX.gen_continent()), True) == {7: 7, 9: 9, 10: 9, 11: 11}

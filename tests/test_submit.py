@@ -88,15 +88,18 @@ def test_pyfiles_zip_is_named_by_content(tmp_path):
 
 def test_pyfiles_zip_drops_stale_zips(tmp_path, monkeypatch):
     """Writing a zip deletes other package states' zips and partial writes
-    unused for a day; a fresh zip, unrelated files and the zip being
-    returned stay. Returning an existing zip refreshes its access time
-    only, so a later cleanup sees it in use."""
+    unused for a day, unless another process holds the zip's lock; a fresh
+    zip, unrelated files and the zip being returned stay. Returning an
+    existing zip refreshes its access time only, so a later cleanup sees it
+    in use."""
+    import fcntl
     import tempfile
     import time
 
     from pgsql2osm_spark import session
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_HELD_ZIPS", {})
     old = time.time() - 2 * session._STALE_ZIP_S
     files = {
         name: tmp_path / name
@@ -104,6 +107,7 @@ def test_pyfiles_zip_drops_stale_zips(tmp_path, monkeypatch):
             "pgsql2osm_spark_pyfiles-0000000000000000.zip",
             "pgsql2osm_spark_pyfiles-1111111111111111.zip.4242.tmp",
             "pgsql2osm_spark_pyfiles-2222222222222222.zip",
+            "pgsql2osm_spark_pyfiles-3333333333333333.zip",
             "pgsql2osm_spark_pyfiles.txt",
             "other.zip",
         )
@@ -112,14 +116,22 @@ def test_pyfiles_zip_drops_stale_zips(tmp_path, monkeypatch):
         path.write_bytes(b"x")
     for name in ("pgsql2osm_spark_pyfiles-0000000000000000.zip",
                  "pgsql2osm_spark_pyfiles-1111111111111111.zip.4242.tmp",
+                 "pgsql2osm_spark_pyfiles-3333333333333333.zip",
                  "pgsql2osm_spark_pyfiles.txt", "other.zip"):
         os.utime(files[name], (old, old))
-    cur = session.make_pyfiles_zip()
+    # a long-running job's zip: old, but locked as make_pyfiles_zip locks it
+    held = os.open(files["pgsql2osm_spark_pyfiles-3333333333333333.zip"], os.O_RDONLY)
+    fcntl.flock(held, fcntl.LOCK_SH)
+    try:
+        cur = session.make_pyfiles_zip()
+    finally:
+        os.close(held)
     left = sorted(p.name for p in tmp_path.iterdir())
     assert left == sorted([
         os.path.basename(cur), "other.zip", "pgsql2osm_spark_pyfiles-2222222222222222.zip",
-        "pgsql2osm_spark_pyfiles.txt",
+        "pgsql2osm_spark_pyfiles-3333333333333333.zip", "pgsql2osm_spark_pyfiles.txt",
     ])
+    assert cur in session._HELD_ZIPS
     os.utime(cur, (old, old))
     assert session.make_pyfiles_zip() == cur
     st = os.stat(cur)
