@@ -114,7 +114,7 @@ def xy_to_cell(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | m).astype(np.int64)
 
 
-def cell_parent(cell: np.ndarray, parent_res=None) -> np.ndarray:
+def cell_parent(cell: np.ndarray, parent_res: int | np.ndarray | None = None) -> np.ndarray:
     """Parent cell (one or more levels up) — a pure bit shift, no geometry.
     ``parent_res`` is one resolution or one per cell; None: one level up."""
     cell = np.asarray(cell)
