@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 from pgsql2osm_spark.functions import cells as C
 from pgsql2osm_spark.functions import geometry as G
 from pgsql2osm_spark.plans.present import presentation_sort as _psort
+from pgsql2osm_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Deterministic derived points (identical arithmetic in Spark and DuckDB).
@@ -423,8 +424,8 @@ def q_audio_features(spark, sf_dir):
         n = int(rng.integers(3000, 12000))
         s = (rng.standard_normal(n) * 4000).astype(np.int16)
         rows.append((f"a{i:03d}", AU.pack_fakepcm(s), 16000, n, "fakepcm"))
-    df = spark.createDataFrame(
-        rows, "audio_id string, bytes binary, sr int, n_samples int, fmt string"
+    df = local_frame(
+        spark, rows, "audio_id string, bytes binary, sr int, n_samples int, fmt string"
     )
     return AU.audio_features(df, window=1024).transform(_psort, "audio_id", "win")
 
@@ -440,10 +441,12 @@ def q_pipeline_funnel(spark, sf_dir):
     projected column on a SINGLE lineage (no self-joins, each stage one
     pass); the only side inputs are the tiny contaminated id set
     (broadcast left join) and the per-domain mixture thresholds (small
-    count agg over stage-7 survivors, computed off a lazy localCheckpoint
-    of the flags so the corpus scan runs once, then broadcast back). The
-    one wide shuffle is the exact-dedup fingerprint window — the same
-    shuffle exact_dedup itself needs. Stage counts fold into ONE aggregate
+    count agg over stage-7 survivors, computed off a localCheckpoint of
+    the flags so the corpus scan runs once, then broadcast back; under AQE
+    that checkpoint runs the shuffle stages below it when the flags are
+    built, so building this query runs jobs). The one wide shuffle is the
+    exact-dedup fingerprint window — the same shuffle exact_dedup itself
+    needs. Stage counts fold into ONE aggregate
     unpivoted by map-explode (the previous 4-stage funnel re-executed the
     agg subtree per UNION branch).
 
@@ -665,8 +668,8 @@ def q_streaming_tiles(spark, sf_dir):
     # file I/O, not compute
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     work = tempfile.mkdtemp(prefix="stream_q_", dir=shm)
-    spark.createDataFrame(
-        pd.DataFrame({"ts": ts, "lon": lon, "lat": lat})
+    local_frame(
+        spark, pd.DataFrame({"ts": ts, "lon": lon, "lat": lat})
     ).repartition(4).write.mode("overwrite").parquet(f"{work}/src")
     out = ST.run_bounded_replay(spark, f"{work}/src", f"{work}/ckpt", "q_stream_tiles", z=9)
     return out.select(
@@ -718,8 +721,9 @@ def q_pip_fixture_regions(spark, sf_dir):
 
     n = 20000
     lon, lat = FX.gen_points_slice(0, n)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
+    pts = local_frame(
+        spark,
+        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat}),
     )
     out = SJ.pip_join(spark, pts, FX.gen_admin_polygons(12), keep_cols=["image_id"])
     return out.groupBy("region_id").agg(F.count(F.lit(1)).alias("n")).transform(_psort, "region_id")
@@ -738,8 +742,9 @@ def q_pip_partitioned_fixture(spark, sf_dir):
 
     n = 20000
     lon, lat = FX.gen_points_slice(0, n)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
+    pts = local_frame(
+        spark,
+        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat}),
     )
     rdf = SJ.regions_to_df(spark, FX.gen_admin_polygons(12))
     out = SJ.pip_join(spark, pts, rdf, keep_cols=["image_id"])
@@ -758,8 +763,9 @@ def q_knn_rings_fixture(spark, sf_dir):
 
     n = 5000
     lon, lat = FX.gen_points_slice(0, n)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
+    pts = local_frame(
+        spark,
+        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat}),
     )
     rng = np.random.default_rng(5)
     queries = pd.DataFrame(
@@ -800,7 +806,7 @@ def q_video_frames(spark, sf_dir):
             np.asarray(imgs["pixels"][6 * v + i]) for i in range(6)
         ]
         rows.append((f"vid{v:03d}", TL.pack_fakevideo(frames), "fakevideo"))
-    df = spark.createDataFrame(rows, "media_id string, bytes binary, fmt string")
+    df = local_frame(spark, rows, "media_id string, bytes binary, fmt string")
     out = TL.frame_sample(df, every_n=2)
     return out.select(
         "media_id",
@@ -876,8 +882,8 @@ def q_export_pipeline(spark, sf_dir):
     out = CL.nwr_within_closure(
         mdf,
         spark.range(1, 120),  # (id long) seed set — Range beats a 119-row parallelize
-        spark.createDataFrame([(503,), (507,)], "id long"),
-        spark.createDataFrame([(9001,), (9002,), (9006,)], "id long"),
+        local_frame(spark, [(503,), (507,)], "id long"),
+        local_frame(spark, [(9001,), (9002,), (9006,)], "id long"),
     )
     # attribute sources derived from the membership fixture's tag maps
     parents = mdf.select(
@@ -899,8 +905,8 @@ def q_export_pipeline(spark, sf_dir):
         )
     )
     lon, lat = FX.gen_points_slice(0, 400)
-    coords = spark.createDataFrame(
-        pd.DataFrame({"id": range(1, 401), "lon": lon, "lat": lat})
+    coords = local_frame(
+        spark, pd.DataFrame({"id": range(1, 401), "lon": lon, "lat": lat})
     )
     rows = AT.export_rows(out, [(parents, 0), (nodes, 1)], coordinates=coords)
     # W/R rows carry no coordinates; -999 instead of NULL because NULL/NaN
@@ -956,8 +962,8 @@ def q_closure_fixture(spark, sf_dir):
     out = CL.nwr_within_closure(
         mdf,
         spark.range(1, 80),  # (id long) seed set — Range beats a 79-row parallelize
-        spark.createDataFrame([(505,), (510,)], "id long"),
-        spark.createDataFrame([(9001,), (9004,)], "id long"),
+        local_frame(spark, [(505,), (510,)], "id long"),
+        local_frame(spark, [(9001,), (9004,)], "id long"),
     )
     parts = [df.select(F.lit(k).alias("kind"), "id") for k, df in out.items()]
     u = parts[0]
@@ -986,8 +992,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
     n = 50_000
     lon, lat = FX.gen_points_slice(0, n)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
+    pts = local_frame(
+        spark,
+        pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat}),
     )
     pts, h3_names = C.with_cell_columns(pts, "lon", "lat", [7, 8, 9, 10, 11])
     joined = SJ.pip_join(

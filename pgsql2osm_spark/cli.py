@@ -22,8 +22,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import math
 import sys
+
+# Diagnostics go to this logger (stderr when the application configures no
+# handler); stdout carries only JSON lines.
+_LOG = logging.getLogger(__name__)
 
 
 def _bbox(value: str) -> tuple[float, ...]:
@@ -117,11 +122,11 @@ def run_curate(args, spark) -> int:
     docs = spark.read.parquet(args.input)
     need = {"doc_id", "text"}
     if not need <= set(docs.columns):
-        print(f"--curate input needs columns {sorted(need)}", file=sys.stderr)
+        _LOG.error("--curate input needs columns %s", sorted(need))
         return 2
     weights = _json.loads(args.mix_weights) if args.mix_weights else None
     if weights is not None and "lang" not in docs.columns:
-        print("--mix-weights needs a lang column in the input", file=sys.stderr)
+        _LOG.error("--mix-weights needs a lang column in the input")
         return 2
     bench = spark.read.parquet(args.benchmark) if args.benchmark else None
     flags = CU.funnel_flags(
@@ -168,10 +173,9 @@ def main(argv=None, spark=None) -> int:
 
     if not args.curate and not (args.bbox or args.iso or args.geojson or args.osm_rel_id):
         # the reference's "no boundary provided" guard (settings.py:143-146)
-        print(
+        _LOG.error(
             "error: no boundary provided; for the whole planet use "
-            "--bbox='-180,-89.99,180,89.99'",
-            file=sys.stderr,
+            "--bbox='-180,-89.99,180,89.99'"
         )
         return 2
     owns_session = spark is None
@@ -212,10 +216,7 @@ def run_tiles(args, spark) -> int:
                 F.col("region_id") == args.osm_rel_id
             )
             if regions.limit(1).count() == 0:
-                print(
-                    f"osm rel id {args.osm_rel_id} not in {args.boundaries}",
-                    file=sys.stderr,
-                )
+                _LOG.error("osm rel id %s not in %s", args.osm_rel_id, args.boundaries)
                 return 2
         else:
             # fixture analogue: rel id 100000+r maps to fixture polygon r
@@ -224,7 +225,7 @@ def run_tiles(args, spark) -> int:
             rid = args.osm_rel_id - 100000
             matches = [r for r in FX.gen_admin_polygons(64) if r["region_id"] == rid]
             if not matches:
-                print(f"osm rel id {args.osm_rel_id} has no boundary polygon", file=sys.stderr)
+                _LOG.error("osm rel id %s has no boundary polygon", args.osm_rel_id)
                 return 2
             regions = matches
     elif args.iso:
@@ -238,7 +239,7 @@ def run_tiles(args, spark) -> int:
         # library callers keep the all-candidates default of regions_lookup
         hits = RG.regions_lookup(dim, args.iso, first_match=True).collect()
         if not hits:
-            print(f"iso {args.iso!r} not found", file=sys.stderr)
+            _LOG.error("iso %r not found", args.iso)
             return 2
         if args.boundaries:
             # boundary-table contract: region_id = osm relation id
@@ -247,10 +248,9 @@ def run_tiles(args, spark) -> int:
                 F.col("region_id").isin(wanted_ids)
             )
             if regions.limit(1).count() == 0:
-                print(
-                    f"iso {args.iso!r} resolved to relation ids {wanted_ids} "
-                    f"not present in {args.boundaries}",
-                    file=sys.stderr,
+                _LOG.error(
+                    "iso %r resolved to relation ids %s not present in %s",
+                    args.iso, wanted_ids, args.boundaries,
                 )
                 return 2
         else:
@@ -265,12 +265,10 @@ def run_tiles(args, spark) -> int:
                 # real dimensions (--regions-csv) carry osm ids with no
                 # fixture polygon — err out like the reference's
                 # missing-boundary path instead of silently substituting
-                print(
-                    f"iso {args.iso!r} resolved to osm ids with no boundary "
-                    f"polygon in this deployment: "
-                    f"{sorted(h['osm_id'] for h in hits)} "
-                    "(pass --boundaries for real geometry)",
-                    file=sys.stderr,
+                _LOG.error(
+                    "iso %r resolved to osm ids with no boundary polygon in "
+                    "this deployment: %s (pass --boundaries for real geometry)",
+                    args.iso, sorted(h["osm_id"] for h in hits),
                 )
                 return 2
 

@@ -110,9 +110,11 @@ def decontaminate(
     are small by construction, the corpus never shuffles); above it (a user
     decontaminating against a large held-out corpus — 10^8+ grams would OOM
     the driver/executors as a broadcast) the semi join runs as a plain
-    shuffle join instead. The gram set is lazily localCheckpoint'ed so the
-    probe count and the join share one computation; its unknown post-
-    checkpoint size stats also stop AQE from re-broadcasting the big set.
+    shuffle join instead. The gram set is localCheckpoint'ed so the probe
+    count and the join share one computation; its unknown post-checkpoint
+    size stats also stop AQE from re-broadcasting the big set. The
+    checkpoint is not lazy: under AQE the call itself runs the distinct's
+    shuffle stage, ahead of the count.
     ``max_broadcast_grams=None`` skips the probe and always broadcasts.
     Doc grams explode narrowly; only the contaminated id set (tiny)
     shuffles, and the flag-back join broadcasts it."""
@@ -138,11 +140,12 @@ def contaminated_ids(
     max_broadcast_grams: int | None = 5_000_000,
 ) -> DataFrame:
     """The (tiny) distinct id set of documents sharing any word ``n``-gram
-    with the benchmark. NOTE: construction runs an EAGER count() job over
-    the benchmark grams whenever ``max_broadcast_grams`` is set (the
-    default) — the broadcast/shuffle dispatch needs the measured size
-    before the plan is built; pass ``max_broadcast_grams=None`` for a fully
-    lazy (always-broadcast) builder. The joinable core of ``decontaminate`` for
+    with the benchmark. NOTE: construction runs jobs over the benchmark
+    grams whenever ``max_broadcast_grams`` is set (the default): the
+    checkpoint's shuffle stage and an EAGER count() — the broadcast/shuffle
+    dispatch needs the measured size before the plan is built; pass
+    ``max_broadcast_grams=None`` for a fully lazy (always-broadcast)
+    builder. The joinable core of ``decontaminate`` for
     pipelines that fold the flag into a wider lineage (pipeline_funnel)
     instead of materializing a full per-document flag table. Same
     count-probe broadcast/shuffle auto-dispatch; see decontaminate."""
@@ -364,8 +367,12 @@ def funnel_flags(
     set is broadcastable — callers with by-construction-small benchmarks
     should pass None and skip that job)
     and the per-domain thresholds (small agg over stage-7 survivors off a
-    lazy localCheckpoint, broadcast back). The one wide shuffle is the
-    exact-dedup fingerprint window — the same shuffle exact_dedup needs."""
+    localCheckpoint of the flags, broadcast back). The one wide shuffle is
+    the exact-dedup fingerprint window — the same shuffle exact_dedup needs.
+    NOTE the checkpoint is not lazy: under AQE, ``localCheckpoint(eager=
+    False)`` runs every shuffle stage below it at the call, so constructing
+    the flags runs the corpus scan, the window's shuffle and the Arrow
+    n-gram stages (5 jobs on the fixture suite's documents)."""
     from pyspark.sql import Window
 
     from . import sampling as SP
@@ -393,7 +400,9 @@ def funnel_flags(
         .withColumn("s5", F.col("s4") & ~F.col("contaminated"))
         .withColumn("s6", F.col("s5") & ~F.col("repetitive"))
         .withColumn("s7", F.col("s6") & F.col("pii_clean"))
-        .localCheckpoint(eager=False)  # reused: threshold agg + final agg
+        # reused: threshold agg + final agg (the call runs the shuffle
+        # stages below it under AQE)
+        .localCheckpoint(eager=False)
     )
     if mix_weights is not None:
         counts7 = flags.where("s7").groupBy("lang").agg(

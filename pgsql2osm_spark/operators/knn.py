@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from ..functions import cells as C
 from ..functions import geometry as G
+from ..session import local_frame
 
 
 def _haversine_col(lon1, lat1, lon2, lat2):
@@ -192,7 +193,7 @@ def knn_rings(
     nid_type = points.schema[point_id].dataType.simpleString()
     out_schema = f"{query_id} long, neighbor_id {nid_type}, rank int, dist_m double"
     if len(queries_pdf) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     qids = queries_pdf[query_id].to_numpy()
     qlon = queries_pdf["lon"].to_numpy(dtype=np.float64)
     qlat = queries_pdf["lat"].to_numpy(dtype=np.float64)
@@ -207,7 +208,7 @@ def knn_rings(
         ccells = coarse_pdf["_pcell"].to_numpy(dtype=np.int64)
         ccounts = coarse_pdf["n"].to_numpy(dtype=np.int64)
         if len(ccells) == 0:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         cmasks = _query_keep_masks(ccells, ccounts, qlon, qlat, k, COARSE_PROBE_RES)
         union = np.zeros(len(ccells), dtype=bool)
         for m in cmasks:
@@ -228,7 +229,7 @@ def knn_rings(
     cells = counts_pdf["_cell"].to_numpy(dtype=np.int64)
     counts = counts_pdf["n"].to_numpy(dtype=np.int64)
     if len(cells) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     masks = _query_keep_masks(cells, counts, qlon, qlat, k, res)
     cand_frames: list[pd.DataFrame] = []
@@ -243,7 +244,7 @@ def knn_rings(
                 }
             )
         )
-    cand_df = spark.createDataFrame(pd.concat(cand_frames, ignore_index=True))
+    cand_df = local_frame(spark, pd.concat(cand_frames, ignore_index=True))
     hits = pts.join(F.broadcast(cand_df), pts["_cell"] == cand_df["_ccell"], "inner").select(
         F.col(query_id),
         F.col(point_id).alias("neighbor_id"),

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cells as C
 from ..functions import geometry as G
+from ..session import local_frame
 from ..sources import fixtures as FX
 
 _LOG = logging.getLogger(__name__)
@@ -286,7 +287,7 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
     (geometry.pack_rings — the WKB analogue; ragged nested arrays don't
     survive pyspark's Arrow->pandas conversion)."""
     rows = [(int(reg["region_id"]), G.pack_rings(normalized_rings(reg))) for reg in regions]
-    return spark.createDataFrame(rows, REGIONS_DF_SCHEMA)
+    return local_frame(spark, rows, REGIONS_DF_SCHEMA)
 
 
 def _check_regions_df(regions_df: DataFrame) -> None:
@@ -451,7 +452,7 @@ def pip_join(
         # row by row on the driver at planning
         key_of = cover["res"].map(key_res).to_numpy()
         cover["_key"] = C.cell_parent(cover["cell"].to_numpy(), key_of)
-        cover = spark.createDataFrame(cover)
+        cover = local_frame(spark, cover)
     else:
         key_of = "CASE res " + " ".join(f"WHEN {r} THEN {b}" for r, b in key_res.items()) + " END"
         cover = cover.withColumn("_key", F.expr(C.cell_parent_sql("cell", "res", key_of)))

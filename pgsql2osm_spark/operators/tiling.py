@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geometry as G
 from ..functions import imaging as I
+from ..session import local_frame
 
 TILE_STATS_SCHEMA = (
     "image_id string, z int, x long, y long, "
@@ -170,5 +171,5 @@ def raster_vector_join(
     only (pure JVM) — the two cost tiers of SURVEY.md J12.
     """
     raster = image_tile_stats(images, z) if decode else tile_key_expr(images, z)
-    vec = F.broadcast(spark.createDataFrame(region_tiles(regions, z)))
+    vec = F.broadcast(local_frame(spark, region_tiles(regions, z)))
     return raster.join(vec, ["z", "x", "y"], "inner")

@@ -30,6 +30,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MANIFEST_SCHEMA = (
     "job_id string, stage string, bucket long, row_count long, "
     "started_at double, wrote_at double"
@@ -97,9 +99,9 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        # limit(0) optimises to an empty local relation, which Catalyst
-        # propagates: a fresh job's resume anti-join is dropped at planning
-        return spark.createDataFrame([], MANIFEST_SCHEMA).limit(0)
+        # an empty local relation, which Catalyst propagates: a fresh job's
+        # resume anti-join is dropped at planning
+        return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
 def remaining_buckets(

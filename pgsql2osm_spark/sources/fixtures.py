@@ -21,6 +21,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..functions import imaging
+from ..session import local_frame
 
 SEED = 42
 WORDS = (
@@ -65,7 +66,7 @@ def _gen_pixels(i: int, rng: np.random.Generator) -> np.ndarray:
 
 
 def gen_images_pandas(n: int, seed: int = SEED, with_pixels: bool = False):
-    """The images fact table as a pandas DataFrame (drives createDataFrame).
+    """The images fact table as a pandas DataFrame (drives images_df).
 
     Deterministic per (n, seed); pixel payloads are PCG64(seed ^ i)-seeded so
     each row is independently reproducible (needed for golden pixel parity).
@@ -115,7 +116,7 @@ def images_df(spark, n: int = 1000, seed: int = SEED):
         ]
     )
     pdf = gen_images_pandas(n, seed)
-    return spark.createDataFrame(pdf, schema=schema)
+    return local_frame(spark, pdf, schema)
 
 
 def gen_points_slice(lo: int, hi: int, seed: int = SEED) -> tuple[np.ndarray, np.ndarray]:
@@ -291,23 +292,6 @@ def gen_continent() -> list[dict]:
     return out
 
 
-def continent_regions_csv(regions: list[dict], rel_base: int = 200000) -> str:
-    """regions.csv-shaped text for gen_continent output: osm_id is the
-    POSITIVE relation id (rel_base + region_id; the boundary parquet keys
-    rows by the same id — see cli --boundaries)."""
-    lines = ["osm_id,name,iso_country,border_type,iso_subcountry,admin_level"]
-    for r in regions:
-        iso = r["iso"].lower()
-        country = iso.split("-")[0]
-        sub = iso if "-" in iso and r["admin_level"] >= 4 else ""
-        btype = {1: "continent", 2: "country"}.get(r["admin_level"], "subdivision")
-        lines.append(
-            f"{rel_base + r['region_id']},{r['name']},{country if r['admin_level'] == 2 else ''},"
-            f"{btype},{sub},{r['admin_level']}"
-        )
-    return "\n".join(lines) + "\n"
-
-
 # ---------------------------------------------------------------------------
 # Membership graph (closure fixtures).
 # ---------------------------------------------------------------------------
@@ -359,4 +343,4 @@ def memberships_df(spark, seed: int = SEED):
         )
         for r in rows
     ]
-    return spark.createDataFrame(data, MEMBER_SCHEMA)
+    return local_frame(spark, data, MEMBER_SCHEMA)

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 REGIONS_SCHEMA = (
     "osm_id long, name string, iso_country string, border_type string, "
     "iso_subcountry string, admin_level int"
@@ -35,7 +37,7 @@ def fixture_regions_dim(spark: SparkSession, n: int = 64) -> DataFrame:
                 2 if r % 5 else 4,
             )
         )
-    return spark.createDataFrame(rows, REGIONS_SCHEMA)
+    return local_frame(spark, rows, REGIONS_SCHEMA)
 
 
 def load_regions_dim(spark: SparkSession, path: str) -> DataFrame:

@@ -215,10 +215,15 @@ def test_cli_regions_csv_dimension(spark, pts_path, tmp_path):
     ) == 2
 
 
-def test_cli_no_boundary_is_an_error(spark, pts_path, tmp_path):
+def test_cli_no_boundary_is_an_error(spark, pts_path, tmp_path, capsys, caplog):
+    """The error goes through the CLI's logger; stdout stays JSON lines."""
     assert cli.main(
         ["--input", pts_path, "--out", str(tmp_path / "nb")], spark=spark
     ) == 2
+    logged = [(r.levelname, r.getMessage()) for r in caplog.records if r.name == cli.__name__]
+    assert len(logged) == 1 and logged[0][0] == "ERROR"
+    assert "no boundary provided" in logged[0][1]
+    assert capsys.readouterr().out == ""
 
 
 def test_cli_boundaries_parquet(spark, pts_path, tmp_path):
@@ -304,6 +309,23 @@ def test_cli_boundaries_malformed_table_rejected(spark, pts_path, tmp_path):
         SJ.pip_join(spark, spark.read.parquet(pts_path), wrong)
 
 
+def _continent_regions_csv(regions: list[dict], rel_base: int = 200000) -> str:
+    """regions.csv-shaped text for gen_continent output: osm_id is the
+    POSITIVE relation id (rel_base + region_id; the boundary parquet keys
+    rows by the same id — see cli --boundaries)."""
+    lines = ["osm_id,name,iso_country,border_type,iso_subcountry,admin_level"]
+    for r in regions:
+        iso = r["iso"].lower()
+        country = iso.split("-")[0]
+        sub = iso if "-" in iso and r["admin_level"] >= 4 else ""
+        btype = {1: "continent", 2: "country"}.get(r["admin_level"], "subdivision")
+        lines.append(
+            f"{rel_base + r['region_id']},{r['name']},{country if r['admin_level'] == 2 else ''},"
+            f"{btype},{sub},{r['admin_level']}"
+        )
+    return "\n".join(lines) + "\n"
+
+
 @pytest.fixture(scope="module")
 def continent(spark, tmp_path_factory):
     """53-region synthetic continent: boundaries parquet keyed by relation
@@ -319,7 +341,7 @@ def continent(spark, tmp_path_factory):
     spark.createDataFrame(
         [(200000 + r["region_id"], r["wkb"]) for r in rows], SJ.REGIONS_DF_SCHEMA
     ).write.parquet(str(base / "boundaries"))
-    (base / "regions.csv").write_text(FX.continent_regions_csv(regions))
+    (base / "regions.csv").write_text(_continent_regions_csv(regions))
     lons = np.concatenate([np.arange(148.13, 180.0, 0.5), np.arange(-179.87, -150.0, 0.5)])
     lats = np.arange(-34.87, 35.0, 0.7)
     gl, gt = np.meshgrid(lons, lats)

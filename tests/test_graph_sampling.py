@@ -26,14 +26,16 @@ def _union_find_components(edges):
 
 
 def test_connected_components_random_graphs(spark):
+    """Random graphs with self-loops, duplicate and reversed edges, and
+    vertices whose only edge is a self-loop."""
     for seed in (1, 2, 3):
         rng = np.random.default_rng(seed)
         n_edges = int(rng.integers(30, 120))
-        edges = [
-            (int(a), int(b))
-            for a, b in rng.integers(0, 80, size=(n_edges, 2))
-            if a != b
-        ]
+        edges = [(int(a), int(b)) for a, b in rng.integers(0, 80, size=(n_edges, 2))]
+        picks = rng.integers(0, len(edges), size=10)
+        edges += [edges[i] for i in picks[:5]] + [edges[i][::-1] for i in picks[5:]]
+        edges += [(int(v), int(v)) for v in rng.integers(0, 90, size=8)]
+        assert any(a == b for a, b in edges)
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         got = {r["v"]: r["component"] for r in GR.connected_components(df).collect()}
         exp = _union_find_components(edges)
