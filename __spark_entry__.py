@@ -126,6 +126,8 @@ def q_pip_convex(spark, sf_dir):
 def q_knn_planar(spark, sf_dir):
     """J11 (oracle-checkable flavor): exact k=3 NN by squared planar distance
     from 25 nation-derived query points to customer-derived points."""
+    from pgsql2osm_spark.operators import knn as K
+
     p = _points(spark, sf_dir)
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")
     q = F.broadcast(
@@ -143,11 +145,8 @@ def q_knn_planar(spark, sf_dir):
             + (F.col("lat") - F.col("qlat")) * (F.col("lat") - F.col("qlat"))
         ).alias("d2"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("neighbor_id").asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
+    return K.top_k(j, "query_id", F.col("d2").asc(), 3).select(
+        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
     )
 
 

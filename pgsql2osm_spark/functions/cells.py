@@ -13,10 +13,11 @@ cell scheme from scratch in vectorized numpy:
   S2 quadratic UV transform) + per-face Morton quadtree, matching the real S2
   cell geometry family.
 
-Both encoders are pure arithmetic over numpy arrays — zero per-row Python —
-and are also emitted as Spark ``Column`` expressions (``cell_expr``) and as
-DuckDB SQL text (``cell_sql``) so the driver's oracle cross-check can verify
-the exact same bits three independent ways.
+Both encoders are pure arithmetic over numpy arrays — zero per-row Python.
+The lat/lon cell is also emitted as Spark SQL projections
+(``with_cell_columns``, the engine's one Spark encoder) and as DuckDB SQL
+text (``cell_sql``) so the driver's oracle cross-check can verify the exact
+same bits three independent ways.
 
 Reference parity: this replaces the PostGIS index stratum of
 /root/reference/pgsql2osm/settings.py:90-146 (boundary predicate over a GiST
@@ -114,19 +115,15 @@ def xy_to_cell(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | m).astype(np.int64)
 
 
-def cell_parent(cell: np.ndarray, parent_res: int | np.ndarray | None = None) -> np.ndarray:
-    """Parent cell (one or more levels up) — a pure bit shift, no geometry.
-    ``parent_res`` is one resolution or one per cell; None: one level up."""
+def cell_parent(cell: np.ndarray, parent_res: int | np.ndarray) -> np.ndarray:
+    """Ancestor cell at ``parent_res`` — a pure bit shift, no geometry.
+    ``parent_res`` is one resolution or one per cell."""
     cell = np.asarray(cell)
     res = cell_res(cell)
-    if parent_res is None:
-        steps = np.ones_like(res)
-        pres = res - 1
-    else:
-        steps = res - parent_res
-        if np.any(steps < 0):
-            raise ValueError("parent_res must be <= cell res")
-        pres = np.full_like(res, parent_res)
+    steps = res - parent_res
+    if np.any(steps < 0):
+        raise ValueError("parent_res must be <= cell res")
+    pres = np.full_like(res, parent_res)
     m = cell.astype(np.uint64) & np.uint64((1 << _RES_SHIFT) - 1)
     m = m >> (np.uint64(2) * steps.astype(np.uint64))
     return ((pres.astype(np.uint64) << np.uint64(_RES_SHIFT)) | m).astype(np.int64)
@@ -223,16 +220,8 @@ def s2_encode(lon, lat, res: int = 16) -> np.ndarray:
 def _spread_sql(expr: str) -> str:
     """DuckDB SQL text computing _spread_bits(expr) via the same magic masks."""
     out = f"(({expr}) & 4294967295)"
-    masks = [
-        (16, 0x0000FFFF0000FFFF),
-        (8, 0x00FF00FF00FF00FF),
-        (4, 0x0F0F0F0F0F0F0F0F),
-        (2, 0x3333333333333333),
-        (1, 0x5555555555555555),
-    ]
-    for shift, mask in masks:
-        # masks fit in signed int64 except none here exceed 2^63-1
-        out = f"(({out} | ({out} << {shift})) & {np.int64(np.uint64(mask))})"
+    for shift, mask in _SPREAD_MASKS:
+        out = f"(({out} | ({out} << {shift})) & {int(np.int64(mask))})"
     return out
 
 
@@ -324,31 +313,3 @@ def cell_parent_sql(cell: str, res: str, parent_res: int | str) -> str:
         f"| shiftleft(CAST({parent_res} AS BIGINT), {_RES_SHIFT})"
     )
 
-
-def cell_expr(lon_col, lat_col, res: int):
-    """Spark Column computing the same cell id with JVM-side built-ins only
-    (whole-stage-codegen friendly; no Python in the hot path)."""
-    from pyspark.sql import functions as F
-
-    n = 1 << res
-
-    def clip(c, lo, hi):
-        return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
-
-    x = clip(F.floor((lon_col + 180.0) / 360.0 * n), 0, n - 1).cast("long")
-    y = clip(F.floor((lat_col + 90.0) / 180.0 * n), 0, n - 1).cast("long")
-
-    def spread(c):
-        out = c.bitwiseAND(F.lit(4294967295))
-        for shift, mask in [
-            (16, 0x0000FFFF0000FFFF),
-            (8, 0x00FF00FF00FF00FF),
-            (4, 0x0F0F0F0F0F0F0F0F),
-            (2, 0x3333333333333333),
-            (1, 0x5555555555555555),
-        ]:
-            out = (out.bitwiseOR(F.shiftleft(out, shift))).bitwiseAND(F.lit(int(np.int64(np.uint64(mask)))))
-        return out
-
-    m = spread(x).bitwiseOR(F.shiftleft(spread(y), 1))
-    return m.bitwiseOR(F.lit(res << _RES_SHIFT))

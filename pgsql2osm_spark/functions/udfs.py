@@ -3,9 +3,9 @@
 Per BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row
 Python) throughout". Each UDF here receives whole Arrow batches as pandas
 Series and dispatches into the numpy kernels in cells.py.
-Where possible the engine prefers the pure-JVM Column emitters
-(cells.cell_expr, geometry.tile_expr) — whole-stage codegen beats Arrow
-round-trips — and the UDF here covers what built-ins cannot express: the
+Where possible the engine prefers pure-JVM expressions
+(cells.with_cell_columns, geometry.tile_expr) — whole-stage codegen beats
+Arrow round-trips — and the UDF here covers what built-ins cannot express: the
 S2 face-projected encode. The exact PIP refine is a Column expression over
 per-cell edge slots (operators/spatial_join.py), not a UDF.
 """

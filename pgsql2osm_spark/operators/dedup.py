@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.fixtures import splitmix64
 from .text import fingerprint_col, tokens_col
 
 # Band buckets holding more rows than this are dropped before a bucket
@@ -52,14 +53,6 @@ def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
 # ---------------------------------------------------------------------------
 
 
-def _splitmix64_np(x: np.ndarray) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        x = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-        x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-        x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-        return x ^ (x >> np.uint64(31))
-
-
 def minhash_signature(
     texts: pd.Series, n_hashes: int = N_HASHES, shingle_k: int = SHINGLE_K
 ) -> np.ndarray:
@@ -79,7 +72,7 @@ def minhash_signature(
     n = len(texts)
     if n == 0:
         return np.empty((0, n_hashes), dtype=np.uint64)
-    seeds = _splitmix64_np(np.arange(1, n_hashes + 1, dtype=np.uint64))
+    seeds = splitmix64(np.arange(1, n_hashes + 1, dtype=np.uint64))
     fnv_prime = np.uint64(0x100000001B3)
     enc = []
     for t in texts:
@@ -104,7 +97,7 @@ def minhash_signature(
     out = np.empty((n, n_hashes), dtype=np.uint64)
     inf = np.uint64(0xFFFFFFFFFFFFFFFF)
     for s in range(n_hashes):
-        d = _splitmix64_np(base ^ seeds[s])
+        d = splitmix64(base ^ seeds[s])
         d[invalid] = inf
         out[:, s] = np.minimum.reduceat(d, starts)
     return out
@@ -152,7 +145,7 @@ def minhash_lsh_candidates(
         for b in range(bands):
             v = np.full(n, np.uint64(b), dtype=np.uint64)
             for j in range(rows_per_band):
-                v = _splitmix64_np(v ^ sig[:, b * rows_per_band + j])
+                v = splitmix64(v ^ sig[:, b * rows_per_band + j])
             digs[:, b] = v.astype(np.int64)
         return pd.Series(list(digs))
 

@@ -1,15 +1,17 @@
-"""kNN via cell-ring expansion — new capability per the north rule (J11).
+"""kNN via cell-count probes — new capability per the north rule (J11).
 
 The reference computes no nearest-neighbor queries; this operator extends its
 cell-index machinery to kNN:
 
-* ``knn_bruteforce`` — exact haversine top-k by broadcast cross join +
-  window; the small-query-set baseline and the test oracle.
-* ``knn_rings``      — scalable path: a per-cell count probe gives every
-  query a provable upper bound on its k-th neighbor distance (the smallest
-  Chebyshev cell disk holding >= k points), then ONE broadcast equi-join on
-  the bounded candidate cell set + exact haversine + row_number top-k. Two
-  jobs total; the fact table is never shuffled and never cross-joined.
+* ``knn_bruteforce`` — exact haversine top-k by broadcast cross join; the
+  small-query-set baseline and the test oracle.
+* ``knn_rings``      — scalable path: a per-cell point count at ``CELL_RES``
+  gives every query a provable upper bound on its k-th neighbor distance
+  (the smallest Chebyshev cell disk holding >= k points), then ONE broadcast
+  equi-join on the bounded candidate cell set + exact haversine. Two jobs
+  total; the fact table is never shuffled and never cross-joined.
+* ``top_k``          — the one ranked top-k tail both use, and the cosine
+  operators in similarity.py: ties broken by neighbor id (SURVEY.md O1).
 
 Correctness: any point outside the candidate cells has a provable minimum
 distance above the k-th-neighbor upper bound (see _kth_dist_upper_bound_m /
@@ -20,13 +22,17 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import cells as C
 from ..functions import geometry as G
 from ..session import local_frame
+
+# knn_rings' cell resolution: its count probe brings at most 4^7 = 16,384
+# occupied cells to the driver.
+CELL_RES = 7
 
 
 def _haversine_col(lon1, lat1, lon2, lat2):
@@ -64,21 +70,31 @@ def knn_bruteforce(
         F.col(point_id).alias("neighbor_id"),
         _haversine_col(F.col("lon"), F.col("lat"), F.col("_qlon"), F.col("_qlat")).alias("dist_m"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col("neighbor_id").asc())
+    return top_k(joined, query_id, F.col("dist_m").asc(), k)
+
+
+def top_k(cands: DataFrame, query_id: str, order: Column, k: int) -> DataFrame:
+    """Each query's k best candidates: ``row_number`` per ``query_id`` over
+    the caller's score ``order`` (a sort Column), ties broken by
+    ``neighbor_id`` ascending, so ranks are deterministic under any
+    partitioning (SURVEY.md O1). Output: (query_id, neighbor_id, rank, then
+    the candidates' other columns)."""
+    w = Window.partitionBy(query_id).orderBy(order, F.col("neighbor_id").asc())
+    rest = [c for c in cands.columns if c not in (query_id, "neighbor_id")]
     return (
-        joined.withColumn("rank", F.row_number().over(w))
+        cands.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "rank", "dist_m")
+        .select(query_id, "neighbor_id", "rank", *rest)
     )
 
 
-def _kth_dist_upper_bound_m(r_k: np.ndarray, qlat: np.ndarray, res: int) -> np.ndarray:
+def _kth_dist_upper_bound_m(r_k: np.ndarray, qlat: np.ndarray) -> np.ndarray:
     """Upper bound on the k-th neighbor distance when the Chebyshev disk of
     grid radius r_k around each query's cell holds >= k points: any point in
     that disk is reachable by a meridian leg (<= (r_k+1) cell heights) plus a
     parallel leg at the band latitude with the largest cosine."""
-    cell_h = np.radians(180.0 / (1 << res))
-    cell_w = np.radians(360.0 / (1 << res))
+    cell_h = np.radians(180.0 / (1 << CELL_RES))
+    cell_w = np.radians(360.0 / (1 << CELL_RES))
     dlat = (r_k + 1) * cell_h
     dlon = np.minimum((r_k + 1) * cell_w, np.pi)
     qlat_r = np.radians(qlat)
@@ -113,14 +129,8 @@ def _cell_min_dist_m(
     return np.maximum(d_lat, d_lon)
 
 
-COARSE_PROBE_RES = 8  # 4^8 = 65,536 cells: the coarse-probe collect bound
-# Bound on the cells a two-level probe's fine collect may bring to the driver.
-MAX_FINE_CELLS = 4_000_000
-
-
 def _query_keep_masks(
-    cells: np.ndarray, counts: np.ndarray, qlon: np.ndarray, qlat: np.ndarray,
-    k: int, res: int,
+    cells: np.ndarray, counts: np.ndarray, qlon: np.ndarray, qlat: np.ndarray, k: int
 ) -> list[np.ndarray]:
     """Per-query candidate-cell masks over (occupied cell, count) arrays:
     the smallest Chebyshev disk holding >= k points gives a PROVABLE upper
@@ -128,10 +138,10 @@ def _query_keep_masks(
     those whose minimum possible distance (_cell_min_dist_m) is <= U — any
     point outside them is provably farther than the k-th neighbor. Fewer
     than k points in total -> keep everything."""
-    n_grid = 1 << res
+    n_grid = 1 << CELL_RES
     cx, cy = C.cell_to_xy(cells)
     lon0, lat0, lon1, lat1 = C.cell_bounds(cells)
-    qx, qy = C.latlon_to_xy(qlon, qlat, res)
+    qx, qy = C.latlon_to_xy(qlon, qlat, CELL_RES)
     masks = []
     for i in range(len(qlon)):
         dx = np.abs(cx - qx[i])
@@ -143,7 +153,7 @@ def _query_keep_masks(
             masks.append(np.ones(len(cells), dtype=bool))
         else:
             u = _kth_dist_upper_bound_m(
-                np.asarray([cheb[order[pos]]], dtype=np.float64), qlat[i : i + 1], res
+                np.asarray([cheb[order[pos]]], dtype=np.float64), qlat[i : i + 1]
             )[0]
             masks.append(
                 _cell_min_dist_m(float(qlon[i]), float(qlat[i]), lon0, lat0, lon1, lat1)
@@ -157,38 +167,24 @@ def knn_rings(
     points: DataFrame,
     queries_pdf: pd.DataFrame,
     k: int,
-    res: int = 7,
     point_id: str = "image_id",
     query_id: str = "query_id",
 ) -> DataFrame:
-    """Exact kNN via cell-count probes + one bounded candidate join — the
+    """Exact kNN via a cell-count probe + one bounded candidate join — the
     scale path of SURVEY.md J11 (the r1 design ran one job per doubling
     ring round plus an unbounded cross-join fallback).
 
-      job 1 (probe): per-cell point counts at ``res`` — map-side partial
-        agg; only OCCUPIED cells come back.
+      job 1 (probe): per-cell point counts at ``CELL_RES`` — map-side
+        partial agg; only OCCUPIED cells come back.
       driver: per-query provable candidate masks (_query_keep_masks).
-      job 2: broadcast equi-join on cell + exact haversine + window top-k.
-
-    For res > COARSE_PROBE_RES the probe is TWO-LEVEL (VERDICT r3 'wrong
-    #3': the single-level collect is bounded by 4^res): a coarse probe at
-    res 8 (<= 65,536 rows) first computes per-query coarse candidate
-    masks; the fine probe then aggregates ONLY cells whose res-8 parent is
-    in the union of kept coarse cells (cells.cell_parent_sql + IN-list —
-    the fact table still never shuffles), with the fine collect bounded a
-    priori by sum(min(4^(res-8), n_coarse)) over kept coarse cells and
-    guarded by ``MAX_FINE_CELLS``. Correctness: a fine cell outside every
-    kept coarse cell has min-dist > its query's coarse U >= the k-th
-    distance, so its points are provably excluded; the fine masks then
-    tighten U on the restricted cell set.
+      job 2: broadcast equi-join on cell + exact haversine + ``top_k``.
 
     Worst case (query at a pole, or fewer than k points in total) degrades
     to an equi-join against ALL occupied cells — one full scan, never a
     cartesian product.
 
     queries_pdf: pandas DataFrame (query_id, lon, lat), small by
-    construction. Output: (query_id, neighbor_id, rank, dist_m), rank ties
-    broken by neighbor id (SURVEY.md O1 determinism).
+    construction. Output: (query_id, neighbor_id, rank, dist_m).
     """
     nid_type = points.schema[point_id].dataType.simpleString()
     out_schema = f"{query_id} long, neighbor_id {nid_type}, rank int, dist_m double"
@@ -198,40 +194,14 @@ def knn_rings(
     qlon = queries_pdf["lon"].to_numpy(dtype=np.float64)
     qlat = queries_pdf["lat"].to_numpy(dtype=np.float64)
 
-    pts = points.withColumn("_cell", C.cell_expr(F.col("lon"), F.col("lat"), res))
-    fine = pts
-    if res > COARSE_PROBE_RES:
-        coarse = pts.withColumn(
-            "_pcell", F.expr(C.cell_parent_sql("_cell", str(res), COARSE_PROBE_RES))
-        )
-        coarse_pdf = coarse.groupBy("_pcell").agg(F.count(F.lit(1)).alias("n")).toPandas()
-        ccells = coarse_pdf["_pcell"].to_numpy(dtype=np.int64)
-        ccounts = coarse_pdf["n"].to_numpy(dtype=np.int64)
-        if len(ccells) == 0:
-            return local_frame(spark, [], out_schema)
-        cmasks = _query_keep_masks(ccells, ccounts, qlon, qlat, k, COARSE_PROBE_RES)
-        union = np.zeros(len(ccells), dtype=bool)
-        for m in cmasks:
-            union |= m
-        bound = int(
-            np.minimum(ccounts[union], 1 << (2 * (res - COARSE_PROBE_RES))).sum()
-        )
-        if bound > MAX_FINE_CELLS:
-            raise ValueError(
-                f"fine probe could collect up to {bound} cells at res {res} "
-                f"(> MAX_FINE_CELLS={MAX_FINE_CELLS}); lower res"
-            )
-        # one F.expr for the whole IN-list: Column.isin costs one py4j round
-        # trip per literal (up to 65,536 here)
-        kept_coarse = ",".join(str(int(c)) for c in ccells[union])
-        fine = coarse.where(F.expr(f"_pcell IN ({kept_coarse})"))
-    counts_pdf = fine.groupBy("_cell").agg(F.count(F.lit(1)).alias("n")).toPandas()
+    pts, _ = C.with_cell_columns(points, "lon", "lat", [CELL_RES], ["_cell"])
+    counts_pdf = pts.groupBy("_cell").agg(F.count(F.lit(1)).alias("n")).toPandas()
     cells = counts_pdf["_cell"].to_numpy(dtype=np.int64)
     counts = counts_pdf["n"].to_numpy(dtype=np.int64)
     if len(cells) == 0:
         return local_frame(spark, [], out_schema)
 
-    masks = _query_keep_masks(cells, counts, qlon, qlat, k, res)
+    masks = _query_keep_masks(cells, counts, qlon, qlat, k)
     cand_frames: list[pd.DataFrame] = []
     for i in range(len(qids)):
         cand_frames.append(
@@ -252,9 +222,4 @@ def knn_rings(
             "dist_m"
         ),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col("neighbor_id").asc())
-    return (
-        hits.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "rank", "dist_m")
-    )
+    return top_k(hits, query_id, F.col("dist_m").asc(), k)

@@ -20,9 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from .dedup import _banded_hamming_pairs
+from .knn import top_k
 
 # Seed of the random hyperplanes and of ivf_topk's random codebook: seeded
 # so signatures are reproducible across runs.
@@ -66,12 +66,7 @@ def cosine_topk_bruteforce(
             / (_norm(F.col(vec_col)) * _norm(F.col("_qvec")))
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "rank", "cosine")
-    )
+    return top_k(cand, query_id, F.col("cosine").desc(), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = SEED) -> np.ndarray:
@@ -198,12 +193,7 @@ def ivf_topk(
             / (_norm(F.col(vec_col)) * _norm(F.col("_qvec")))
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "rank", "cosine")
-    )
+    return top_k(cand, query_id, F.col("cosine").desc(), k)
 
 
 def embedding_near_dups(

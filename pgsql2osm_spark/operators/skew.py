@@ -50,8 +50,8 @@ def split_hot_cells(
     """
     counts = measure_cell_counts(df, cell_col)
     hot = counts.where(F.col("count") > hot_threshold).select(cell_col)
-    fine = C.cell_expr(F.col(lon), F.col(lat), res + 1)
-    hot_marked = df.join(F.broadcast(hot), cell_col, "left_semi").withColumn("cell_split", fine)
+    hot_marked = df.join(F.broadcast(hot), cell_col, "left_semi")
+    hot_marked, _ = C.with_cell_columns(hot_marked, lon, lat, [res + 1], ["cell_split"])
     cold = df.join(F.broadcast(hot), cell_col, "left_anti").withColumn(
         "cell_split", F.col(cell_col)
     )

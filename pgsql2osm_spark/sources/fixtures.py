@@ -124,18 +124,18 @@ def gen_points_slice(lo: int, hi: int, seed: int = SEED) -> tuple[np.ndarray, np
     (seed, i) so any slice can be generated independently on any executor
     (unlike gen_points, which is sequence-order dependent)."""
     i = np.arange(lo, hi, dtype=np.uint64)
-    h1 = _splitmix64(i + np.uint64(seed))
-    h2 = _splitmix64(h1)
+    h1 = splitmix64(i + np.uint64(seed))
+    h2 = splitmix64(h1)
     u1 = (h1 >> np.uint64(11)).astype(np.float64) / float(1 << 53)
     u2 = (h2 >> np.uint64(11)).astype(np.float64) / float(1 << 53)
     lon = u1 * 360.0 - 180.0
     lat = u2 * 132.0 - 60.0
     # 20% metro skew, chosen by hash bucket
-    h3_ = _splitmix64(h2)
+    h3_ = splitmix64(h2)
     bucket = (h3_ % np.uint64(5)) == 0
     which = (h3_ >> np.uint64(3)) % np.uint64(len(METROS))
     r = np.sqrt((h3_ >> np.uint64(11)).astype(np.float64) / float(1 << 53))
-    theta = ((_splitmix64(h3_) >> np.uint64(11)).astype(np.float64) / float(1 << 53)) * 2 * np.pi
+    theta = ((splitmix64(h3_) >> np.uint64(11)).astype(np.float64) / float(1 << 53)) * 2 * np.pi
     for m, (mlon, mlat, mrad) in enumerate(METROS):
         sel = bucket & (which == m)
         lon[sel] = mlon + r[sel] * mrad * np.cos(theta[sel])
@@ -143,11 +143,14 @@ def gen_points_slice(lo: int, hi: int, seed: int = SEED) -> tuple[np.ndarray, np
     return lon, lat
 
 
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    return x ^ (x >> np.uint64(31))
+def splitmix64(x: np.ndarray) -> np.ndarray:
+    """The splitmix64 finalizer over uint64 arrays (wrapping arithmetic):
+    the point generator's and dedup's MinHash hash family."""
+    with np.errstate(over="ignore"):
+        x = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
+        x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(0xFFFFFFFFFFFFFFFF)
+        x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(0xFFFFFFFFFFFFFFFF)
+        return x ^ (x >> np.uint64(31))
 
 
 # ---------------------------------------------------------------------------

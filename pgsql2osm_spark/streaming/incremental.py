@@ -7,8 +7,8 @@ a stream of geotagged records -> cell/tile keys (same JVM bit math as the
 batch path) -> watermarked sliding/tumbling aggregation -> upserted tile
 counts. Late data beyond the watermark is dropped deterministically.
 
-All transformations are the SAME Column expressions the batch operators
-use (cells.cell_expr / geometry.tile_expr), so batch and streaming tiles
+All transformations are the SAME expressions the batch operators use
+(cells.with_cell_columns / geometry.tile_expr), so batch and streaming tiles
 agree by construction — tested in tests/test_streaming.py by replaying a
 bounded stream with trigger availableNow and diffing against the batch agg.
 """
@@ -43,8 +43,8 @@ def tile_count_stream(stream: DataFrame, z: int = 12) -> DataFrame:
         .withColumn("x", x)
         .withColumn("y", y)
         .withColumn("z", F.lit(z).cast("int"))
-        .withColumn("h3", C.cell_expr(F.col("lon"), F.col("lat"), CELL_RES))
     )
+    keyed, _ = C.with_cell_columns(keyed, "lon", "lat", [CELL_RES], ["h3"])
     return keyed.groupBy(
         F.window(F.col(EVENT_TIME), WINDOW), "z", "x", "y", "h3"
     ).agg(F.count(F.lit(1)).alias("n"))

@@ -67,7 +67,7 @@ def test_encode_always_valid(lon, lat, res):
 
 
 def test_sql_and_expr_parity_with_numpy(spark):
-    """Same bits three ways: numpy kernel, Spark JVM expression, DuckDB SQL."""
+    """Same bits three ways: numpy kernel, Spark's with_cell_columns, DuckDB SQL."""
     n = 3000
     lon = rng.uniform(-180, 180, n)
     lat = rng.uniform(-90, 90, n)
@@ -78,17 +78,9 @@ def test_sql_and_expr_parity_with_numpy(spark):
             f"SELECT {C.cell_sql('lon', 'lat', res)} AS c FROM pdf"
         ).df()["c"].to_numpy()
         assert (got_sql == want).all(), f"duckdb mismatch at res {res}"
-        from pyspark.sql import functions as F
-
-        got_spark = np.array(
-            [
-                r["c"]
-                for r in spark.createDataFrame(pdf)
-                .select(C.cell_expr(F.col("lon"), F.col("lat"), res).alias("c"))
-                .collect()
-            ]
-        )
-        assert (got_spark == want).all(), f"spark expr mismatch at res {res}"
+        df, _ = C.with_cell_columns(spark.createDataFrame(pdf), "lon", "lat", [res], ["c"])
+        got_spark = np.array([r["c"] for r in df.select("c").collect()])
+        assert (got_spark == want).all(), f"spark mismatch at res {res}"
 
 
 def test_s2_face_coverage():

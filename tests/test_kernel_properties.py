@@ -27,7 +27,7 @@ def test_cell_bounds_contain_their_point(lon, lat, res):
 @given(lons, lats, res_s)
 def test_cell_parent_contains_child(lon, lat, res):
     cell = C.cell_encode(np.asarray([lon]), np.asarray([lat]), res)
-    parent = C.cell_parent(cell)
+    parent = C.cell_parent(cell, res - 1)
     pl0, pb0, pl1, pb1 = C.cell_bounds(parent)
     l0, b0, l1, b1 = C.cell_bounds(cell)
     assert pl0[0] <= l0[0] and pb0[0] <= b0[0]

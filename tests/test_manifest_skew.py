@@ -14,7 +14,7 @@ def _pts(spark, n):
     df = spark.createDataFrame(
         pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
     )
-    return df.withColumn("cell", C.cell_expr(F.col("lon"), F.col("lat"), 4))
+    return C.with_cell_columns(df, "lon", "lat", [4], ["cell"])[0]
 
 
 def test_manifest_write_and_resume(spark, tmp_path):

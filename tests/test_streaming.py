@@ -30,12 +30,10 @@ def test_streaming_tiles_match_batch(spark, tmp_path):
 
     batch = spark.read.parquet(src)
     x, y = G.tile_expr(F.col("lon"), F.col("lat"), 10)
+    keyed = batch.withColumn("x", x).withColumn("y", y).withColumn("z", F.lit(10).cast("int"))
+    keyed, _ = C.with_cell_columns(keyed, "lon", "lat", [7], ["h3"])
     exp = (
-        batch.withColumn("x", x)
-        .withColumn("y", y)
-        .withColumn("z", F.lit(10).cast("int"))
-        .withColumn("h3", C.cell_expr(F.col("lon"), F.col("lat"), 7))
-        .groupBy(F.window("ts", "5 minutes"), "z", "x", "y", "h3")
+        keyed.groupBy(F.window("ts", "5 minutes"), "z", "x", "y", "h3")
         .agg(F.count(F.lit(1)).alias("n"))
         .toPandas()
     )
